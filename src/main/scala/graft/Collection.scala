@@ -2389,14 +2389,14 @@ final class Collection private (
         })
     }
 
-  /** The sealed source pruned to segments whose pk range can hold rows
-    * of `d` — None when pruning removes nothing (the caller keeps the
-    * possibly memory-pinned full union). Every surviving pk's row
+  /** The sealed segments a read must scan: those whose pk range can hold
+    * rows of `d` — None when pruning removes nothing (the caller keeps
+    * the possibly memory-pinned full union). Every surviving pk's row
     * versions, tombstone keys, and patch matches live inside retained
     * segments by the min/max containment argument in [[PkPruning]].
     */
-  private def prunedSealed(d: Option[graft.operators.PkPruning.Domain],
-      tsBound: Option[Long]): Option[DataFrame] = {
+  private def keptSealed(d: Option[graft.operators.PkPruning.Domain],
+      tsBound: Option[Long]): Option[Seq[String]] = {
     val segs = sealedSegments
     if (segs.size <= 1 || sealedDf.isEmpty ||
         (d.isEmpty && tsBound.isEmpty)) None
@@ -2410,32 +2410,33 @@ final class Collection private (
           segmentTsFrom(p).exists(_ <= bound))
         pkOk && tsOk
       }
-      if (keep.size == segs.size) None
-      else {
-        val fullDf = sealedDf.get
-        val base =
-          if (keep.isEmpty) fullDf.filter(lit(false))
-          else {
-            val unioned = keep
-              .map(p => GraftSession.normalizeTs(
-                readLayout(p), Set(schema.tsField)))
-              .reduce(_.unionByName(_, allowMissingColumns = true))
-            // align to the full sealed schema — a pruned subset may
-            // miss columns later segments introduced
-            val cols = fullDf.schema.fields.map { f =>
-              if (unioned.columns.contains(f.name)) col(f.name)
-              else lit(null).cast(f.dataType).as(f.name)
-            }
-            unioned.select(cols.toIndexedSeq: _*)
-          }
-        // a truncate is a ts-horizon cut applied to sealedDf, not to
-        // the files — re-apply it on the rebuilt scan
-        val horizon = truncateHorizon
-        Some(if (horizon > 0L) base.filter(col(schema.tsField) > horizon)
-             else base)
-      }
+      if (keep.size == segs.size) None else Some(keep)
     }
   }
+
+  /** The sealed source restricted to the [[keptSealed]] segments. */
+  private def prunedSealed(keep: Seq[String]): Option[DataFrame] =
+    sealedDf.map { fullDf =>
+      val base =
+        if (keep.isEmpty) fullDf.filter(lit(false))
+        else {
+          val unioned = keep
+            .map(p => GraftSession.normalizeTs(
+              readLayout(p), Set(schema.tsField)))
+            .reduce(_.unionByName(_, allowMissingColumns = true))
+          // align to the full sealed schema — a pruned subset may
+          // miss columns later segments introduced
+          val cols = fullDf.schema.fields.map { f =>
+            if (unioned.columns.contains(f.name)) col(f.name)
+            else lit(null).cast(f.dataType).as(f.name)
+          }
+          unioned.select(cols.toIndexedSeq: _*)
+        }
+      // a truncate is a ts-horizon cut applied to sealedDf, not to
+      // the files — re-apply it on the rebuilt scan
+      val horizon = truncateHorizon
+      if (horizon > 0L) base.filter(col(schema.tsField) > horizon) else base
+    }
 
   /** Which sealed segment paths a filter would dispatch to — the
     * pruning decision made observable for tests/introspection (the
@@ -3426,69 +3427,86 @@ final class Collection private (
     // intervened (epoch check), so a torn in-flight build can never
     // poison the cache for later readers.
     val epoch0 = viewCacheEpoch.get()
-    // a NONDETERMINISTIC ttl/preFilter (rand()-based sampling, uuid())
-    // must never be memoized: reusing its plan would freeze one draw's
-    // results as "the" view. The engine only passes deterministic
-    // scopes here (partition equality, ttl arithmetic), so the guard is
-    // belt-and-suspenders; it matches on the rendered expression (the
-    // Spark 4 Column API does not expose the expression tree publicly).
+    // a NONDETERMINISTIC ttl/preFilter (rand()-based sampling, uuid(),
+    // a current_timestamp() cut-off) must never be memoized: reusing its
+    // plan would freeze one draw's results as "the" view. The engine
+    // only passes deterministic scopes here (partition equality, ttl
+    // arithmetic), so the guard is belt-and-suspenders; it matches on
+    // the rendered expression (the Spark 4 Column API does not expose
+    // the expression tree publicly).
     val cacheable = !(ttl.toSeq ++ preFilter.toSeq).exists { c =>
       val s = c.toString
       Collection.nondetFnPattern.matcher(s).find()
     }
+    val writeTs = lastWriteTs
+    val readTs = Mvcc.resolveReadTs(level, writeTs, writeTs, staleness, sessionTs)
+    val tsBound = if (readTs < writeTs) Some(readTs) else None
     if (!cacheable)
-      return buildReadViewUnscoped(level, staleness, sessionTs, ttl,
-        preFilter, ignoreGrowing, pkDomain)
-    val key = Seq(level.id, staleness, sessionTs, lastWriteTs,
-      ttl.map(_.toString).getOrElse("-"),
-      preFilter.map(_.toString).getOrElse("-"),
-      ignoreGrowing, pkDomain.map(_.toString).getOrElse("-")).mkString("|")
-    val cached = stateLock.synchronized {
-      viewCache.get(key).map { case (df, hits) =>
+      return buildReadViewUnscoped(readTs, ttl, preFilter, ignoreGrowing,
+        keptSealed(pkDomain, tsBound))
+    def keyOf(sealedSlot: String): String =
+      Seq(level.id, staleness, sessionTs, writeTs,
+        ttl.map(_.toString).getOrElse("-"),
+        preFilter.map(_.toString).getOrElse("-"),
+        ignoreGrowing, sealedSlot).mkString("|")
+    // resident-view rule: a pinned unpruned view of the same scope serves
+    // a pk-anchored read — every caller applies its pk predicate on top,
+    // and (pruned view ∩ pk predicate) = (full view ∩ pk predicate)
+    val resident =
+      if (pkDomain.isEmpty) None
+      else stateLock.synchronized(viewHit(keyOf("-"), pinnedOnly = true))
+    resident.getOrElse {
+      val kept = keptSealed(pkDomain, tsBound)
+      val key = keyOf(kept.fold("-")(_.sorted.mkString("[", ",", "]")))
+      stateLock.synchronized(viewHit(key, pinnedOnly = false)).getOrElse {
+        val df = buildReadViewUnscoped(readTs, ttl, preFilter, ignoreGrowing,
+          kept)
+        stateLock.synchronized {
+          if (viewCacheEpoch.get() == epoch0 && !viewCache.contains(key)) {
+            viewCache.put(key, (df, 1))
+            while (viewCache.size > viewCacheCapacity) { // LRU eviction
+              val (k, (old, hits)) = viewCache.head
+              if (hits >= viewPinThreshold) old.unpersist()
+              viewCache.remove(k)
+              // capacity-eviction counter: a workload alternating more
+              // than viewCacheCapacity distinct views would thrash
+              // persist/unpersist invisibly — this makes it observable
+              viewEvictions += 1
+            }
+          }
+        }
+        df
+      }
+    }
+  }
+
+  /** A memo hit on `key` (only a pinned one when `pinnedOnly`): moves
+    * the entry to the LRU tail and pins it on its [[viewPinThreshold]]th
+    * read. Caller holds stateLock.
+    */
+  private def viewHit(key: String, pinnedOnly: Boolean): Option[DataFrame] =
+    viewCache.get(key).filter(!pinnedOnly || _._2 >= viewPinThreshold).map {
+      case (df, hits) =>
+        viewCache.remove(key)
         viewCache.put(key, (df, hits + 1))
         if (hits + 1 == viewPinThreshold) // battery pattern — pin it
           df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         df
-      }
     }
-    cached.getOrElse {
-      val df = buildReadViewUnscoped(level, staleness, sessionTs, ttl,
-        preFilter, ignoreGrowing, pkDomain)
-      stateLock.synchronized {
-        if (viewCacheEpoch.get() == epoch0 && !viewCache.contains(key)) {
-          viewCache.put(key, (df, 1))
-          while (viewCache.size > viewCacheCapacity) { // FIFO eviction
-            val (k, (old, hits)) = viewCache.head
-            if (hits >= viewPinThreshold) old.unpersist()
-            viewCache.remove(k)
-            // capacity-eviction counter: a workload alternating more
-            // than viewCacheCapacity distinct views would thrash
-            // persist/unpersist invisibly — this makes it observable
-            viewEvictions += 1
-          }
-        }
-      }
-      df
-    }
-  }
 
   private def buildReadViewUnscoped(
-      level: ConsistencyLevel.Value,
-      staleness: Long,
-      sessionTs: Long,
+      readTs: Long,
       ttl: Option[Column],
       preFilter: Option[Column],
       ignoreGrowing: Boolean,
-      pkDomain: Option[graft.operators.PkPruning.Domain]): DataFrame = {
-    val readTs = Mvcc.resolveReadTs(level, lastWriteTs, lastWriteTs, staleness, sessionTs)
+      keptSegments: Option[Seq[String]]): DataFrame = {
     // a pk-anchored filter prunes the sealed FILE list before any scan
     // (MEP 20260324), and a time-travel read additionally skips
     // segments sealed entirely after the read ts (MEP 20260602 ts
     // range); the growing tail always rides along — it has no file
     // stats and is small by the seal policy
-    val tsBound = if (readTs < lastWriteTs) Some(readTs) else None
     val sealedSrc: Option[DataFrame] =
-      prunedSealed(pkDomain, tsBound).orElse(sealedDf)
+      keptSegments.flatMap(prunedSealed).orElse(sealedDf)
     // ignore_growing (reference search/query param): serve SEALED
     // segments only — the un-flushed tail is skipped entirely, trading
     // freshness for not touching the in-memory segment
@@ -3606,14 +3624,23 @@ final class Collection private (
   // lifetime: every mutation (and load/release scope change) clears it,
   // so no result ever outlives the state it was computed from. A view
   // read ONCE is never persisted (zero overhead on single-read paths).
+  //
+  // A pk-pruned view is keyed by the sealed segments it reads, not by
+  // its pk domain: domains that keep the same segments share one plan,
+  // and one that prunes nothing IS the unpruned view ("-"). Once the
+  // unpruned view of a scope is pinned it is resident, and every
+  // pk-anchored read of that scope is served from it instead of
+  // re-collapsing a pruned parquet union — the reference's querynode
+  // likewise answers Get/Query from loaded segments, pruning only picks
+  // which of them to visit. Eviction is LRU (a hit moves its entry to
+  // the tail), so a hot resident view outlives a stream of one-shot
+  // scopes.
   private val viewCache =
     scala.collection.mutable.LinkedHashMap.empty[String, (DataFrame, Int)]
   private val viewCacheCapacity = 8
   // Nth read of the same view pins it (persist). 2 = the battery
-  // pattern pays one materialization and every later call scans memory;
-  // raise (or set huge to disable pinning) via env for A/B measurement.
-  private val viewPinThreshold =
-    sys.env.get("SPARK_GRAFT_VIEWPIN").flatMap(_.toIntOption).getOrElse(2)
+  // pattern pays one materialization and every later call scans memory.
+  private val viewPinThreshold = 2
   // lifetime count of capacity evictions (NOT invalidations) — the
   // thrash signal for a facade surface outgrowing viewCacheCapacity
   private var viewEvictions = 0L
@@ -3639,12 +3666,16 @@ final class Collection private (
         "|" + loadedPartitions.map(_.toSeq.sorted.mkString(",")).getOrElse("*")
       val key = (filterExpr, lastWriteTs, scope)
       filterCache.get(key) match {
-        case Some(df) => filterHits += 1; df
+        case Some(df) =>
+          filterHits += 1
+          filterCache.remove(key) // LRU: a hit moves to the tail
+          filterCache.put(key, df)
+          df
         case None =>
           filterMisses += 1
           val df = readView().filter(compiled(filterExpr)).persist()
           filterCache.put(key, df)
-          while (filterCache.size > filterCacheCapacity) { // FIFO eviction
+          while (filterCache.size > filterCacheCapacity) { // LRU eviction
             val (k, old) = filterCache.head
             old.unpersist()
             filterCache.remove(k)
@@ -5164,10 +5195,12 @@ object Collection {
   private[graft] val restoreReservations =
     new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]()
 
-  // nondeterministic scalar functions as they render in Column.toString
-  // — the view-memo's refuse-to-cache guard (readViewUnscoped)
+  // nondeterministic scalar functions as they render in Column.toString,
+  // the clock functions included (each evaluation sees a new instant) —
+  // the view-memo's refuse-to-cache guard (readViewUnscoped)
   private[graft] val nondetFnPattern = java.util.regex.Pattern.compile(
-    "\\b(rand|randn|random|uuid|shuffle|monotonically_increasing_id)\\(")
+    "\\b(rand|randn|random|uuid|shuffle|monotonically_increasing_id|" +
+      "current_timestamp|current_date|now|unix_timestamp|localtimestamp)\\(")
 
   // fixed schemas of engine-written metadata files: supplying them at
   // read time skips the parquet footer-inference job (guide: remove

@@ -2019,7 +2019,7 @@ class CollectionSpec extends SparkSpec {
     // 10 distinct partition scopes stream through the capacity-8 memo
     (1 to 10).foreach(i => c.partitionStatistics(s"vp$i"))
     assert(c.viewCacheEvictions >= 2L,
-      s"expected FIFO evictions past capacity, got ${c.viewCacheEvictions}")
+      s"expected evictions past capacity, got ${c.viewCacheEvictions}")
     // correctness under eviction churn: every scope still counts right
     (1 to 10).foreach(i =>
       assert(c.partitionStatistics(s"vp$i")("row_count") == "1"))

@@ -153,7 +153,7 @@ class EdgeCasesSpec extends SparkSpec {
   test("filter cache: eviction past capacity unpersists without breaking reads") {
     val c = Collection.create(spark, CollectionSchema(pkField = "pk"))
     c.insert((0L until 40L).map(i => (i, i % 20)).toDF("pk", "grp"))
-    // 20 distinct filters overflow the 16-entry FIFO; all reads stay right
+    // 20 distinct filters overflow the 16-entry cache; all reads stay right
     for (g <- 0 until 20)
       assert(c.queryCached(s"grp == $g", Seq("pk")).count() == 2)
     // early entries were evicted: repeating filter 0 is a miss again
