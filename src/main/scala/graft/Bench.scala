@@ -31,27 +31,7 @@ object Bench {
       java.lang.management.ManagementFactory.getOperatingSystemMXBean
         .getSystemLoadAverage
     val loadStart = loadAvg
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE right-sizes cached-plan output partitioning (see
-      // GraftSession.local) — pinned read views otherwise keep the raw
-      // shuffle partition count and every cache scan pays the fan-out
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // hold the suite's full codegen working set (see GraftSession.local)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // Kryo for broadcasts/task results (see GraftSession.local)
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.kryoserializer.buffer.max", "256m")
-      // small-file splits (see GraftSession.local) — local-mode only
-      .config("spark.sql.files.maxPartitionBytes", (1024 * 1024).toString)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt)
 
     // cumulative JVM GC milliseconds (all collectors): in local mode
     // every executor thread shares this JVM, so the delta around a query
@@ -82,9 +62,8 @@ object Bench {
     // then amortizes across every later identical plan. Without the
     // warmup, round 1's cold sample lands in the measured set and reads
     // as spread (the r6 q_dedup_survivors [2.5, 6.1] s p25-p75 was
-    // exactly cold-vs-warm, tools/SurvivorProfile); with it, all
-    // measured samples observe the steady state a resident engine runs
-    // in. The round is per-suite, not per-query, so cross-query cache
+    // exactly cold-vs-warm); with it, all measured samples observe the
+    // steady state a resident engine runs in. The round is per-suite, not per-query, so cross-query cache
     // pressure (all ~150 queries' blocks resident at once) is part of
     // what the measured rounds see — same as before.
     selected.foreach { case (_, fn) => run(fn) }

@@ -254,7 +254,7 @@ final class Collection private (
     * read null; newer inserts take the same threshold externalization.
     */
   def addCollectionTextField(field: String, spec: TextFieldSpec): Unit =
-    stateLock.synchronized {
+    mutate {
       requirePriv("AlterCollection")
       require(field != schema.pkField && field != schema.tsField &&
         field != Collection.PartitionCol, s"cannot redefine system field '$field'")
@@ -267,7 +267,6 @@ final class Collection private (
       droppedFields -= field // re-add: the ts mask below prevents resurrection
       dynamicTextFields += field -> ((spec, ts))
       lastWriteTs = ts
-      invalidateFilterCache()
     }
 
   // ---- TEXT-LOB blob store (reference: storagev2 LobFileInfo +
@@ -429,7 +428,7 @@ final class Collection private (
     * switch that unloads `$meta`. A reload replaces the previous list.
     */
   def load(loadFields: Seq[String] = Nil,
-      skipLoadDynamicField: Boolean = false): Unit = stateLock.synchronized {
+      skipLoadDynamicField: Boolean = false): Unit = mutate {
     requirePriv("Load")
     if (loadFields.nonEmpty) {
       val fs = loadFields.toSet
@@ -457,7 +456,6 @@ final class Collection private (
       loadedFields = Some(fs)
     } else loadedFields = None
     skipDynamic = skipLoadDynamicField
-    invalidateFilterCache() // the load scope is part of view visibility
     sealedDf = sealedDf.map(
       _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // the sealed blob store pins alongside the data (reference: load
@@ -487,9 +485,8 @@ final class Collection private (
     loadedFlag = true
   }
 
-  def release(): Unit = stateLock.synchronized {
+  def release(): Unit = mutate {
     requirePriv("Release")
-    invalidateFilterCache() // load scope change (see load())
     sealedDf.foreach(_.unpersist())
     lobSealed.foreach(_.unpersist()) // no-op when it was never pinned
     partialPin.foreach(_.unpersist())
@@ -534,7 +531,7 @@ final class Collection private (
     * absorbs the call as a no-op, matching the reference's
     * load-partition-after-load-collection tests.
     */
-  def loadPartitions(names: Seq[String]): Unit = stateLock.synchronized {
+  def loadPartitions(names: Seq[String]): Unit = mutate {
     requirePriv("Load")
     require(names.nonEmpty, "partition name list must be non-empty")
     val unknown = names.filterNot(partitionSet.contains)
@@ -544,7 +541,6 @@ final class Collection private (
       loadedPartitions = Some(set)
       repinPartial(set)
       loadedFlag = true
-      invalidateFilterCache() // load scope change (see load())
     }
   }
 
@@ -554,7 +550,7 @@ final class Collection private (
     * partial load of the remaining partitions; releasing the last
     * loaded partition leaves the collection NotLoad.
     */
-  def releasePartitions(names: Seq[String]): Unit = stateLock.synchronized {
+  def releasePartitions(names: Seq[String]): Unit = mutate {
     requirePriv("Release")
     require(names.nonEmpty, "partition name list must be non-empty")
     val unknown = names.filterNot(partitionSet.contains)
@@ -572,7 +568,6 @@ final class Collection private (
         loadedPartitions = Some(remaining)
         repinPartial(remaining)
       }
-      invalidateFilterCache() // load scope change (see load())
     }
   }
 
@@ -664,7 +659,7 @@ final class Collection private (
     * the partition's segments; MVCC tombstones are this engine's
     * release). The default partition cannot be dropped.
     */
-  def dropPartition(name: String): Long = stateLock.synchronized {
+  def dropPartition(name: String): Long = mutate {
     requirePriv("DropPartition")
     require(name != Collection.DefaultPartition, "cannot drop the default partition")
     require(partitionSet.contains(name), s"no such partition '$name'")
@@ -677,7 +672,6 @@ final class Collection private (
     logChange("delete", victims)
     partitionSet -= name
     lastWriteTs = ts
-    invalidateFilterCache()
     ts
   }
 
@@ -917,7 +911,7 @@ final class Collection private (
     *   second pk column would break every later read.
     */
   private[graft] def insertImpl(rows: DataFrame,
-      preservePks: Boolean = false): Long = stateLock.synchronized {
+      preservePks: Boolean = false): Long = mutate {
     val ts = nextTs()
     // untagged rows land in the default partition; insertInto pre-tags;
     // a declared partition key routes each row to the hash bucket of
@@ -1016,7 +1010,6 @@ final class Collection private (
     // searchIndexed probe-prunes the tail instead of brute-forcing it
     assignInterim(withPk)
     lastWriteTs = ts
-    invalidateFilterCache()
     // seal-policy check (capacity / lifetime): rows are counted only
     // while a policy is installed, so the extra action is opt-in
     sealPolicy.foreach { p =>
@@ -1039,7 +1032,7 @@ final class Collection private (
     */
   def delete(filterExpr: String,
       params: Map[String, Any] = Map.empty,
-      namespace: Option[String] = None): Long = stateLock.synchronized {
+      namespace: Option[String] = None): Long = mutate {
     requirePriv("Delete")
     // task_delete.go:138 — deletes are namespace-checked and -scoped too
     val (delParts, delKeyNs) = namespaceScope(namespace, Nil)
@@ -1061,12 +1054,11 @@ final class Collection private (
     tombs = Some(tombs.map(_.unionByName(victims)).getOrElse(victims))
     logChange("delete", victims)
     lastWriteTs = ts
-    invalidateFilterCache()
     ts
   }
 
   def deletePks(pks: Seq[Any], namespace: Option[String] = None): Long =
-    stateLock.synchronized {
+    mutate {
       requirePriv("Delete")
       checkNamespace(namespace)
       val ts = nextTs()
@@ -1092,7 +1084,6 @@ final class Collection private (
       tombs = Some(tombs.map(_.unionByName(t)).getOrElse(t))
       logChange("delete", t)
       lastWriteTs = ts
-      invalidateFilterCache()
       ts
     }
 
@@ -1124,7 +1115,7 @@ final class Collection private (
     * The tombstones make the superseded version — possibly in a
     * DIFFERENT bucket — invisible under any partition scope.
     */
-  private def rekeyWrite(stamped: DataFrame): Long = stateLock.synchronized {
+  private def rekeyWrite(stamped: DataFrame): Long = mutate {
     require(stamped.columns.contains(schema.pkField),
       s"upsert rows need the pk column ${schema.pkField}")
     val delTs = nextTs()
@@ -1133,7 +1124,6 @@ final class Collection private (
     val ts = insertImpl(stamped) // throws ⇒ neither half landed
     tombs = Some(tombs.map(_.unionByName(t)).getOrElse(t))
     logChange("delete", t)
-    invalidateFilterCache()
     ts
   }
 
@@ -1256,15 +1246,11 @@ final class Collection private (
         else folded.write.parquet(foldPath)
         sealedDf = Some(readLayoutWritten(foldPath, folded.schema))
         sealedSegments = Vector(foldPath)
-        // the physical layout changed under an UNCHANGED lastWriteTs:
-        // cached view plans still read the superseded dirs, which a
-        // later retentionSweep may delete — drop them
-        invalidateFilterCache()
       }
       colPatches = deferred
     }
 
-  def compact(path: String): Unit = stateLock.synchronized {
+  def compact(path: String): Unit = mutate {
     requirePriv("Compaction")
     require(growing.isEmpty, "flush the growing tail before compacting")
     // root-lock the rewrite span (see flush): the sweep through another
@@ -1348,11 +1334,6 @@ final class Collection private (
         sealedDf = Some(readLayoutWritten(s"$runPath/data", merged.schema))
         sealedSegments = Vector(s"$runPath/data") // the single live segment
         tombs = None // all folded (compactTs = lastWriteTs leaves no residual)
-        // layout supersession under an unchanged lastWriteTs (see
-        // foldPatchesIntoLayout): cached plans over the pre-compact
-        // dirs must not survive — a post-sweep re-run would read
-        // deleted files
-        invalidateFilterCache()
     }
   }
 
@@ -1376,7 +1357,7 @@ final class Collection private (
     *
     * Returns the number of orphaned payloads collected.
     */
-  def lobGc(path: String): Long = stateLock.synchronized {
+  def lobGc(path: String): Long = mutate {
     requirePriv("Compaction")
     // same root-lock span as retentionSweep: a returned gcPause
     // guarantees no in-flight reclamation on this root
@@ -1438,10 +1419,6 @@ final class Collection private (
           if (lobResident) lobSealed = lobSealed.map(
             _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
           lobGrowing = None // folded into the snapshot
-          // the LOB store moved to a fresh snap- dir under an unchanged
-          // lastWriteTs: cached view plans still join the superseded
-          // gen-/snap- dirs a later retentionSweep deletes — drop them
-          invalidateFilterCache()
           total - keptCount
         }
     }
@@ -1470,7 +1447,7 @@ final class Collection private (
     * snapshot data files). Returns the snapshot read ts.
     */
   def createSnapshot(path: String, id: String,
-      description: String = ""): Long = stateLock.synchronized {
+      description: String = ""): Long = mutate {
     requirePriv("CreateSnapshot")
     Collection.requireValidSnapshotName(id)
     require(!snapshotReg.contains(id), s"snapshot '$id' already exists")
@@ -2092,7 +2069,7 @@ final class Collection private (
     * below the horizon stop being visible and later inserts are
     * unaffected). Built indexes over pre-truncate data are dropped.
     */
-  def truncate(): Long = stateLock.synchronized {
+  def truncate(): Long = mutate {
     val ts = nextTs()
     // a full-range tombstone per existing pk would be O(rows); instead
     // cut the raw view at the horizon, which visible() honors because
@@ -2110,7 +2087,6 @@ final class Collection private (
     changeLog = None
     cdcApplied = None
     lastWriteTs = ts
-    invalidateFilterCache()
     ts
   }
 
@@ -2646,7 +2622,7 @@ final class Collection private (
     * small segments' bytes; big segments never rewrite.
     */
   def forceMerge(path: String, targetSizeMb: Long,
-      maxSizeMb: Long = 1024L): Long = stateLock.synchronized {
+      maxSizeMb: Long = 1024L): Long = mutate {
     requirePriv("Compaction")
     require(targetSizeMb > 0, s"target_size must be positive, got $targetSizeMb")
     require(targetSizeMb >= maxSizeMb,
@@ -2691,9 +2667,6 @@ final class Collection private (
         case None => sealedDf = sealedDf.map(
           _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       }
-      // layout supersession under an unchanged lastWriteTs (see
-      // foldPatchesIntoLayout): drop cached plans over the pre-merge dirs
-      invalidateFilterCache()
     }
     val id = nextTs()
     compactionHistory +=
@@ -2805,7 +2778,7 @@ final class Collection private (
   // nanos for opened epoch-ns tables — the session's ts domain).
   @volatile private var collectionProperties: Map[String, String] = Map.empty
 
-  def alterCollection(props: Map[String, String]): Unit = stateLock.synchronized {
+  def alterCollection(props: Map[String, String]): Unit = mutate {
     requirePriv("AlterCollection")
     props.get("collection.ttl").foreach { v =>
       require(scala.util.Try(v.toLong).isSuccess,
@@ -2838,13 +2811,11 @@ final class Collection private (
           s"""invalid property key "$k", did you mean "${Collection.NamespaceModeKey}"?""")
     }
     collectionProperties ++= props
-    invalidateFilterCache() // a ttl property change alters visibility
   }
 
-  def dropCollectionProperties(keys: Seq[String]): Unit = stateLock.synchronized {
+  def dropCollectionProperties(keys: Seq[String]): Unit = mutate {
     requirePriv("AlterCollection")
     collectionProperties --= keys
-    invalidateFilterCache()
   }
 
   def describeCollectionProperties: Map[String, String] = {
@@ -3082,7 +3053,7 @@ final class Collection private (
     * partition tag, and the last vector field refuse to drop (the
     * proxy-side validations).
     */
-  def dropField(field: String): Long = stateLock.synchronized {
+  def dropField(field: String): Long = mutate {
     requirePriv("AlterCollection")
     require(field != schema.pkField, s"cannot drop the primary key field '$field'")
     require(field != schema.tsField, s"cannot drop the MVCC ts field '$field'")
@@ -3120,7 +3091,6 @@ final class Collection private (
     backfillFunctions = backfillFunctions.filterNot(_.outputField == field)
     functionsEverChanged = true
     lastWriteTs = ts
-    invalidateFilterCache()
     ts
   }
 
@@ -3130,7 +3100,7 @@ final class Collection private (
     * add-field default fill and the no-resurrection guarantee after
     * [[dropField]] of the same name.
     */
-  def addCollectionField(field: String, default: Any): Long = stateLock.synchronized {
+  def addCollectionField(field: String, default: Any): Long = mutate {
     requirePriv("AlterCollection")
     require(field != schema.pkField && field != schema.tsField &&
       field != Collection.PartitionCol, s"cannot redefine system field '$field'")
@@ -3138,7 +3108,6 @@ final class Collection private (
     droppedFields -= field
     maskedFields += field -> ((ts, default))
     lastWriteTs = ts
-    invalidateFilterCache()
     ts
   }
 
@@ -3209,7 +3178,7 @@ final class Collection private (
     */
   def addFunction(fn: graft.functions.IngestFunctions.FunctionSchema,
       backfill: Boolean = false): Unit =
-    stateLock.synchronized {
+    mutate {
       requirePriv("AlterCollection")
       require(!ingestFunctions.exists(_.outputField == fn.outputField),
         s"a function already produces '${fn.outputField}'")
@@ -3260,7 +3229,6 @@ final class Collection private (
       // carry two incompatible term vocabularies
       if (backfill) backfillFunctions :+= wired
       functionsEverChanged = true
-      invalidateFilterCache() // a backfill changes the read view in place
     }
 
   @volatile private var backfillFunctions
@@ -3277,14 +3245,13 @@ final class Collection private (
   /** DropCollectionFunction (by output field): stops computing; rows
     * already carrying the output keep it.
     */
-  def dropFunction(outputField: String): Unit = stateLock.synchronized {
+  def dropFunction(outputField: String): Unit = mutate {
     requirePriv("AlterCollection")
     require(ingestFunctions.exists(_.outputField == outputField),
       s"no collection function produces '$outputField'")
     ingestFunctions = ingestFunctions.filterNot(_.outputField == outputField)
     backfillFunctions = backfillFunctions.filterNot(_.outputField == outputField)
     functionsEverChanged = true // later batches lack the output column
-    invalidateFilterCache() // dropping a backfill changes the read view
   }
 
   def listFunctions: Seq[graft.functions.IngestFunctions.FunctionSchema] =
@@ -3324,7 +3291,7 @@ final class Collection private (
     * (the design's scope is scalars — vectors have indexes to keep
     * valid); pk / MVCC ts / partition tag are immutable.
     */
-  def setField(field: String, updates: DataFrame): Long = stateLock.synchronized {
+  def setField(field: String, updates: DataFrame): Long = mutate {
     requirePriv("Upsert")
     require(field != schema.pkField && field != schema.tsField &&
       field != Collection.PartitionCol, s"cannot patch system field '$field'")
@@ -3353,7 +3320,6 @@ final class Collection private (
       patch.select(col(schema.pkField), col("_patch_ts").as(schema.tsField),
         col(s"_patch_$field")))
     lastWriteTs = ts
-    invalidateFilterCache()
     ts
   }
 
@@ -3420,13 +3386,15 @@ final class Collection private (
       preFilter: Option[Column] = None,
       ignoreGrowing: Boolean = false,
       pkDomain: Option[graft.operators.PkPruning.Domain] = None): DataFrame = {
-    // every state input not named in the key is covered by the
-    // invalidate-on-mutation contract (invalidateFilterCache callers).
-    // The build runs OUTSIDE stateLock — same read/write interleaving
-    // as the uncached path — and is only cached when no mutation
-    // intervened (epoch check), so a torn in-flight build can never
-    // poison the cache for later readers.
-    val epoch0 = viewCacheEpoch.get()
+    // the memo key names every argument plus the collection's
+    // generation; every other state input is covered by [[mutate]],
+    // which drops the memo and bumps the generation. The generation and
+    // the write ts are read together, so a key always names the read ts
+    // its plan was built at. The build runs OUTSIDE stateLock — same
+    // read/write interleaving as the uncached path — and is memoized
+    // only when no mutation intervened, so a torn in-flight build can
+    // never poison the memo for later readers.
+    val (gen, writeTs) = stateLock.synchronized((generation, lastWriteTs))
     // a NONDETERMINISTIC ttl/preFilter (rand()-based sampling, uuid(),
     // a current_timestamp() cut-off) must never be memoized: reusing its
     // plan would freeze one draw's results as "the" view. The engine
@@ -3438,14 +3406,13 @@ final class Collection private (
       val s = c.toString
       Collection.nondetFnPattern.matcher(s).find()
     }
-    val writeTs = lastWriteTs
     val readTs = Mvcc.resolveReadTs(level, writeTs, writeTs, staleness, sessionTs)
     val tsBound = if (readTs < writeTs) Some(readTs) else None
     if (!cacheable)
       return buildReadViewUnscoped(readTs, ttl, preFilter, ignoreGrowing,
         keptSealed(pkDomain, tsBound))
     def keyOf(sealedSlot: String): String =
-      Seq(level.id, staleness, sessionTs, writeTs,
+      Seq(level.id, staleness, sessionTs, gen,
         ttl.map(_.toString).getOrElse("-"),
         preFilter.map(_.toString).getOrElse("-"),
         ignoreGrowing, sealedSlot).mkString("|")
@@ -3454,45 +3421,18 @@ final class Collection private (
     // and (pruned view ∩ pk predicate) = (full view ∩ pk predicate)
     val resident =
       if (pkDomain.isEmpty) None
-      else stateLock.synchronized(viewHit(keyOf("-"), pinnedOnly = true))
+      else stateLock.synchronized(viewCache.get(keyOf("-"), pinnedOnly = true))
     resident.getOrElse {
       val kept = keptSealed(pkDomain, tsBound)
       val key = keyOf(kept.fold("-")(_.sorted.mkString("[", ",", "]")))
-      stateLock.synchronized(viewHit(key, pinnedOnly = false)).getOrElse {
+      stateLock.synchronized(viewCache.get(key)).getOrElse {
         val df = buildReadViewUnscoped(readTs, ttl, preFilter, ignoreGrowing,
           kept)
-        stateLock.synchronized {
-          if (viewCacheEpoch.get() == epoch0 && !viewCache.contains(key)) {
-            viewCache.put(key, (df, 1))
-            while (viewCache.size > viewCacheCapacity) { // LRU eviction
-              val (k, (old, hits)) = viewCache.head
-              if (hits >= viewPinThreshold) old.unpersist()
-              viewCache.remove(k)
-              // capacity-eviction counter: a workload alternating more
-              // than viewCacheCapacity distinct views would thrash
-              // persist/unpersist invisibly — this makes it observable
-              viewEvictions += 1
-            }
-          }
-        }
+        stateLock.synchronized(if (generation == gen) viewCache.put(key, df))
         df
       }
     }
   }
-
-  /** A memo hit on `key` (only a pinned one when `pinnedOnly`): moves
-    * the entry to the LRU tail and pins it on its [[viewPinThreshold]]th
-    * read. Caller holds stateLock.
-    */
-  private def viewHit(key: String, pinnedOnly: Boolean): Option[DataFrame] =
-    viewCache.get(key).filter(!pinnedOnly || _._2 >= viewPinThreshold).map {
-      case (df, hits) =>
-        viewCache.remove(key)
-        viewCache.put(key, (df, hits + 1))
-        if (hits + 1 == viewPinThreshold) // battery pattern — pin it
-          df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        df
-    }
 
   private def buildReadViewUnscoped(
       readTs: Long,
@@ -3583,75 +3523,80 @@ final class Collection private (
     }
   }
 
-  // ---- compiled-filter result cache (reference: exec/expression/
-  // ExprCache.cpp — per-segment cache of filter result bitsets keyed by
-  // the expression, dropped when the segment's data changes). Spark
-  // shape: the cached artifact is the persisted FILTERED MVCC view (the
-  // bitset's moral equivalent — projections layer on top and share it).
-  // The key embeds the write-ts and the caller's RLS scope, so a write
-  // or a different principal can never see a stale or foreign result;
-  // writes also eagerly unpersist every entry (memory hygiene — the
-  // ts-in-key already guarantees correctness).
-  private val filterCache =
-    scala.collection.mutable.LinkedHashMap.empty[(String, Long, String), DataFrame]
-  private val filterCacheCapacity = 16
-  private var filterHits = 0L
-  private var filterMisses = 0L
-  private[graft] def filterCacheStats: (Long, Long) =
-    stateLock.synchronized((filterHits, filterMisses))
-
-  private def invalidateFilterCache(): Unit = {
-    filterCache.valuesIterator.foreach(_.unpersist())
-    filterCache.clear()
-    viewCache.valuesIterator.foreach { case (df, hits) =>
-      if (hits >= viewPinThreshold) df.unpersist()
-    }
-    viewCache.clear()
-    viewCacheEpoch.incrementAndGet()
-  }
-
-  // ---- read-view plan memo (driver-side): [[readViewUnscoped]]'s plan
-  // is a pure function of the collection's mutable state and its
-  // arguments, yet the facade batteries (queryAgg matrices, repeated
-  // query/search between writes) rebuilt — and Catalyst re-analyzed —
-  // the whole MVCC-collapse tree on EVERY call; at fixture scale that
-  // planning time dominates the work (guide §3.3: very large plans make
-  // planning itself the bottleneck — truncate / reuse). The memo reuses
-  // one analyzed Dataset per distinct argument tuple, and the SECOND
-  // read of the same view pins it (persist) so later calls in the
-  // battery scan an in-memory relation instead of re-collapsing — the
-  // same device as [[filterCache]], one level down, with the same
-  // lifetime: every mutation (and load/release scope change) clears it,
-  // so no result ever outlives the state it was computed from. A view
-  // read ONCE is never persisted (zero overhead on single-read paths).
+  // ---- facade memos: two driver-side memos over one device,
+  // [[Collection.PinnedLru]].
   //
-  // A pk-pruned view is keyed by the sealed segments it reads, not by
-  // its pk domain: domains that keep the same segments share one plan,
-  // and one that prunes nothing IS the unpruned view ("-"). Once the
-  // unpruned view of a scope is pinned it is resident, and every
-  // pk-anchored read of that scope is served from it instead of
-  // re-collapsing a pruned parquet union — the reference's querynode
-  // likewise answers Get/Query from loaded segments, pruning only picks
-  // which of them to visit. Eviction is LRU (a hit moves its entry to
-  // the tail), so a hot resident view outlives a stream of one-shot
-  // scopes.
-  private val viewCache =
-    scala.collection.mutable.LinkedHashMap.empty[String, (DataFrame, Int)]
-  private val viewCacheCapacity = 8
+  // `filterCache` is [[queryCached]]'s compiled-filter result cache
+  // (reference: exec/expression/ExprCache.cpp — per-segment cache of
+  // filter result bitsets keyed by the expression). Spark shape: the
+  // cached artifact is the persisted FILTERED MVCC view (the bitset's
+  // moral equivalent — projections layer on top and share it), keyed by
+  // the filter, the generation and the caller's RLS/load scope, so a
+  // different principal can never see a foreign result.
+  //
+  // `viewCache` memoizes [[readViewUnscoped]]'s plan: a pure function of
+  // the collection's mutable state and its arguments, yet the facade
+  // batteries (queryAgg matrices, repeated query/search between writes)
+  // rebuilt — and Catalyst re-analyzed — the whole MVCC-collapse tree on
+  // EVERY call; at fixture scale that planning time dominates the work
+  // (guide §3.3: very large plans make planning itself the bottleneck —
+  // truncate / reuse). The memo reuses one analyzed Dataset per distinct
+  // argument tuple, and the SECOND read of the same view pins it
+  // (persist) so later calls in the battery scan an in-memory relation
+  // instead of re-collapsing. A view read ONCE is never persisted (zero
+  // overhead on single-read paths). A pk-pruned view is keyed by the
+  // sealed segments it reads, not by its pk domain: domains that keep
+  // the same segments share one plan, and one that prunes nothing IS the
+  // unpruned view ("-"). Once the unpruned view of a scope is pinned it
+  // is resident, and every pk-anchored read of that scope is served from
+  // it instead of re-collapsing a pruned parquet union — the reference's
+  // querynode likewise answers Get/Query from loaded segments, pruning
+  // only picks which of them to visit.
+  //
+  // Eviction is LRU in both (a hit moves its entry to the tail), so a hot
+  // entry outlives a stream of one-shot ones. Coherence: the reference's
+  // ExprCache entries die with their immutable segment; here every
+  // view-affecting mutation runs through [[mutate]], which clears both
+  // memos and bumps `generation`, and both keys carry the generation.
+  // Clearing is eager — a pinned entry holds executor memory, so stale
+  // entries must not age out lazily.
+  private val filterCache =
+    new Collection.PinnedLru[(String, Long, String)](capacity = 16, pinAtRead = 1)
   // Nth read of the same view pins it (persist). 2 = the battery
   // pattern pays one materialization and every later call scans memory.
-  private val viewPinThreshold = 2
-  // lifetime count of capacity evictions (NOT invalidations) — the
-  // thrash signal for a facade surface outgrowing viewCacheCapacity
-  private var viewEvictions = 0L
+  private val viewCache = new Collection.PinnedLru[String](capacity = 8, pinAtRead = 2)
+  // guarded by stateLock; assigned only by dropMemos
+  private var generation = 0L
+
+  private[graft] def filterCacheStats: (Long, Long) =
+    stateLock.synchronized((filterCache.hits, filterCache.misses))
+  // lifetime count of capacity evictions (NOT clears) — the thrash
+  // signal for a facade surface outgrowing the view memo's capacity
   private[graft] def viewCacheEvictions: Long =
-    stateLock.synchronized(viewEvictions)
-  // bumped on every invalidation: a view build that raced a mutation
-  // (started before, finished after) must not enter the cache
-  private val viewCacheEpoch = new java.util.concurrent.atomic.AtomicLong(0L)
+    stateLock.synchronized(viewCache.evictions)
+
+  /** Runs a view-affecting mutation under stateLock, then — whether it
+    * returns or throws — drops both facade memos and bumps the
+    * generation, so no memoized plan or result outlives the state it
+    * was computed from (a mutation that fails half-way leaves no stale
+    * memo either). Every method that changes what a read view contains
+    * or which files its plan reads (writes, DDL, load scope, layout
+    * rewrites, TTL properties) runs through here. [[flush]] does not:
+    * its new segment holds exactly the rows memoized plans already read
+    * from the growing tail, so those plans stay correct and the reads
+    * after a flush keep their reuse.
+    */
+  private def mutate[T](body: => T): T =
+    stateLock.synchronized { try body finally dropMemos() }
+
+  private def dropMemos(): Unit = {
+    filterCache.clear()
+    viewCache.clear()
+    generation += 1
+  }
 
   /** [[query]] through the filter-result cache: a repeated filter at an
-    * unchanged write-ts reuses the persisted filtered view instead of
+    * unchanged generation reuses the persisted filtered view instead of
     * re-scanning (the reference's repeated-filter fast path).
     */
   def queryCached(
@@ -3664,23 +3609,11 @@ final class Collection private (
       // baked under one loaded-partition set must not serve another
       val scope = rlsPolicies.mkString(";") + "|" + currentUser.toString +
         "|" + loadedPartitions.map(_.toSeq.sorted.mkString(",")).getOrElse("*")
-      val key = (filterExpr, lastWriteTs, scope)
-      filterCache.get(key) match {
-        case Some(df) =>
-          filterHits += 1
-          filterCache.remove(key) // LRU: a hit moves to the tail
-          filterCache.put(key, df)
-          df
-        case None =>
-          filterMisses += 1
-          val df = readView().filter(compiled(filterExpr)).persist()
-          filterCache.put(key, df)
-          while (filterCache.size > filterCacheCapacity) { // LRU eviction
-            val (k, old) = filterCache.head
-            old.unpersist()
-            filterCache.remove(k)
-          }
-          df
+      val key = (filterExpr, generation, scope)
+      filterCache.get(key).getOrElse {
+        val df = readView().filter(compiled(filterExpr))
+        filterCache.put(key, df)
+        df
       }
     }
     val projected = base.select(outputFields.map(col): _*)
@@ -4341,14 +4274,13 @@ final class Collection private (
 
   /** Release every executor cache block this collection holds —
     * indexes, interim assignments, the pinned sealed layout, and the
-    * filter cache. Called by [[Collection.dropCollection]]; the facade
+    * facade memos. Called by [[Collection.dropCollection]]; the facade
     * object itself stays usable (unloaded), matching DropCollection's
     * resource-release half.
     */
-  def close(): Unit = stateLock.synchronized {
+  def close(): Unit = mutate {
     indexes.valuesIterator.foreach(releaseIndexState)
     indexes = Map.empty
-    invalidateFilterCache()
     sealedDf.foreach(_.unpersist())
     loadedFlag = false
   }
@@ -4729,7 +4661,7 @@ final class Collection private (
     * with their original timestamps; the local TSO advances past the
     * feed's horizon so subsequent local writes stay ordered after it.
     */
-  def applyChanges(changes: DataFrame): Long = stateLock.synchronized {
+  def applyChanges(changes: DataFrame): Long = mutate {
     val pinned = changes.localCheckpoint(true)
     // local arrival tick: feed rows keep their ORIGIN timestamps (for
     // LWW convergence), so index-vs-tail splits need to know when they
@@ -4793,7 +4725,6 @@ final class Collection private (
     // buildTs ≥ this arrival so the late-CDC split above excludes rows
     // those builds already cover
     if (arrivalTs > lastWriteTs) lastWriteTs = arrivalTs
-    invalidateFilterCache()
     feedMax
   }
 
@@ -5202,6 +5133,61 @@ object Collection {
     "\\b(rand|randn|random|uuid|shuffle|monotonically_increasing_id|" +
       "current_timestamp|current_date|now|unix_timestamp|localtimestamp)\\(")
 
+  /** The LRU memo behind both facade memos (filter results and read
+    * views). An entry is pinned (persisted) on its `pinAtRead`th read —
+    * the insert counts as the first, so 1 pins on insert — and a pinned
+    * entry is unpersisted when it is evicted or cleared. A hit moves
+    * its entry to the LRU tail. Not synchronized: the owning
+    * collection calls it under its stateLock.
+    */
+  private final class PinnedLru[K](capacity: Int, pinAtRead: Int) {
+    private val entries =
+      scala.collection.mutable.LinkedHashMap.empty[K, (DataFrame, Int)]
+    var hits = 0L
+    var misses = 0L
+    var evictions = 0L // capacity evictions only, never clears
+
+    /** `key`'s entry (only a pinned one when `pinnedOnly`), as a read. */
+    def get(key: K, pinnedOnly: Boolean = false): Option[DataFrame] =
+      entries.get(key).filter(!pinnedOnly || _._2 >= pinAtRead) match {
+        case Some((df, reads)) =>
+          hits += 1
+          entries.remove(key)
+          entries.put(key, (df, reads + 1))
+          if (reads + 1 == pinAtRead) pin(df)
+          Some(df)
+        case None =>
+          misses += 1
+          None
+      }
+
+    /** Adds `df` as `key`'s first read unless `key` is present, then
+      * evicts least-recently-read entries down to capacity.
+      */
+    def put(key: K, df: DataFrame): Unit =
+      if (!entries.contains(key)) {
+        entries.put(key, (df, 1))
+        if (pinAtRead == 1) pin(df)
+        while (entries.size > capacity) {
+          val (k, e) = entries.head
+          release(e)
+          entries.remove(k)
+          evictions += 1
+        }
+      }
+
+    def clear(): Unit = {
+      entries.valuesIterator.foreach(release)
+      entries.clear()
+    }
+
+    private def pin(df: DataFrame): Unit =
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+    private def release(e: (DataFrame, Int)): Unit =
+      if (e._2 >= pinAtRead) e._1.unpersist()
+  }
+
   // fixed schemas of engine-written metadata files: supplying them at
   // read time skips the parquet footer-inference job (guide: remove
   // work, then tune) — these files are written by THIS engine, so the
@@ -5564,7 +5550,20 @@ object Collection {
   /** Register a collection under a name (CreateCollection's naming half
     * — [[create]] stays anonymous for library-style use).
     */
-  def registerCollection(name: String, coll: Collection, db: String = "default"): Unit = {
+  def registerCollection(name: String, coll: Collection, db: String = "default"): Unit =
+    register(name, coll, db, checkReservation = true)
+
+  /** [[registerCollection]] for the restore completion path: the caller
+    * HOLDS the (db, name) reservation, which is what makes the name
+    * unavailable to everyone else — the reservation check must not
+    * reject its own holder.
+    */
+  private[graft] def registerRestored(name: String, coll: Collection,
+      db: String): Unit =
+    register(name, coll, db, checkReservation = false)
+
+  private def register(name: String, coll: Collection, db: String,
+      checkReservation: Boolean): Unit = {
     val colls = databases.get(db)
     if (colls == null) throw new NoSuchElementException(s"database '$db' does not exist")
     // cap check + insert under the db map's lock: two concurrent
@@ -5576,29 +5575,11 @@ object Collection {
           s"database '$db' is at its max.collections cap ($cap)"))
       // a name with an in-flight restore is taken: without this check a
       // plain create during the restore window would win the name and
-      // the restore would fail only AFTER materializing its corpus.
-      // The restore's own registration goes through registerRestored.
-      require(!restoreReservations.containsKey((db, name)),
-        s"duplicate collection: '$db.$name' already exists " +
-          "(a restore to this target is in progress)")
-      val prev = colls.putIfAbsent(name, coll)
-      require(prev == null, s"collection '$db.$name' already exists")
-    }
-  }
-
-  /** [[registerCollection]] for the restore completion path: the caller
-    * HOLDS the (db, name) reservation, which is what makes the name
-    * unavailable to everyone else — the reservation check must not
-    * reject its own holder.
-    */
-  private[graft] def registerRestored(name: String, coll: Collection,
-      db: String): Unit = {
-    val colls = databases.get(db)
-    if (colls == null) throw new NoSuchElementException(s"database '$db' does not exist")
-    colls.synchronized {
-      databaseProps.getOrDefault(db, Map.empty).get("database.max.collections")
-        .map(_.toLong).foreach(cap => require(colls.size < cap,
-          s"database '$db' is at its max.collections cap ($cap)"))
+      // the restore would fail only AFTER materializing its corpus
+      if (checkReservation)
+        require(!restoreReservations.containsKey((db, name)),
+          s"duplicate collection: '$db.$name' already exists " +
+            "(a restore to this target is in progress)")
       val prev = colls.putIfAbsent(name, coll)
       require(prev == null, s"collection '$db.$name' already exists")
     }

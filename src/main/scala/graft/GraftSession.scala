@@ -14,9 +14,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object GraftSession {
 
-  /** Local session tuned for the test harness (local[N], AQE on, UTC). */
-  def local(cores: Int = 32, appName: String = "graft"): SparkSession = {
-    val spark = SparkSession
+  /** Local session tuned for the test harness (local[N], AQE on, UTC).
+    * `extraConf` pairs are applied last, so they override the defaults.
+    */
+  def local(cores: Int = 32, appName: String = "graft",
+      extraConf: Map[String, String] = Map.empty): SparkSession = {
+    val builder = SparkSession
       .builder()
       .master(s"local[$cores]")
       .appName(appName)
@@ -55,7 +58,7 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = builder.config(extraConf).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

@@ -19,25 +19,10 @@ object ProfileQueries {
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val extra: Seq[(String, String)] = sys.env.get("SPARK_GRAFT_CONF").toSeq
+    val extra: Map[String, String] = sys.env.get("SPARK_GRAFT_CONF").toSeq
       .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
-      .map { kv => val i = kv.indexOf('='); (kv.take(i), kv.drop(i + 1)) }
-    val b0 = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.kryoserializer.buffer.max", "256m")
-      .config("spark.sql.files.maxPartitionBytes", (1024 * 1024).toString)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = extra.foldLeft(b0) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      .map { kv => val i = kv.indexOf('='); (kv.take(i), kv.drop(i + 1)) }.toMap
+    val spark = graft.GraftSession.local(cpus.toInt, extraConf = extra)
 
     val jobs = new AtomicInteger
     val stages = new AtomicInteger
