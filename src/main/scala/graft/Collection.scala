@@ -180,12 +180,39 @@ final class Collection private (
       spark.read.schema(ordered).parquet(p)
     })
 
-  // Sealed reads go through the ts normalization boundary: the MVCC
-  // machinery below (visibility, TTL, truncate horizons) works in
-  // epoch-nanos Long, while driver parquet may carry the ts field as
-  // timestamp[us] (see GraftSession.normalizeTs).
-  @volatile private var sealedDf: Option[DataFrame] =
-    sealedPath.map(p => GraftSession.normalizeTs(readLayout(p), Set(schema.tsField)))
+  // The sealed state: the live segment dirs in read order (an opened
+  // layout starts as its root) and the truncate horizon. The sealed
+  // source derives from them through [[sealedOf]]; [[reseal]] alone
+  // changes them after construction.
+  @volatile private var sealedSegments: Vector[String] = sealedPath.toVector
+  @volatile private var truncateHorizon: Long = 0L
+
+  /** Segment dirs -> sealed source: each dir through the ts
+    * normalization boundary (MVCC works in epoch-nanos Long; driver
+    * parquet may carry timestamp[us] — a no-op on engine-written dirs),
+    * a left-deep by-name union in list order, then the truncate cut.
+    */
+  private def sealedOf(segs: Seq[String]): Option[DataFrame] = {
+    val horizon = truncateHorizon
+    segs.map(p => GraftSession.normalizeTs(readLayout(p), Set(schema.tsField)))
+      .reduceOption(_.unionByName(_, allowMissingColumns = true))
+      .map(df => if (horizon > 0L) df.filter(col(schema.tsField) > horizon) else df)
+  }
+
+  @volatile private var sealedDf: Option[DataFrame] = sealedOf(sealedSegments)
+
+  /** Publish `segs` as the live segment list, rebuild the sealed source
+    * and [[repin]], so a loaded collection keeps exactly one pin per
+    * resident artifact and NotLoad none. Flush, fold and compaction read
+    * their new dir back through [[readLayoutWritten]] first, so the
+    * rebuild hits `layoutDfCache` instead of inferring footers.
+    */
+  private def reseal(segs: Vector[String]): Unit = {
+    sealedDf = sealedOf(segs)
+    sealedSegments = segs
+    repin()
+  }
+
   @volatile private var growing: Option[DataFrame] = None
   @volatile private var tombs: Option[DataFrame] = None
 
@@ -316,8 +343,7 @@ final class Collection private (
   /** Whether the sealed blob store should be cache-pinned: the
     * collection is loaded AND some declared TEXT field is in the load
     * scope (a field-partial load listing no TEXT field never joins the
-    * store). Shared by [[load]], [[flush]], and [[lobGc]] so residency
-    * decisions never diverge across the three reassignment sites.
+    * store). Read by [[repin]] only.
     */
   private def lobResident: Boolean = loadedFlag &&
     textFieldSpecs.keysIterator.exists(f => loadedFields.forall(_.contains(f)))
@@ -456,14 +482,9 @@ final class Collection private (
       loadedFields = Some(fs)
     } else loadedFields = None
     skipDynamic = skipLoadDynamicField
-    sealedDf = sealedDf.map(
-      _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    // the sealed blob store pins alongside the data (reference: load
-    // makes LOB columns resident too) — unless the load is field-partial
-    // and lists NO text field, in which case no read will ever join it
-    if (lobResident)
-      lobSealed = lobSealed.map(
-        _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    loadedPartitions = None // a full load supersedes any partial scope
+    loadedFlag = true
+    repin()
     // warmup policies (reference: field warmup sync/async/disable):
     // sync — or no policy at all — blocks until resident (the
     // LoadCollection contract); async kicks the materialization off
@@ -479,22 +500,20 @@ final class Collection private (
         t.setDaemon(true)
         t.start()
       }
-    partialPin.foreach(_.unpersist())
-    partialPin = None
-    loadedPartitions = None // a full load supersedes any partial scope
-    loadedFlag = true
   }
 
   def release(): Unit = mutate {
     requirePriv("Release")
-    sealedDf.foreach(_.unpersist())
-    lobSealed.foreach(_.unpersist()) // no-op when it was never pinned
-    partialPin.foreach(_.unpersist())
-    partialPin = None
+    unload()
+  }
+
+  /** NotLoad with no partition or field scope (release and close). */
+  private def unload(): Unit = {
     loadedPartitions = None
     loadedFields = None
     skipDynamic = false
     loadedFlag = false
+    repin()
   }
 
   /** The field-partial load list in effect, if any (DescribeCollection's
@@ -515,15 +534,33 @@ final class Collection private (
   // reaches the flushed hive layout as a PartitionFilter, so only the
   // loaded partitions' bytes materialize.
   @volatile private var loadedPartitions: Option[Set[String]] = None
-  @volatile private var partialPin: Option[DataFrame] = None
 
-  private def repinPartial(set: Set[String]): Unit = {
-    partialPin.foreach(_.unpersist())
-    partialPin =
-      if (set.isEmpty) None
-      else sealedDf.map(_.filter(col(Collection.PartitionCol).isin(set.toSeq: _*))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    partialPin.foreach(_.count())
+  // the executor-cache pins the load scope holds, keyed by what each
+  // pins: (source frame, partition scope) -> the persisted frame
+  @volatile private var pins: Seq[((DataFrame, Option[Set[String]]), DataFrame)] = Nil
+
+  /** The one residency rule: the only code that persists or unpersists
+    * the sealed layout, its partition-scoped view or the blob store.
+    * Wanted: nothing when NotLoad; else the sealed source (filtered to
+    * the loaded partitions under a partial load), plus the blob store
+    * when [[lobResident]]. Held pins not wanted are unpersisted, wanted
+    * ones not held are persisted — so a loaded collection holds exactly
+    * one pin per resident artifact and NotLoad holds none. Pins are
+    * lazy: the first read (or [[load]]'s warmup) materializes them.
+    */
+  private def repin(): Unit = {
+    val wanted =
+      if (!loadedFlag) Nil
+      else sealedDf.map(_ -> loadedPartitions).toSeq ++
+        lobSealed.filter(_ => lobResident).map(_ -> None)
+    val (keep, drop) = pins.partition { case (k, _) => wanted.contains(k) }
+    drop.foreach(_._2.unpersist())
+    pins = keep ++ wanted.filterNot(k => keep.exists(_._1 == k)).map {
+      case k @ (src, scope) =>
+        k -> scope.fold(src)(set =>
+            src.filter(col(Collection.PartitionCol).isin(set.toSeq: _*)))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
   }
 
   /** LoadPartitions: idempotent, additive; every name must exist (the
@@ -537,10 +574,9 @@ final class Collection private (
     val unknown = names.filterNot(partitionSet.contains)
     require(unknown.isEmpty, s"no such partition(s): ${unknown.mkString(", ")}")
     if (!(loadedFlag && loadedPartitions.isEmpty)) { // full load absorbs
-      val set = loadedPartitions.getOrElse(Set.empty) ++ names
-      loadedPartitions = Some(set)
-      repinPartial(set)
+      loadedPartitions = Some(loadedPartitions.getOrElse(Set.empty) ++ names)
       loadedFlag = true
+      repin()
     }
   }
 
@@ -556,18 +592,10 @@ final class Collection private (
     val unknown = names.filterNot(partitionSet.contains)
     require(unknown.isEmpty, s"no such partition(s): ${unknown.mkString(", ")}")
     if (loadedFlag) {
-      val current = loadedPartitions.getOrElse(partitionSet)
-      val remaining = current -- names
-      if (remaining.isEmpty) {
-        sealedDf.foreach(_.unpersist())
-        partialPin.foreach(_.unpersist()); partialPin = None
-        loadedPartitions = None
-        loadedFlag = false
-      } else if (remaining != current || loadedPartitions.isEmpty) {
-        if (loadedPartitions.isEmpty) sealedDf.foreach(_.unpersist())
-        loadedPartitions = Some(remaining)
-        repinPartial(remaining)
-      }
+      val remaining = loadedPartitions.getOrElse(partitionSet) -- names
+      loadedPartitions = Some(remaining).filter(_.nonEmpty)
+      loadedFlag = remaining.nonEmpty
+      repin()
     }
   }
 
@@ -1244,8 +1272,8 @@ final class Collection private (
         if (folded.columns.contains(Collection.PartitionCol))
           folded.write.partitionBy(Collection.PartitionCol).parquet(foldPath)
         else folded.write.parquet(foldPath)
-        sealedDf = Some(readLayoutWritten(foldPath, folded.schema))
-        sealedSegments = Vector(foldPath)
+        readLayoutWritten(foldPath, folded.schema)
+        reseal(Vector(foldPath))
       }
       colPatches = deferred
     }
@@ -1286,7 +1314,7 @@ final class Collection private (
           }
         }
         // each compaction runs in a fresh run directory: overwriting a
-        // directory the current sealedDf plan reads from is illegal in
+        // directory the live sealed source reads from is illegal in
         // Spark (and the reference likewise seals into new segment files)
         val runPath = s"$path/run-${nextTs()}"
         // fold superseded LWW versions along with the tombstones: the
@@ -1331,8 +1359,8 @@ final class Collection private (
         graft.operators.Compaction.writeCompacted(
           merged, t, schema.pkField, schema.tsField,
           lit(lastWriteTs), runPath)
-        sealedDf = Some(readLayoutWritten(s"$runPath/data", merged.schema))
-        sealedSegments = Vector(s"$runPath/data") // the single live segment
+        readLayoutWritten(s"$runPath/data", merged.schema)
+        reseal(Vector(s"$runPath/data")) // the single live segment
         tombs = None // all folded (compactTs = lastWriteTs leaves no residual)
     }
   }
@@ -1410,15 +1438,10 @@ final class Collection private (
         else {
           val snapPath = s"$path/_lobs/snap-${nextTs()}"
           kept.write.parquet(snapPath)
-          // release the superseded store's cache pin BEFORE replacing it
-          // (a loaded collection would otherwise leak the old store in
-          // the Spark cache), and carry residency onto the snapshot
-          lobSealed.foreach(_.unpersist())
           // schema-supplied read-back (see readLayoutWritten)
           lobSealed = Some(spark.read.schema(kept.schema).parquet(snapPath))
-          if (lobResident) lobSealed = lobSealed.map(
-            _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
           lobGrowing = None // folded into the snapshot
+          repin() // residency moves from the superseded store to the snapshot
           total - keptCount
         }
     }
@@ -2068,22 +2091,23 @@ final class Collection private (
     * metadata operation like the reference's (no rewrite; rows at or
     * below the horizon stop being visible and later inserts are
     * unaffected). Built indexes over pre-truncate data are dropped.
+    * Residency follows the load scope like any other reseal: a loaded
+    * collection re-pins the cut source, a NotLoad one pins nothing.
     */
   def truncate(): Long = mutate {
     val ts = nextTs()
     // a full-range tombstone per existing pk would be O(rows); instead
     // cut the raw view at the horizon, which visible() honors because
-    // every remaining read path goes through readView
-    val horizon = ts
-    sealedDf = sealedDf.map(_.filter(col(schema.tsField) > horizon).cache())
-    growing = growing.map(_.filter(col(schema.tsField) > horizon))
+    // every remaining read path goes through readView. The horizon also
+    // lets changesSince refuse cursors from before it (the pre-truncate
+    // changelog no longer reproduces this collection's state).
+    truncateHorizon = ts
+    reseal(sealedSegments)
+    growing = growing.map(_.filter(col(schema.tsField) > ts))
     tombs = None
     colPatches = Map.empty // every patched row is cut at the horizon
     indexes.valuesIterator.foreach(releaseIndexState)
     indexes = Map.empty
-    // the pre-truncate changelog no longer reproduces this collection's
-    // state — record the horizon so changesSince refuses stale cursors
-    truncateHorizon = ts
     changeLog = None
     cdcApplied = None
     lastWriteTs = ts
@@ -2099,8 +2123,8 @@ final class Collection private (
     * write-buffer → binlog): ONLY the tail is written, into a fresh
     * segment directory `path/seg-N` — the incremental segment seal, not
     * a full-dataset rewrite — and the collection keeps serving the union
-    * of segment reads. Never overwrites a directory the current
-    * sealedDf plan reads from, so repeated flushes to one path are safe.
+    * of segment reads. Every flush writes a fresh directory, never one a
+    * live segment list names, so repeated flushes to one path are safe.
     */
   def flush(path: String): Unit = stateLock.synchronized {
     requirePriv("Flush")
@@ -2128,11 +2152,8 @@ final class Collection private (
       // schema-supplied read-back: we just wrote these files (see
       // readLayoutWritten — skips the footer-inference job)
       val seg = spark.read.schema(g.schema).parquet(genPath)
+      // residency moves to the grown store at the data reseal below
       lobSealed = Some(lobSealed.map(_.unionByName(seg)).getOrElse(seg))
-      // a loaded collection's blob store stays resident across flushes,
-      // same as the data path below (and with load()'s same scope guard)
-      if (lobResident) lobSealed = lobSealed.map(
-        _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       lobGrowing = None
     }
     growing.foreach { g =>
@@ -2160,23 +2181,14 @@ final class Collection private (
         val bytes = fs.getContentSummary(new Path(segPath)).getLength
         segStatsReg.put(segPath, computeSegStats(seg, bytes))
       }
-      sealedDf = Some(sealedDf
-        .map(_.unionByName(seg, allowMissingColumns = true)).getOrElse(seg))
       // a loaded collection stays loaded across flushes (the reference
       // keeps serving from memory while handoff swaps segments)
-      if (loadedFlag) sealedDf = sealedDf.map(
-        _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      reseal(sealedSegments :+ segPath)
       growing = None
       growingRows = 0L
       growingSinceTs = None
-      sealedSegments :+= segPath
     }
   }
-
-  // flushed segment directories, for introspection (an opened layout is
-  // the first live segment; compaction replaces the list with its run
-  // dir; flush appends)
-  @volatile private var sealedSegments: Vector[String] = sealedPath.toVector
 
   // ---- per-segment summary statistics (reference MEP
   // 20260602-segment_summary_metadata.md: aggregate metrics extracted
@@ -2393,25 +2405,15 @@ final class Collection private (
   /** The sealed source restricted to the [[keptSealed]] segments. */
   private def prunedSealed(keep: Seq[String]): Option[DataFrame] =
     sealedDf.map { fullDf =>
-      val base =
-        if (keep.isEmpty) fullDf.filter(lit(false))
-        else {
-          val unioned = keep
-            .map(p => GraftSession.normalizeTs(
-              readLayout(p), Set(schema.tsField)))
-            .reduce(_.unionByName(_, allowMissingColumns = true))
-          // align to the full sealed schema — a pruned subset may
-          // miss columns later segments introduced
-          val cols = fullDf.schema.fields.map { f =>
-            if (unioned.columns.contains(f.name)) col(f.name)
-            else lit(null).cast(f.dataType).as(f.name)
-          }
-          unioned.select(cols.toIndexedSeq: _*)
+      sealedOf(keep).fold(fullDf.filter(lit(false))) { kept =>
+        // align to the full sealed schema — a pruned subset may miss
+        // columns later segments introduced
+        val cols = fullDf.schema.fields.map { f =>
+          if (kept.columns.contains(f.name)) col(f.name)
+          else lit(null).cast(f.dataType).as(f.name)
         }
-      // a truncate is a ts-horizon cut applied to sealedDf, not to
-      // the files — re-apply it on the rebuilt scan
-      val horizon = truncateHorizon
-      if (horizon > 0L) base.filter(col(schema.tsField) > horizon) else base
+        kept.select(cols.toIndexedSeq: _*)
+      }
     }
 
   /** Which sealed segment paths a filter would dispatch to — the
@@ -2647,26 +2649,16 @@ final class Collection private (
             case _ => acc :+ Vector(seg)
           }
       }
-      sealedSegments = groups.zipWithIndex.map { case (g, i) =>
+      // the reseal moves a loaded collection's pin (full or partition
+      // scoped) from the pre-merge layout onto the merged one
+      reseal(groups.zipWithIndex.map { case (g, i) =>
         if (g.size == 1) g.head._1
         else {
-          val merged = g.map(s => readLayout(s._1))
-            .reduce(_.unionByName(_, allowMissingColumns = true))
           val dst = s"$path/merge-${nextTs()}-$i"
-          merged.write.parquet(dst)
+          sealedOf(g.map(_._1)).foreach(_.write.parquet(dst))
           dst
         }
-      }
-      sealedDf.foreach(_.unpersist()) // drop the pre-merge pinned blocks
-      sealedDf = Some(sealedSegments.map(readLayout(_))
-        .reduce(_.unionByName(_, allowMissingColumns = true)))
-      if (loadedFlag) loadedPartitions match {
-        // a partial load re-pins its SCOPE over the merged layout —
-        // never the full layout (that would pin unloaded partitions)
-        case Some(set) => repinPartial(set)
-        case None => sealedDf = sealedDf.map(
-          _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      }
+      })
     }
     val id = nextTs()
     compactionHistory +=
@@ -2678,17 +2670,15 @@ final class Collection private (
   /** Optimize (reference: the client's optimize() sugar —
     * test_milvus_client_optimize.py: wait indexes → force-merge
     * compaction → wait → index rebuild → refresh load). Synchronous
-    * here: force-merge, rebuild every vector index over the merged
-    * layout, and re-pin the sealed layout if loaded (load() is
-    * idempotent). Returns the force-merge compaction id.
+    * here: force-merge, then rebuild every vector index over the merged
+    * layout. The load refresh is the force-merge's reseal, which re-pins
+    * the merged layout under the SAME load scope (partitions and fields
+    * alike). Returns the force-merge compaction id.
     */
   def optimize(path: String, targetSizeMb: Long = 2048L,
       maxSizeMb: Long = 1024L): Long = {
     val id = forceMerge(path, targetSizeMb, maxSizeMb)
     indexes.foreach { case (f, st) => createIndex(f, st.model.nlist) }
-    // refresh the load WITHOUT widening its scope: a partial load was
-    // already re-pinned by forceMerge; only a full load re-runs load()
-    if (loadState == "Loaded" && loadedPartitions.isEmpty) load()
     id
   }
 
@@ -4273,16 +4263,16 @@ final class Collection private (
   }
 
   /** Release every executor cache block this collection holds —
-    * indexes, interim assignments, the pinned sealed layout, and the
-    * facade memos. Called by [[Collection.dropCollection]]; the facade
-    * object itself stays usable (unloaded), matching DropCollection's
+    * indexes, interim assignments, every load pin, and the facade
+    * memos. Called by [[Collection.dropCollection]]; the facade object
+    * itself stays usable, NotLoad exactly as after [[release]] (no
+    * partition or field scope survives), matching DropCollection's
     * resource-release half.
     */
   def close(): Unit = mutate {
     indexes.valuesIterator.foreach(releaseIndexState)
     indexes = Map.empty
-    sealedDf.foreach(_.unpersist())
-    loadedFlag = false
+    unload()
   }
 
   /** Centroid-assign newly-ingested rows into each index's interim
@@ -4599,7 +4589,6 @@ final class Collection private (
   // arrival is the LOCAL tick of the apply, origin ts is the primary's.
   // Bounded by the applied-feed volume (same order as changeLog).
   @volatile private var cdcApplied: Option[DataFrame] = None
-  @volatile private var truncateHorizon: Long = 0L
 
   /** The ts of the most recent [[truncate]] (0 if never truncated) —
     * the earliest valid [[changesSince]] cursor.
@@ -4937,7 +4926,7 @@ object Collection {
     * An ENGINE-WRITTEN layout root (flush `seg-<ts>` dirs, patch-fold
     * `fold-<ts>` dirs, compaction `run-<ts>` dirs) is read with
     * supersession honored: a fold/run rewrite REPLACED every earlier
-    * dir when it was written (`sealedSegments = Vector(rewrite)`), so
+    * dir when it was written (`reseal(Vector(rewrite))`), so
     * reopening reads the newest rewrite plus only the segments flushed
     * after it — reading superseded dirs too would both trip Spark's
     * mixed-structure partition discovery and resurrect pre-rewrite row

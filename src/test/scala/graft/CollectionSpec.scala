@@ -557,6 +557,119 @@ class CollectionSpec extends SparkSpec {
     assert(c.count() == 30) // still served from disk
   }
 
+  /** Ids of the cached RDDs alive now. Local checkpoints are left out:
+    * they hold write inputs (tombstones, blob deltas) for the
+    * collection's life by design, and are no load pin.
+    */
+  private def cachePins(): Set[Int] =
+    spark.sparkContext.getPersistentRDDs
+      .collect { case (id, rdd) if !rdd.isCheckpointed => id }.toSet
+
+  test("a full load stays pinned through flush, compact and forceMerge; close leaves no pin") {
+    val before = cachePins()
+    val c = Collection.create(spark,
+      CollectionSchema(pkField = "pk", vectorFields = Map("emb" -> 4)))
+    val dir = "/tmp/graft_test_repin_" + System.nanoTime()
+    c.insert(mkRows(0L until 20L))
+    c.flush(dir)
+    c.load()
+    def resident(step: String, rows: Long): Unit = {
+      assert(c.count() == rows, step) // the read materializes the pin
+      assert(c.sealedStorageLevel.exists(_.useMemory),
+        s"$step left the sealed layout unpinned")
+    }
+    resident("load", 20)
+    c.insert(mkRows(20L until 30L))
+    c.flush(dir)
+    resident("flush", 30)
+    c.deletePks(Seq(0L, 1L))
+    c.compact(dir)
+    resident("compact", 28)
+    c.insert(mkRows(30L until 40L))
+    c.flush(dir)
+    c.forceMerge(dir, 2048)
+    assert(c.getPersistentSegmentInfo.size == 1)
+    resident("forceMerge", 38)
+    c.close()
+    assert(cachePins() -- before == Set.empty, "close left cache pins behind")
+  }
+
+  test("a partition-scoped load never pins the full layout; close leaves no pin") {
+    val before = cachePins()
+    val c = Collection.create(spark,
+      CollectionSchema(pkField = "pk", vectorFields = Map("emb" -> 4)))
+    c.createPartition("p1")
+    c.createPartition("p2")
+    c.insertInto("p1", mkRows(0L until 20L))
+    c.insertInto("p2", mkRows(20L until 50L))
+    val dir = "/tmp/graft_test_repin_part_" + System.nanoTime()
+    c.flush(dir)
+    c.loadPartitions(Seq("p1"))
+    assert(c.count() == 20)
+    assert(!c.sealedStorageLevel.exists(_.useMemory),
+      "loadPartitions pinned the full layout")
+    c.insertInto("p1", mkRows(50L until 60L))
+    c.insertInto("p2", mkRows(60L until 70L))
+    c.flush(dir)
+    assert(c.count() == 30)
+    assert(!c.sealedStorageLevel.exists(_.useMemory),
+      "flush under a partition load pinned the full layout")
+    c.close()
+    assert(cachePins() -- before == Set.empty, "close left cache pins behind")
+  }
+
+  test("truncate on a NotLoad collection pins nothing") {
+    val c = Collection.create(spark,
+      CollectionSchema(pkField = "pk", vectorFields = Map("emb" -> 4)))
+    c.insert(mkRows(0L until 20L))
+    c.flush("/tmp/graft_test_repin_trunc_" + System.nanoTime())
+    val before = cachePins()
+    c.truncate()
+    c.insert(mkRows(20L until 25L))
+    assert(c.count() == 5)
+    assert(!c.sealedStorageLevel.exists(_.useMemory), "truncate pinned the sealed layout")
+    assert(cachePins() -- before == Set.empty, "truncate pinned a NotLoad collection")
+  }
+
+  test("a loaded TEXT-LOB collection moves its blob-store pin through flush and lobGc; close leaves none") {
+    val before = cachePins()
+    val c = Collection.create(spark, CollectionSchema(pkField = "id",
+      textFields = Map("text" -> TextFieldSpec()), textInlineThreshold = 16))
+    def docs(ids: Seq[Long]) =
+      ids.map(i => (i, s"doc $i " + ("x" * 32))).toDF("id", "text")
+    val dir = "/tmp/graft_test_repin_lob_" + System.nanoTime()
+    c.insert(docs(1L to 5L))
+    c.flush(dir)
+    c.load()
+    assert(c.lobBlobCount == 5) // materializes the blob-store pin
+    c.insert(docs(6L to 8L))
+    c.flush(dir)
+    assert(c.lobBlobCount == 8)
+    c.deletePks(Seq(1L))
+    c.compact(dir)
+    assert(c.lobGc(dir) == 1L)
+    assert(c.lobBlobCount == 7)
+    assert(c.query("id == 8", Seq("id", "text")).as[(Long, String)].head()._2
+      .endsWith("x" * 32))
+    c.close()
+    assert(cachePins() -- before == Set.empty, "close left cache pins behind")
+  }
+
+  test("close drops a partition-scoped load exactly like release") {
+    val c = Collection.create(spark,
+      CollectionSchema(pkField = "pk", vectorFields = Map("emb" -> 4)))
+    c.createPartition("p1")
+    c.createPartition("p2")
+    c.insertInto("p1", mkRows(0L until 20L))
+    c.insertInto("p2", mkRows(20L until 50L))
+    c.flush("/tmp/graft_test_repin_close_" + System.nanoTime())
+    c.loadPartitions(Seq("p1"))
+    assert(c.count() == 20)
+    c.close()
+    assert(c.loadState == "NotLoad" && c.describeLoadedPartitions.isEmpty)
+    assert(c.count() == 50, "close kept serving the partition scope")
+  }
+
   test("ignore_growing serves sealed segments only") {
     val c = Collection.create(spark,
       CollectionSchema(pkField = "pk", vectorFields = Map("emb" -> 4)))
@@ -1045,6 +1158,12 @@ class CollectionSpec extends SparkSpec {
     assert(c.describeLoadedPartitions == Some(Seq("p1")),
       "optimize widened the partial load")
     assert(c.count() == 20)
+    c.release()
+    // ...and a field-partial load keeps its field list too
+    c.load(Seq("pk", "emb"))
+    c.optimize(s"$dir/opt")
+    assert(c.describeLoadedFields == Some(Set("pk", "emb")),
+      "optimize widened the field-partial load")
     c.release()
   }
 

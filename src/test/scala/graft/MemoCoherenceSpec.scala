@@ -6,7 +6,9 @@ import org.scalacheck.rng.Seed
 /** Model test for the facade memos (the read-view memo and the
   * queryCached filter cache): fixed-seed generated sequences of
   * mutations, each followed by reads that pin and reuse both memos, must
-  * answer exactly as a driver-side pk -> row model does.
+  * answer exactly as a driver-side pk -> row model does. The ops
+  * include every site that rewrites the sealed state (flush, compact,
+  * truncate, forceMerge) and both load transitions.
   */
 class MemoCoherenceSpec extends SparkSpec {
   import spark.implicits._
@@ -90,6 +92,13 @@ class MemoCoherenceSpec extends SparkSpec {
         case Release =>
           c.release()
           Nil
+        case Truncate =>
+          c.truncate()
+          model = Map.empty
+          Nil
+        case ForceMerge =>
+          c.forceMerge(path, 2048)
+          Nil
       }
       val at = s"seed $seed, step $step ($op)"
       // the second count reads the view again, which pins it
@@ -108,7 +117,7 @@ class MemoCoherenceSpec extends SparkSpec {
   test("the generated sequences cover every op kind") {
     val kinds = seeds.flatMap(s => sample(opsGen, s)).map(_.productPrefix).toSet
     assert(kinds == Set("Insert", "Upsert", "DeletePks", "DeleteExpr",
-      "SetField", "Flush", "Compact", "Load", "Release"))
+      "SetField", "Flush", "Compact", "Load", "Release", "Truncate", "ForceMerge"))
   }
 
   seeds.foreach { seed =>
@@ -136,6 +145,10 @@ object MemoCoherenceSpec {
   case object Compact extends Op
   case object Load extends Op
   case object Release extends Op
+  /** Empties the model. */
+  case object Truncate extends Op
+  /** forceMerge(path, 2048): every sealed segment into one; the model is unchanged. */
+  case object ForceMerge extends Op
 
   private val picks = Gen.listOfN(3, Gen.choose(0, 1000))
   private val grp = Gen.choose(0, Groups.toInt - 1)
@@ -149,7 +162,9 @@ object MemoCoherenceSpec {
     Gen.const(Flush),
     Gen.const(Compact),
     Gen.const(Load),
-    Gen.const(Release))
+    Gen.const(Release),
+    Gen.const(Truncate),
+    Gen.const(ForceMerge))
 
   val opsGen: Gen[List[Op]] =
     Gen.choose(6, 10).flatMap(n => Gen.listOfN(n, opGen))
