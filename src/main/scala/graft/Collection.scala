@@ -133,53 +133,6 @@ final class Collection private (
     val schema: CollectionSchema,
     sealedPath: Option[String]) {
 
-  /** Read an engine-written layout with the partition tag re-asserted
-    * as a STRING: partition directory values are NAMES, never numbers —
-    * an all-digit tenant id ("123" or "0123", legal per the reference's
-    * validatePartitionTag, proxy/util.go:353-358) written as
-    * `_partition=0123` would otherwise be type-inferred back as int 123
-    * and break the sealed∪growing union. The fix is a RE-READ with an
-    * explicit user schema: Spark then parses each partition value from
-    * the RAW directory string under the declared StringType, so
-    * non-canonical numerics ("0123", "1e5") survive byte-exact — a
-    * post-hoc cast of the inferred int would not. (A layout mixing
-    * alpha and numeric names already infers string; the re-read only
-    * fires for the all-numeric-tenants case.)
-    */
-  // Engine-written layout dirs are write-once: within this handle's
-  // lifetime a path's files — and hence its inferred schema — never
-  // change, so repeated segment reads (the pk-pruned dispatch re-unions
-  // the kept segments on EVERY read) reuse one analyzed Dataset instead
-  // of re-running parquet footer inference: one scheduler job per
-  // segment per read saved at fixture scale, pure planning reuse at any
-  // scale. Instance-scoped so a reopened handle re-infers from disk.
-  private val layoutDfCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private def readLayout(path: String): DataFrame =
-    layoutDfCache.computeIfAbsent(path,
-      p => Collection.readLayoutAt(spark, p))
-
-  /** [[readLayout]] for a directory THIS handle just wrote: the writer
-    * knows the schema, so parquet footer inference — one scheduler job
-    * per read-back at any scale — is pure waste. The supplied schema
-    * reproduces what inference would return: data fields in write
-    * order, the hive partition column (if any) resolved from the
-    * directory names, last and nullable, always string (the same
-    * all-numeric-tenant fix [[Collection.readLayoutAt]] re-reads for).
-    */
-  private def readLayoutWritten(path: String,
-      written: org.apache.spark.sql.types.StructType): DataFrame =
-    layoutDfCache.computeIfAbsent(path, p => {
-      val (data, part) =
-        written.fields.partition(_.name != Collection.PartitionCol)
-      val ordered = org.apache.spark.sql.types.StructType(
-        (data ++ part.map(_.copy(
-          dataType = org.apache.spark.sql.types.StringType,
-          nullable = true))).toIndexedSeq)
-      spark.read.schema(ordered).parquet(p)
-    })
-
   // The sealed state: the live segment dirs in read order (an opened
   // layout starts as its root) and the truncate horizon. The sealed
   // source derives from them through [[sealedOf]]; [[reseal]] alone
@@ -187,29 +140,98 @@ final class Collection private (
   @volatile private var sealedSegments: Vector[String] = sealedPath.toVector
   @volatile private var truncateHorizon: Long = 0L
 
-  /** Segment dirs -> sealed source: each dir through the ts
-    * normalization boundary (MVCC works in epoch-nanos Long; driver
-    * parquet may carry timestamp[us] — a no-op on engine-written dirs),
-    * a left-deep by-name union in list order, then the truncate cut.
+  /** Everything this handle derives from one sealed segment dir.
+    *
+    * `df` is the dir's ts-normalized frame (MVCC works in epoch-nanos
+    * Long; driver parquet may carry timestamp[us] — a no-op on
+    * engine-written dirs), built once when the record is made: a dir
+    * this handle wrote is read with the schema it wrote, any other dir
+    * through [[Collection.readLayoutAt]]'s footer inference. Its file
+    * listing is therefore fixed at registration, which keeps an opened
+    * root from picking up the segments later flushed under it.
+    *
+    * `stats` (the MEP 20260602 segment summary) and `pkRange` (the pk
+    * [min, max], None for an empty segment) come from one aggregate
+    * over `df`: flush forces it at seal time, a compaction output or
+    * opened root runs it on its first consumer read. `pkBloom` (MEP
+    * 20260324's "bloom filter plus min/max range") is built on the
+    * first point probe that passes the range check. All three are lazy
+    * vals of the record: the map below only creates records (a file
+    * listing, plus footers for an inferred dir), and no record's work
+    * reaches back into the map.
+    */
+  private final class SegRecord(path: String, written: Option[StructType]) {
+    val df: DataFrame = GraftSession.normalizeTs(written.fold(
+      Collection.readLayoutAt(spark, path)) { w =>
+        // what inference would return: data fields in write order, the
+        // hive partition column (if any) last, nullable and always
+        // string (the all-numeric-tenant fix readLayoutAt re-reads for)
+        val (data, part) = w.fields.partition(_.name != Collection.PartitionCol)
+        spark.read.schema(StructType(
+          (data ++ part.map(_.copy(
+            dataType = org.apache.spark.sql.types.StringType,
+            nullable = true))).toIndexedSeq)).parquet(path)
+      }, Set(schema.tsField))
+    lazy val (stats, pkRange) = {
+      import org.apache.hadoop.fs.Path
+      val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+      summarize(df, fs.getContentSummary(new Path(path)).getLength)
+    }
+    lazy val pkBloom: org.apache.spark.util.sketch.BloomFilter =
+      df.stat.bloomFilter(schema.pkField, math.max(stats.rows, 1L), 0.001)
+  }
+
+  /** The records of the live segment dirs. [[reseal]] registers every
+    * dir of its new list before publishing it and trims the map to that
+    * list after, so the keys are exactly `sealedSegments` between
+    * reseals; a reader holding an older list gets a throwaway record
+    * for a dir the reseal dropped ([[recordOf]]) and never re-adds it.
+    */
+  private val segRecords = new java.util.concurrent.ConcurrentHashMap[String, SegRecord]()
+
+  /** Register `p`, seeding its frame with `written` when this handle
+    * just wrote the dir (saves the footer-inference job). A live dir's
+    * record is never rebuilt.
+    */
+  private def register(p: String, written: Option[StructType] = None): SegRecord =
+    segRecords.computeIfAbsent(p, new SegRecord(_, written))
+
+  private def recordOf(p: String): SegRecord =
+    Option(segRecords.get(p)).getOrElse(new SegRecord(p, None))
+
+  /** The record map's keys — the live-dir invariant made observable. */
+  private[graft] def segmentRecordDirs: Set[String] = {
+    import scala.jdk.CollectionConverters._
+    segRecords.keySet.asScala.toSet
+  }
+
+  /** Segment dirs -> sealed source: the dirs' frames in a left-deep
+    * by-name union in list order, then the truncate cut.
     */
   private def sealedOf(segs: Seq[String]): Option[DataFrame] = {
     val horizon = truncateHorizon
-    segs.map(p => GraftSession.normalizeTs(readLayout(p), Set(schema.tsField)))
+    segs.map(recordOf(_).df)
       .reduceOption(_.unionByName(_, allowMissingColumns = true))
       .map(df => if (horizon > 0L) df.filter(col(schema.tsField) > horizon) else df)
   }
 
-  @volatile private var sealedDf: Option[DataFrame] = sealedOf(sealedSegments)
+  @volatile private var sealedDf: Option[DataFrame] = {
+    sealedSegments.foreach(register(_))
+    sealedOf(sealedSegments)
+  }
 
   /** Publish `segs` as the live segment list, rebuild the sealed source
-    * and [[repin]], so a loaded collection keeps exactly one pin per
-    * resident artifact and NotLoad none. Flush, fold and compaction read
-    * their new dir back through [[readLayoutWritten]] first, so the
-    * rebuild hits `layoutDfCache` instead of inferring footers.
+    * from its records, trim the record map to it and [[repin]], so a
+    * loaded collection keeps exactly one pin per resident artifact and
+    * NotLoad none. Flush, fold, compaction and force-merge [[register]]
+    * their new dir with its written schema first.
     */
   private def reseal(segs: Vector[String]): Unit = {
+    import scala.jdk.CollectionConverters._
+    segs.foreach(register(_))
     sealedDf = sealedOf(segs)
     sealedSegments = segs
+    segRecords.keySet.retainAll(segs.asJava)
     repin()
   }
 
@@ -1272,7 +1294,7 @@ final class Collection private (
         if (folded.columns.contains(Collection.PartitionCol))
           folded.write.partitionBy(Collection.PartitionCol).parquet(foldPath)
         else folded.write.parquet(foldPath)
-        readLayoutWritten(foldPath, folded.schema)
+        register(foldPath, Some(folded.schema))
         reseal(Vector(foldPath))
       }
       colPatches = deferred
@@ -1359,7 +1381,7 @@ final class Collection private (
         graft.operators.Compaction.writeCompacted(
           merged, t, schema.pkField, schema.tsField,
           lit(lastWriteTs), runPath)
-        readLayoutWritten(s"$runPath/data", merged.schema)
+        register(s"$runPath/data", Some(merged.schema))
         reseal(Vector(s"$runPath/data")) // the single live segment
         tombs = None // all folded (compactTs = lastWriteTs leaves no residual)
     }
@@ -1438,7 +1460,7 @@ final class Collection private (
         else {
           val snapPath = s"$path/_lobs/snap-${nextTs()}"
           kept.write.parquet(snapPath)
-          // schema-supplied read-back (see readLayoutWritten)
+          // schema-supplied read-back (see SegRecord): no footer job
           lobSealed = Some(spark.read.schema(kept.schema).parquet(snapPath))
           lobGrowing = None // folded into the snapshot
           repin() // residency moves from the superseded store to the snapshot
@@ -2073,9 +2095,6 @@ final class Collection private (
     }
     (dataDead ++ lobDead ++ snapDead).foreach(p =>
       p.getFileSystem(conf).delete(p, true))
-    // swept segments leave the stats registry too (stale introspection)
-    val deadSet = dataDead.map(p => qualified(p.toString)).toSet
-    segStatsReg.keySet().removeIf(k => deadSet.contains(qualified(carrier(k))))
     Map(
       "data_deleted" -> dataDead.size.toLong,
       "data_kept" -> (dataAll.size - dataDead.size).toLong,
@@ -2150,7 +2169,7 @@ final class Collection private (
       val genPath = s"$path/_lobs/gen-${nextTs()}"
       g.write.parquet(genPath)
       // schema-supplied read-back: we just wrote these files (see
-      // readLayoutWritten — skips the footer-inference job)
+      // SegRecord — skips the footer-inference job)
       val seg = spark.read.schema(g.schema).parquet(genPath)
       // residency moves to the grown store at the data reseal below
       lobSealed = Some(lobSealed.map(_.unionByName(seg)).getOrElse(seg))
@@ -2166,21 +2185,15 @@ final class Collection private (
       if (g.columns.contains(Collection.PartitionCol))
         g.write.partitionBy(Collection.PartitionCol).parquet(segPath)
       else g.write.parquet(segPath)
-      val seg = readLayoutWritten(segPath, g.schema)
-      // writer-side publish (MEP 20260602): the summary aggregates are
-      // extracted at seal time, never re-derived by a later consumer
-      // scan. Aggregated over the READ-BACK files, not the growing
-      // plan: `g` may carry un-checkpointed caller lineage (attached
-      // ingest functions, autoId zipWithIndex) that a second evaluation
-      // would re-run — and could diverge from the bytes just written;
-      // the fresh columnar files are both cheaper and authoritative.
-      locally {
-        import org.apache.hadoop.fs.Path
-        val fs = new Path(segPath)
-          .getFileSystem(spark.sessionState.newHadoopConf())
-        val bytes = fs.getContentSummary(new Path(segPath)).getLength
-        segStatsReg.put(segPath, computeSegStats(seg, bytes))
-      }
+      // writer-side publish (MEP 20260602): the summary aggregates,
+      // pk range included, are extracted at seal time, never re-derived
+      // by a later consumer scan. Aggregated over the READ-BACK files,
+      // not the growing plan: `g` may carry un-checkpointed caller
+      // lineage (attached ingest functions, autoId zipWithIndex) that a
+      // second evaluation would re-run — and could diverge from the
+      // bytes just written; the fresh columnar files are both cheaper
+      // and authoritative.
+      register(segPath, Some(g.schema)).stats
       // a loaded collection stays loaded across flushes (the reference
       // keeps serving from memory while handoff swaps segments)
       reseal(sealedSegments :+ segPath)
@@ -2194,17 +2207,14 @@ final class Collection private (
   // 20260602-segment_summary_metadata.md: aggregate metrics extracted
   // once at the point of data generation and persisted as first-class
   // fields, so scheduling/introspection reads consume scalars instead
-  // of re-scanning). Collected EAGERLY at flush (the tail is in memory
-  // — the writer-side publish); compaction outputs and opened layouts
-  // back-fill LAZILY on first consumer read (the MEP's opportunistic
-  // migration — an eager post-write scan would double the rewrite
-  // cost for a value nobody may ask for). Sealed paths are immutable,
-  // so entries never invalidate.
+  // of re-scanning). Each live segment's summary is its record's
+  // `stats` (see SegRecord): forced at flush (the writer-side
+  // publish), computed on first consumer read for compaction outputs
+  // and opened layouts (the MEP's opportunistic migration — an eager
+  // post-write scan would double the rewrite cost for a value nobody
+  // may ask for).
   final case class SegmentStats(rows: Long, bytes: Long, tsFrom: Long,
       tsTo: Long, tsQuantiles: Seq[Long], nullCounts: Map[String, Long])
-
-  private val segStatsReg =
-    new java.util.concurrent.ConcurrentHashMap[String, SegmentStats]()
 
   /** One-pass summary of a sealed frame: row count, ts range, the five
     * 20/40/60/80/100 ts percentiles (the compaction trigger's expiry
@@ -2212,9 +2222,12 @@ final class Collection private (
     * column the segment physically carries; a MISSING key means the
     * field has no data in the segment (added by DDL after the seal)
     * and consumers must treat every row as null for it, exactly the
-    * MEP's NullCounts presence contract.
+    * MEP's NullCounts presence contract. The same aggregate yields the
+    * pk [min, max] the pk pruning reads (None when the segment is
+    * empty).
     */
-  private def computeSegStats(df: DataFrame, bytes: Long): SegmentStats = {
+  private def summarize(df: DataFrame, bytes: Long)
+      : (SegmentStats, Option[(Any, Any)]) = {
     val dataCols = df.columns.filterNot(c =>
       c == schema.tsField || c == Collection.PartitionCol)
     val aggs = Seq(
@@ -2223,54 +2236,25 @@ final class Collection private (
       max(col(schema.tsField)).as("_t"),
       percentile_approx(col(schema.tsField),
         array(lit(0.2), lit(0.4), lit(0.6), lit(0.8), lit(1.0)),
-        lit(1000)).as("_q")) ++
+        lit(1000)).as("_q"),
+      min(col(schema.pkField)).as("_pmin"),
+      max(col(schema.pkField)).as("_pmax")) ++
       dataCols.map(c => sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"_nc_$c"))
     val r = df.agg(aggs.head, aggs.tail: _*).head()
     val rows = r.getLong(0)
-    if (rows == 0L) SegmentStats(0L, bytes, 0L, 0L, Nil, Map.empty)
-    else SegmentStats(rows, bytes, r.getLong(1), r.getLong(2),
+    if (rows == 0L) (SegmentStats(0L, bytes, 0L, 0L, Nil, Map.empty), None)
+    else (SegmentStats(rows, bytes, r.getLong(1), r.getLong(2),
       r.getSeq[Long](3),
-      dataCols.map(c => c -> r.getAs[Long](s"_nc_$c")).toMap)
+      dataCols.map(c => c -> r.getAs[Long](s"_nc_$c")).toMap),
+      if (r.isNullAt(4)) None else Some((r.get(4), r.get(5))))
   }
-
-  // light ts-from probe for the READ-path ts prune: a ts-column-only
-  // min scan (or a free read of an already-published summary), NOT the
-  // full summary back-fill — a first time-travel read over an opened
-  // layout must not pay per-column null counts and quantiles just to
-  // plan. None = empty segment.
-  private val segTsFrom =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[Long]]()
-
-  private def segmentTsFrom(p: String): Option[Long] =
-    segTsFrom.computeIfAbsent(p, { path =>
-      Option(segStatsReg.get(path)) match {
-        case Some(st) => if (st.rows == 0L) None else Some(st.tsFrom)
-        case None =>
-          val r = GraftSession.normalizeTs(
-            readLayout(path), Set(schema.tsField))
-            .agg(min(col(schema.tsField))).head()
-          if (r.isNullAt(0)) None else Some(r.getLong(0))
-      }
-    })
-
-  /** The registry read with lazy back-fill for paths sealed before this
-    * session (opened layouts) or by compaction rewrites.
-    */
-  private def statsFor(p: String): SegmentStats =
-    segStatsReg.computeIfAbsent(p, { path =>
-      import org.apache.hadoop.fs.Path
-      val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-      val bytes = fs.getContentSummary(new Path(path)).getLength
-      computeSegStats(GraftSession.normalizeTs(
-        readLayout(path), Set(schema.tsField)), bytes)
-    })
 
   /** The per-segment summaries, keyed by segment path (GetSegmentsInfo's
     * Statistics view — rows/bytes/ts-range/quantiles/null-counts).
     */
   def segmentStatistics: Map[String, SegmentStats] = {
     requirePriv("GetStatistics")
-    sealedSegments.map(p => p -> statsFor(p)).toMap
+    sealedSegments.map(p => p -> recordOf(p).stats).toMap
   }
 
   /** Effective (non-null) sealed rows for one field — the MEP's
@@ -2279,7 +2263,7 @@ final class Collection private (
     */
   def effectiveRows(field: String): Long =
     sealedSegments.map { p =>
-      val st = statsFor(p)
+      val st = recordOf(p).stats
       st.rows - st.nullCounts.getOrElse(field, st.rows)
     }.sum
 
@@ -2293,7 +2277,7 @@ final class Collection private (
   def expiredFraction(nowTs: Long, ttlTicks: Long): Double = {
     val cutoff = nowTs - ttlTicks
     val weighted = sealedSegments.map { p =>
-      val st = statsFor(p)
+      val st = recordOf(p).stats
       val pcts = Seq(0.2, 0.4, 0.6, 0.8, 1.0)
       val qualifying = st.tsQuantiles.zip(pcts).takeWhile(_._1 <= cutoff)
       // one bucket down: the fraction BELOW the last qualifying quantile
@@ -2302,7 +2286,7 @@ final class Collection private (
         else pcts(qualifying.size - 1)
       frac * st.rows
     }.sum
-    val total = sealedSegments.map(statsFor(_).rows).sum
+    val total = sealedSegments.map(recordOf(_).stats.rows).sum
     if (total == 0L) 0.0 else weighted / total
   }
 
@@ -2316,36 +2300,15 @@ final class Collection private (
   // ---- file-level pk segment pruning (reference MEP
   // 20260324-segment_filter_pk_predicate_pruning.md: the delegator
   // drops segments from the dispatch list via pk min/max before any
-  // kernel runs). Per-segment pk [min,max], computed lazily on first
-  // pk-anchored read with a pk-column-only scan and cached forever —
-  // a sealed segment directory is immutable (flush/compact/force-merge
-  // always seal into FRESH paths), so the cache never invalidates.
-  private val segPkStats =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[(Any, Any)]]()
-
-  private def segmentPkRange(p: String): Option[(Any, Any)] =
-    segPkStats.computeIfAbsent(p, { path =>
-      val r = readLayout(path)
-        .agg(min(col(schema.pkField)), max(col(schema.pkField))).head()
-      if (r.isNullAt(0)) None else Some((r.get(0), r.get(1)))
-    })
-
-  // per-segment pk BLOOM (the other half of the reference's
-  // pkoracle.Candidate — MEP 20260324: "bloom filter plus min/max
-  // range can prove a segment cannot contain the target PKs"): point
-  // and IN domains consult it AFTER the range check, pruning
-  // interleaved pk layouts whose [min,max] overlap every segment.
-  // False positives only (a kept-but-empty segment), never false
-  // negatives — Spark's sketch is deterministic, so decisions
-  // reproduce across runs. Built lazily per immutable path.
-  private val segPkBloom = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.util.sketch.BloomFilter]()
-
-  private def pkBloomFor(p: String): org.apache.spark.util.sketch.BloomFilter =
-    segPkBloom.computeIfAbsent(p, { path =>
-      readLayout(path).stat.bloomFilter(
-        schema.pkField, math.max(statsFor(path).rows, 1L), 0.001)
-    })
+  // kernel runs). The pk [min,max] is part of each segment record's
+  // summary — published at flush, computed once on first read for a
+  // compaction output or opened root. The record's pk BLOOM (the other
+  // half of the reference's pkoracle.Candidate) is consulted by point
+  // and IN domains AFTER the range check, pruning interleaved pk
+  // layouts whose [min,max] overlap every segment. False positives
+  // only (a kept-but-empty segment), never false negatives — Spark's
+  // sketch is deterministic, so decisions reproduce across runs. Both
+  // live as long as the segment is live.
 
   /** A pk literal is bloom-checkable only when its runtime type matches
     * the pk column's (a mismatched probe would answer an arbitrary
@@ -2363,19 +2326,20 @@ final class Collection private (
     * pkFilterTermExpr evaluation order.
     */
   private def segmentMayContain(p: String, d: graft.operators.PkPruning.Domain)
-      : Boolean =
-    segmentPkRange(p) match {
+      : Boolean = {
+    val rec = recordOf(p)
+    rec.pkRange match {
       case None => false // an empty segment holds no pk
       case Some((mn, mx)) =>
         graft.operators.PkPruning.overlaps(d, mn, mx) && (d match {
           case graft.operators.PkPruning.Points(vs)
               if vs.nonEmpty && vs.size <= graft.operators.PkPruning.MaxPoints &&
                 vs.forall(pkLiteralMatches) =>
-            val bloom = pkBloomFor(p)
-            vs.exists(bloom.mightContain)
+            vs.exists(rec.pkBloom.mightContain)
           case _ => true // intervals / oversized lists: range check only
         })
     }
+  }
 
   /** The sealed segments a read must scan: those whose pk range can hold
     * rows of `d` — None when pruning removes nothing (the caller keeps
@@ -2394,8 +2358,10 @@ final class Collection private (
         // ts-range prune (MEP 20260602 consumers): a time-travel read
         // skips segments sealed entirely AFTER the read ts — every row
         // in them is invisible at readTs by the MVCC cut anyway
-        val tsOk = tsBound.forall(bound =>
-          segmentTsFrom(p).exists(_ <= bound))
+        val tsOk = tsBound.forall { bound =>
+          val st = recordOf(p).stats
+          st.rows > 0L && st.tsFrom <= bound
+        }
         pkOk && tsOk
       }
       if (keep.size == segs.size) None else Some(keep)
@@ -2438,15 +2404,16 @@ final class Collection private (
     * directory, its RAW row count and on-disk bytes. Raw = pre-MVCC
     * (includes superseded row versions), exactly like the reference's
     * per-binlog NumOfRows — the scheduling metric, not the visible
-    * count. Driver-side file-listing only; no data scan (row counts
-    * come from parquet footers via a count over the single segment).
+    * count. Read from the segment records' summaries: no scan for a
+    * flushed segment, one summary aggregate the first time for a
+    * compaction output or opened root.
     */
   def getPersistentSegmentInfo: Seq[SegmentInfo] = {
     requirePriv("GetStatistics")
-    // served from the summary registry (MEP 20260602) — scheduling
-    // reads consume persisted scalars, no per-call segment scan
+    // each segment record's summary (MEP 20260602): scheduling reads
+    // consume its scalars, computed at most once per live segment
     sealedSegments.map { p =>
-      val st = statsFor(p)
+      val st = recordOf(p).stats
       SegmentInfo(p, st.rows, st.bytes)
     }
   }
@@ -2461,17 +2428,17 @@ final class Collection private (
     * residency (memory-pinned when the collection is loaded), and
     * which vector indexes fully cover it — a segment is covered when
     * its newest row version predates the index build; later rows are
-    * served through the interim/tail path instead. Footer/stats-only
-    * jobs per segment; no full data scan.
+    * served through the interim/tail path instead. Sealed rows and
+    * coverage come from the segment records' summaries.
     */
   def getQuerySegmentInfo: Seq[QuerySegmentInfo] = {
     requirePriv("GetStatistics")
     val resident = if (loadedFlag) "Memory" else "Disk"
     val idx = indexes
     val sealedInfos = sealedSegments.map { p =>
-      // summary registry (MEP 20260602): rows and the coverage horizon
-      // (newest row version = tsTo) are persisted scalars, no re-scan
-      val st = statsFor(p)
+      // rows and the coverage horizon (newest row version = tsTo) come
+      // from the segment record's summary (MEP 20260602)
+      val st = recordOf(p).stats
       val covering = idx.collect {
         case (f, ist) if ist.buildTs >= st.tsTo => f
       }.toSeq.sorted
@@ -2492,15 +2459,15 @@ final class Collection private (
     * on-disk bytes, file count, and compaction LEVEL — L1 for
     * flush-sealed segments, L2 for compaction outputs (fold/run/merge
     * paths), the reference's L0/L1/L2 ladder with L0 absent because
-    * delete-deltas fold synchronously inside [[compact]]. Footer-only
-    * row counts; no data scan.
+    * delete-deltas fold synchronously inside [[compact]]. Rows and
+    * bytes come from the segment records' summaries.
     */
   def getSegmentsInfo: Seq[SegmentDetail] = {
     requirePriv("GetStatistics")
     import org.apache.hadoop.fs.Path
     val conf = spark.sessionState.newHadoopConf()
     sealedSegments.map { p =>
-      val st = statsFor(p) // summary registry (MEP 20260602), no re-scan
+      val st = recordOf(p).stats
       val fs = new Path(p).getFileSystem(conf)
       val numFiles = fs.getContentSummary(new Path(p)).getFileCount.toInt
       // compaction outputs seal under fold-*/run-*/merge-* directories
@@ -2517,12 +2484,6 @@ final class Collection private (
     }
   }
 
-  /** Newest row version inside one sealed segment — the coverage
-    * horizon a per-segment index comparison needs. Served from the
-    * summary registry (MEP 20260602).
-    */
-  private def segmentMaxTs(p: String): Long = statsFor(p).tsTo
-
   /** ListIndexedSegment (reference: impl.go ListIndexedSegment:6207,
     * the feder introspection API): the sealed segments FULLY COVERED by
     * `field`'s index — every row version in the segment predates the
@@ -2534,7 +2495,9 @@ final class Collection private (
     requirePriv("IndexDetail")
     val st = indexes.getOrElse(field, throw new NoSuchElementException(
       s"no index on field '$field'"))
-    sealedSegments.filter(p => st.buildTs >= segmentMaxTs(p))
+    // covered = the segment's newest row version (its summary's tsTo)
+    // predates the build
+    sealedSegments.filter(p => st.buildTs >= recordOf(p).stats.tsTo)
   }
 
   final case class SegmentIndexData(path: String, field: String,
@@ -2551,7 +2514,7 @@ final class Collection private (
       s"no index on field '$field'"))
     listIndexedSegment(field).map { p =>
       SegmentIndexData(p, field, "IVF_FLAT", st.model.nlist, st.buildTs,
-        statsFor(p).rows) // summary registry, no re-scan
+        recordOf(p).stats.rows)
     }
   }
 
@@ -2655,7 +2618,10 @@ final class Collection private (
         if (g.size == 1) g.head._1
         else {
           val dst = s"$path/merge-${nextTs()}-$i"
-          sealedOf(g.map(_._1)).foreach(_.write.parquet(dst))
+          sealedOf(g.map(_._1)).foreach { merged =>
+            merged.write.parquet(dst)
+            register(dst, Some(merged.schema))
+          }
           dst
         }
       })
@@ -4919,19 +4885,6 @@ object Collection {
   /** Tag column carrying each row's named partition. */
   val PartitionCol = "_partition"
 
-  /** Read a sealed layout directory, repairing the hive-recovered
-    * partition tag's type (directory values parse as their narrowest
-    * type; the tag column is declared string).
-    *
-    * An ENGINE-WRITTEN layout root (flush `seg-<ts>` dirs, patch-fold
-    * `fold-<ts>` dirs, compaction `run-<ts>` dirs) is read with
-    * supersession honored: a fold/run rewrite REPLACED every earlier
-    * dir when it was written (`reseal(Vector(rewrite))`), so
-    * reopening reads the newest rewrite plus only the segments flushed
-    * after it — reading superseded dirs too would both trip Spark's
-    * mixed-structure partition discovery and resurrect pre-rewrite row
-    * versions that share their timestamps with the rewritten ones.
-    */
   /** The CONCRETE live directories a layout root resolves to AT THIS
     * MOMENT — a plain dir resolves to itself; an engine-written root
     * resolves to the newest fold/run rewrite plus segments flushed
@@ -4967,6 +4920,26 @@ object Collection {
     }
   }
 
+  /** Read a sealed layout directory, repairing the hive-recovered
+    * partition tag's type: partition directory values are NAMES, never
+    * numbers — an all-digit tenant id ("123" or "0123", legal per the
+    * reference's validatePartitionTag, proxy/util.go:353-358) written
+    * as `_partition=0123` would otherwise be type-inferred back as int
+    * 123 and break the sealed∪growing union. The fix is a RE-READ with
+    * an explicit user schema: Spark then parses each partition value
+    * from the RAW directory string under the declared StringType, so
+    * non-canonical numerics ("0123", "1e5") survive byte-exact — a
+    * post-hoc cast of the inferred int would not.
+    *
+    * An ENGINE-WRITTEN layout root (flush `seg-<ts>` dirs, patch-fold
+    * `fold-<ts>` dirs, compaction `run-<ts>` dirs) is read with
+    * supersession honored: a fold/run rewrite REPLACED every earlier
+    * dir when it was written (`reseal(Vector(rewrite))`), so
+    * reopening reads the newest rewrite plus only the segments flushed
+    * after it — reading superseded dirs too would both trip Spark's
+    * mixed-structure partition discovery and resurrect pre-rewrite row
+    * versions that share their timestamps with the rewritten ones.
+    */
   private[graft] def readLayoutAt(spark: SparkSession, path: String): DataFrame = {
     import org.apache.spark.sql.types.{StringType, StructType}
     def readPlain(p: String): DataFrame = {

@@ -120,6 +120,9 @@ class CollectionConcurrencySpec extends SparkSpec {
     val pool = Executors.newFixedThreadPool(3)
     val start = new CountDownLatch(1)
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    // readers start after the first drop: before it, the original grp
+    // values are the correct answer, not a half-applied DDL
+    val firstDrop = new CountDownLatch(1)
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
     def worker(body: => Unit): Unit = {
       pool.submit(new Runnable {
@@ -134,6 +137,7 @@ class CollectionConcurrencySpec extends SparkSpec {
     worker {
       (0 until 6).foreach { i =>
         c.dropField("grp")
+        firstDrop.countDown()
         Thread.sleep(3)
         c.addCollectionField("grp", -1L)
         Thread.sleep(3)
@@ -144,6 +148,7 @@ class CollectionConcurrencySpec extends SparkSpec {
     // fully masked (-1 for all pre-DDL rows) — never original values
     (0 until 2).foreach { _ =>
       worker {
+        firstDrop.await(60, TimeUnit.SECONDS)
         while (!stop.get()) {
           val v = c.readView()
           if (v.columns.contains("grp")) {

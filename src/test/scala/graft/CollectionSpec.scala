@@ -670,6 +670,36 @@ class CollectionSpec extends SparkSpec {
     assert(c.count() == 50, "close kept serving the partition scope")
   }
 
+  test("segment records cover exactly the live segments through flush, compact, forceMerge and sweep") {
+    val c = Collection.create(spark,
+      CollectionSchema(pkField = "pk", vectorFields = Map("emb" -> 4)))
+    val dir = "/tmp/graft_test_segrec_" + System.nanoTime()
+    var flushed = 0L
+    def coherent(step: String): Unit = {
+      // a pk read fills the live records' summaries and blooms
+      assert(c.count("pk in [5, 15, 25, 35, 45]") == flushed, step)
+      assert(c.segmentRecordDirs == c.plannedSegments("").toSet,
+        s"$step: records ${c.segmentRecordDirs} vs live ${c.plannedSegments("")}")
+    }
+    def flushRows(step: String): Unit = {
+      c.insert(mkRows(flushed * 10L until flushed * 10L + 10L))
+      c.flush(dir)
+      flushed += 1
+      coherent(step)
+    }
+    (1 to 3).foreach(i => flushRows(s"flush $i"))
+    c.deletePks(Seq(0L))
+    c.compact(dir)
+    coherent("compact")
+    (4 to 5).foreach(i => flushRows(s"flush $i"))
+    c.forceMerge(dir, 2048)
+    assert(c.plannedSegments("").size == 1)
+    coherent("forceMerge")
+    c.retentionSweep(dir)
+    coherent("retentionSweep")
+    assert(c.count() == 49L)
+  }
+
   test("ignore_growing serves sealed segments only") {
     val c = Collection.create(spark,
       CollectionSchema(pkField = "pk", vectorFields = Map("emb" -> 4)))

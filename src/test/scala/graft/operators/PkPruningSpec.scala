@@ -198,5 +198,37 @@ class PkPruningSpec extends SparkSpec {
     c.flush(path)
     assert(c.query("pk == 150", Seq("s")).as[String].collect().toList
       == List("post"))
+    // compaction output (its pk range is computed on first read) plus one
+    // more disjoint segment
+    c.insert((160L until 170L).map(i => (i, i % 7, s"v$i")).toDF("pk", "grp", "s"))
+    c.flush(path)
+    c.delete("pk == 165")
+    c.compact(path)
+    c.insert((500L until 510L).map(i => (i, i % 7, s"v$i")).toDF("pk", "grp", "s"))
+    c.flush(path)
+    def exact(coll: Collection, newPk: Long, total: Long): Unit = {
+      val Seq(compacted, fresh) = coll.plannedSegments("")
+      assert(coll.plannedSegments("pk == 150") == Seq(compacted))
+      assert(coll.plannedSegments(s"pk == $newPk") == Seq(fresh))
+      assert(coll.plannedSegments(s"pk in [160, $newPk]") == Seq(compacted, fresh))
+      assert(coll.plannedSegments("160 <= pk < 170") == Seq(compacted))
+      assert(coll.plannedSegments("pk == 50").isEmpty) // truncated and compacted away
+      assert(coll.query("pk == 150", Seq("s")).as[String].collect().toList
+        == List("post"))
+      assert(coll.query(s"pk == $newPk", Seq("s")).as[String].collect().toList
+        == List(s"v$newPk"))
+      assert(coll.count(s"pk in [150, 165, 169, $newPk, 999]") == 3L)
+      assert(coll.count("160 <= pk < 170") == 9L)
+      assert(coll.count("pk >= 160") == total - 1L)
+      assert(coll.count() == total)
+    }
+    exact(c, 505L, 20L)
+    // an opened root is one live segment; a flush under it adds a second
+    // that the root's frame must not also read
+    val reopened = Collection.open(spark, CollectionSchema(pkField = "pk"), path)
+    reopened.insert((700L until 710L).map(i => (i, i % 7, s"v$i")).toDF("pk", "grp", "s"))
+    reopened.flush(path)
+    assert(reopened.plannedSegments("pk == 505") == reopened.plannedSegments("pk == 150"))
+    exact(reopened, 705L, 30L)
   }
 }
