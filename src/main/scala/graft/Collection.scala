@@ -1053,12 +1053,6 @@ final class Collection private (
     growing = Some(growing
       .map(_.unionByName(withPk, allowMissingColumns = evolved)).getOrElse(withPk))
     logChange("insert", withPk)
-    // growing-segment interim index (reference IVFFLAT_CC,
-    // segcore/IndexConfigGenerator.cpp:37): batches arriving after an
-    // index build are centroid-assigned ON INGEST against the sealed
-    // index's codebook (map-only, no retrain) and cached per batch, so
-    // searchIndexed probe-prunes the tail instead of brute-forcing it
-    assignInterim(withPk)
     lastWriteTs = ts
     // seal-policy check (capacity / lifetime): rows are counted only
     // while a policy is installed, so the extra action is opt-in
@@ -1320,21 +1314,6 @@ final class Collection private (
     tombs match {
       case None => () // nothing to fold
       case Some(t) =>
-        // folded tombstones vanish from `tombs`, but clustered index
-        // layouts built BEFORE those deletes still physically contain the
-        // rows — record the folded pks per index so searchIndexed's
-        // delete-bitset mask survives compaction (the reference keeps the
-        // delete bitset on the indexed segment for the same reason)
-        if (indexes.nonEmpty) {
-          val foldedPks = t
-            .select(col(schema.pkField), col(schema.tsField)).localCheckpoint(true)
-          indexes = indexes.map { case (f, st) =>
-            val mine = foldedPks.filter(col(schema.tsField) > st.buildTs)
-              .select(col(schema.pkField))
-            f -> st.copy(foldedTombPks =
-              Some(st.foldedTombPks.map(_.unionByName(mine)).getOrElse(mine)))
-          }
-        }
         // each compaction runs in a fresh run directory: overwriting a
         // directory the live sealed source reads from is illegal in
         // Spark (and the reference likewise seals into new segment files)
@@ -2127,8 +2106,7 @@ final class Collection private (
     colPatches = Map.empty // every patched row is cut at the horizon
     indexes.valuesIterator.foreach(releaseIndexState)
     indexes = Map.empty
-    changeLog = None
-    cdcApplied = None
+    changeLog = Vector.empty
     lastWriteTs = ts
     ts
   }
@@ -2428,7 +2406,7 @@ final class Collection private (
     * residency (memory-pinned when the collection is loaded), and
     * which vector indexes fully cover it — a segment is covered when
     * its newest row version predates the index build; later rows are
-    * served through the interim/tail path instead. Sealed rows and
+    * centroid-assigned per search instead. Sealed rows and
     * coverage come from the segment records' summaries.
     */
   def getQuerySegmentInfo: Seq[QuerySegmentInfo] = {
@@ -2487,9 +2465,9 @@ final class Collection private (
   /** ListIndexedSegment (reference: impl.go ListIndexedSegment:6207,
     * the feder introspection API): the sealed segments FULLY COVERED by
     * `field`'s index — every row version in the segment predates the
-    * build, so the indexed path serves it without the interim/tail
-    * fallback. Same coverage rule [[getQuerySegmentInfo]] reports
-    * per-segment.
+    * build, so the build's cluster map covers every row in it and none
+    * is centroid-assigned at search time. Same coverage rule
+    * [[getQuerySegmentInfo]] reports per-segment.
     */
   def listIndexedSegment(field: String): Seq[String] = {
     requirePriv("IndexDetail")
@@ -4188,39 +4166,27 @@ final class Collection private (
       outputFields.filterNot(_ == schema.pkField))
   }
 
-  /** `foldedTombPks`: pks whose post-build deletes were folded away by
-    * [[compact]] — the tombstones are gone from `tombs`, but the
-    * clustered layout still physically holds the rows, so the mask must
-    * persist with the index (the on-segment delete bitset analogue).
-    */
-  /** `interim`: the growing-tail interim index (IVFFLAT_CC analogue) —
-    * post-build inserts centroid-assigned on ingest, all versions; the
-    * read path narrows it to current-visible rows by (pk, ts).
+  /** A built vector index: the IVF codebook and the build's cluster map,
+    * one `(pk, ts, _cluster)` row per row version the build's view held
+    * and no copy of the data. `buildTs` is the write ts the build read
+    * at; visible rows with a newer version ts are the pending rows
+    * [[describeIndex]] reports.
     */
   private final case class IndexState(
       model: graft.operators.IvfIndex.Model,
-      clustered: DataFrame,
-      buildTs: Long,
-      foldedTombPks: Option[DataFrame] = None,
-      interim: Option[DataFrame] = None,
-      // the individually-persisted per-batch assignment frames that make
-      // up `interim` — kept so a rebuild/drop/truncate can unpersist them
-      // (unpersisting the union plan alone would leak its constituents)
-      interimParts: Seq[DataFrame] = Nil)
+      clusterMap: DataFrame,
+      buildTs: Long)
   @volatile private var indexes: Map[String, IndexState] = Map.empty
 
-  /** Free every executor cache block an index state holds. Dropping the
-    * Map reference alone leaks the persisted clustered layout and each
-    * per-batch interim frame for the life of the session.
+  /** Free the executor cache blocks an index state holds. Dropping the
+    * Map reference alone leaks the persisted cluster map for the life
+    * of the session.
     */
-  private def releaseIndexState(st: IndexState): Unit = {
-    st.clustered.unpersist()
-    st.interimParts.foreach(_.unpersist())
-  }
+  private def releaseIndexState(st: IndexState): Unit = st.clusterMap.unpersist()
 
   /** Drop a field's index (reference `DropIndex`), releasing its cached
-    * layout and interim assignments. Subsequent searchIndexed calls fail
-    * until createIndex runs again.
+    * cluster map. Subsequent searchIndexed calls fail until createIndex
+    * runs again.
     */
   def dropIndex(vectorField: String): Unit = stateLock.synchronized {
     indexes.get(vectorField).foreach(releaseIndexState)
@@ -4229,11 +4195,11 @@ final class Collection private (
   }
 
   /** Release every executor cache block this collection holds —
-    * indexes, interim assignments, every load pin, and the facade
-    * memos. Called by [[Collection.dropCollection]]; the facade object
-    * itself stays usable, NotLoad exactly as after [[release]] (no
-    * partition or field scope survives), matching DropCollection's
-    * resource-release half.
+    * index cluster maps, every load pin, and the facade memos. Called
+    * by [[Collection.dropCollection]]; the facade object itself stays
+    * usable, NotLoad exactly as after [[release]] (no partition or
+    * field scope survives), matching DropCollection's resource-release
+    * half.
     */
   def close(): Unit = mutate {
     indexes.valuesIterator.foreach(releaseIndexState)
@@ -4241,40 +4207,14 @@ final class Collection private (
     unload()
   }
 
-  /** Centroid-assign newly-ingested rows into each index's interim
-    * (growing-tail) layout — shared by [[insert]] and [[applyChanges]]
-    * so CDC-applied rows are probe-pruned exactly like direct inserts
-    * (a tail row absent from the interim would silently vanish from
-    * searchIndexed results, since the brute-force fallback only runs
-    * when no interim exists at all).
-    */
-  private def assignInterim(rows: DataFrame): Unit = {
-    indexes = indexes.map { case (f, st) =>
-      if (!rows.columns.contains(f)) f -> st
-      else {
-        val asg = rows
-          .withColumn("_cluster", graft.operators.IvfIndex.assign(st.model, col(f)))
-          .persist() // lazy: materializes on first search, reused after
-        f -> st.copy(
-          interim = Some(st.interim.map(_.unionByName(asg)).getOrElse(asg)),
-          interimParts = st.interimParts :+ asg)
-      }
-    }
-  }
-
-  /** Test hook: the interim (growing-tail) cluster assignments for a
-    * field's index, if any post-build inserts landed.
-    */
-  private[graft] def interimLayout(vectorField: String): Option[DataFrame] =
-    indexes.get(vectorField).flatMap(_.interim)
-
   /** DescribeIndex (reference: `impl.go DescribeIndex` →
     * `indexpb.IndexInfo{IndexedRows, TotalRows, PendingIndexRows}`;
     * integration suite tests/integration/indexstat asserts
     * IndexedRows == TotalRows once the build catches up). Indexed rows
-    * = the persisted clustered layout; pending rows = currently-visible
-    * rows newer than the build, served by the interim index (or brute
-    * force) until the next build folds them in.
+    * = the rows of the build's cluster map; pending rows =
+    * currently-visible rows newer than the build, which
+    * [[searchIndexed]] centroid-assigns per call until the next build
+    * maps them.
     */
   def describeIndex(vectorField: String): Collection.IndexDescription = {
     val st = indexes.getOrElse(vectorField, throw new NoSuchElementException(
@@ -4284,7 +4224,7 @@ final class Collection private (
       field = vectorField,
       indexType = "IVF_FLAT",
       nlist = st.model.nlist,
-      indexedRows = st.clustered.count(), // persisted layout → cheap re-count
+      indexedRows = st.clusterMap.count(), // persisted map → cheap re-count
       pendingRows = visible.filter(col(schema.tsField) > st.buildTs).count(),
       totalRows = visible.count(),
       buildTs = st.buildTs)
@@ -4296,7 +4236,7 @@ final class Collection private (
   /** GetIndexStatistics (reference: impl.go GetIndexStatistics:2199 —
     * DescribeIndex's info plus the serving-state counters in one call):
     * state, indexed/total/pending rows. Pending = rows written after
-    * the build, served through the interim/tail path until a rebuild.
+    * the build, centroid-assigned per search until a rebuild.
     */
   def getIndexStatistics(field: String): IndexStatistics = {
     requirePriv("IndexDetail")
@@ -4341,15 +4281,6 @@ final class Collection private (
   def describeIndexProperties(vectorField: String): Map[String, String] =
     indexProps.getOrElse(vectorField, Map.empty)
 
-  /** CreateIndex (reference DDL → datacoord index build): train an IVF
-    * codebook on the collection's visible view and persist the
-    * clustered layout. Writes AFTER the build don't invalidate it — the
-    * reference's exact read model applies: the indexed (sealed) side is
-    * searched through the index with post-build changes masked out (the
-    * delete-bitset analogue), the post-build tail is served through the
-    * interim index its inserts built on ingest (IVFFLAT_CC — brute force
-    * only if no insert landed), and the two hit lists reduce together.
-    */
   /** The indexparamcheck field family for a SCALAR field, derived from
     * the schema — TEXT declarations (including DDL-added ones) first,
     * declared JSON fields next, the physical Spark type otherwise. The
@@ -4406,6 +4337,13 @@ final class Collection private (
       readViewUnscoped(), schema.pkField, field)
   }
 
+  /** CreateIndex (reference DDL → datacoord index build): train an IVF
+    * codebook on the collection's visible view and persist its cluster
+    * map — `(pk, ts, _cluster)` per visible row version, no vectors.
+    * Writes AFTER the build don't invalidate it: [[searchIndexed]] looks
+    * up the clusters of the row versions the build saw and assigns the
+    * rest per call. A rebuild replaces (and unpersists) the old map.
+    */
   def createIndex(vectorField: String, nlist: Int, trainSample: Int = 10000): Unit = {
     require(schema.vectorFields.contains(vectorField),
       s"$vectorField is not a vector field")
@@ -4436,17 +4374,29 @@ final class Collection private (
     // wrong results to every other user. RLS re-applies per query below.
     val view = readViewUnscoped()
     val model = IvfIndex.trainLocal(view, vectorField, nlist, maxTrainRows = trainSample)
-    val clustered = IvfIndex.layout(view, vectorField, model).persist()
-    clustered.count() // materialize the layout (the index build job)
+    val clusterMap = view.select(col(schema.pkField), col(schema.tsField),
+        IvfIndex.assign(model, col(vectorField)).as("_cluster"))
+      .persist()
+    clusterMap.count() // materialize the map (the index build job)
     stateLock.synchronized {
       indexes.get(vectorField).foreach(releaseIndexState) // rebuild frees the old build
-      indexes += vectorField -> IndexState(model, clustered, lastWriteTs)
+      indexes += vectorField -> IndexState(model, clusterMap, lastWriteTs)
     }
   }
 
   /** ANN search through the field's IVF index (reference
-    * SearchOnSealed + SearchOnGrowing + cross-segment reduce). With
-    * `nprobe = nlist` the result is exact (== [[search]]); smaller
+    * SearchOnSealed + SearchOnGrowing + reduce) over ONE visibility:
+    * the read view, the way the reference's vector-search node applies
+    * the MVCC node's bitset whether it searches a segment through an
+    * index or by brute force. Each visible row's cluster is looked up in
+    * the build's map by `(pk, ts)`; a version the build never saw
+    * (inserted, upserted or feed-applied later) is centroid-assigned by
+    * the same `assign` the build used, paying `nlist` centroid distances
+    * per call until a rebuild maps it. Vectors never change under one
+    * `(pk, ts)` ([[setField]] refuses vector fields), so a looked-up
+    * cluster is the one `assign` would give. MVCC, tombstones, TTL, load
+    * scope, RLS, patches, DDL and LOB resolve all come from the view.
+    * With `nprobe = nlist` the result is exact (== [[search]]); smaller
     * nprobe trades recall for pruning.
     */
   def searchIndexed(
@@ -4463,84 +4413,12 @@ final class Collection private (
     val st = indexes.getOrElse(vectorField,
       throw new IllegalStateException(s"no index on $vectorField — createIndex first"))
     val out = if (outputFields.nonEmpty) outputFields else Seq(schema.pkField)
-    val view = readView()
-    // rows whose CURRENT version postdates the index build (inserts +
-    // upserts) — they're served brute-force from the live view. CDC-
-    // applied rows keep the PRIMARY's timestamps, which can predate
-    // this collection's build ts, so for them post-build membership is
-    // decided by local ARRIVAL time, not version ts: a bounded
-    // broadcast semi-join against the applied feed (no cost at all on
-    // collections that never ingested a feed)
-    val tsTail = view.filter(col(schema.tsField) > st.buildTs)
-    val lateCdc = cdcApplied.map(_.filter(
-      col("_arrival") > st.buildTs && col(schema.tsField) <= st.buildTs))
-    val tail = lateCdc match {
-      case Some(cdc) => tsTail.unionByName(view.join(
-        broadcast(cdc.filter(col("_op") === "insert")
-          .select(col(schema.pkField), col(schema.tsField))),
-        Seq(schema.pkField, schema.tsField), "left_semi"))
-      case None => tsTail
-    }
-    // mask superseded/deleted pks out of the indexed layout (the
-    // delete-bitset analogue): any pk changed or tombstoned after build.
-    // CDC deletes join by arrival for the same reason as above — a
-    // feed-applied tombstone with an old origin ts must still mask the
-    // indexed version it kills
-    val tombPks = tombs.map(_.filter(col(schema.tsField) > st.buildTs)
-      .select(col(schema.pkField)))
-    val lateCdcDelPks = lateCdc.map(_.filter(col("_op") === "delete")
-      .select(col(schema.pkField)))
-    val changed = (tombPks.toSeq ++ lateCdcDelPks.toSeq ++ st.foldedTombPks.toSeq)
-      .foldLeft(tail.select(col(schema.pkField)))(_ unionByName _)
-    // rlsFilter here: the shared layout is unscoped, so the caller's
-    // policies apply at query time (the tail side came through readView
-    // and is already scoped). The collection.ttl property must mask the
-    // indexed layout too — search/query/count apply it via readView, and
-    // the two paths must agree on visibility.
-    val indexSide0 =
-      st.clustered.join(changed.distinct(), Seq(schema.pkField), "left_anti")
-    val indexSideTtl = propertyTtl match {
-      case Some(t) => indexSide0.filter(col(schema.tsField) > lit(lastWriteTs) - t)
-      case None    => indexSide0
-    }
-    // the partial-load scope gates the indexed layout too (the tail
-    // side rides readView and is already gated): with only some
-    // partitions loaded, indexed hits from unloaded partitions would
-    // make the two read paths disagree on visibility
-    val indexSideLoaded = loadedPartitions match {
-      case Some(set) if indexSideTtl.columns.contains(Collection.PartitionCol) =>
-        indexSideTtl.filter(
-          col(Collection.PartitionCol).isin(set.toSeq: _*))
-      case _ => indexSideTtl
-    }
-    // mutable-column patches must overlay the indexed layout too: a
-    // patched row whose version ts predates buildTs sits in neither
-    // `tail` nor `changed`, so without the overlay searchIndexed would
-    // serve stale pre-patch scalars while query/search via readView
-    // serve patched ones (the same index-vs-view agreement contract as
-    // the collection.ttl mask above). No-op when no patches exist.
-    val indexSide = applyColumnPatches(rlsFilter(indexSideLoaded), lit(lastWriteTs))
-    val idxHits = IvfIndex.search(indexSide, schema.pkField, vectorField, st.model,
+    val clustered = readView()
+      .join(st.clusterMap, Seq(schema.pkField, schema.tsField), "left")
+      .withColumn("_cluster",
+        coalesce(col("_cluster"), IvfIndex.assign(st.model, col(vectorField))))
+    IvfIndex.search(clustered, schema.pkField, vectorField, st.model,
       queries, "qid", "qvec", metric, k, nprobe, outputCols = out, roundTo = roundTo)
-    // tail side: serve through the interim index when ingest built one
-    // (probe-pruned like the sealed side); brute force only as fallback.
-    // The interim holds ALL post-build versions — the (pk, ts) semi-join
-    // against the scoped visible tail applies MVCC + RLS in one pass.
-    val tailHits = st.interim match {
-      case Some(asg) =>
-        val visibleAsg = applyColumnPatches(asg.join(
-          tail.select(col(schema.pkField), col(schema.tsField)),
-          Seq(schema.pkField, schema.tsField), "left_semi"), lit(lastWriteTs))
-        IvfIndex.search(visibleAsg, schema.pkField, vectorField, st.model,
-          queries, "qid", "qvec", metric, k, nprobe, outputCols = out, roundTo = roundTo)
-      case None =>
-        VectorSearch.topK(tail, schema.pkField, vectorField,
-          queries, "qid", "qvec", metric, k, outputCols = out, roundTo = roundTo)
-    }
-    // cross-segment reduce: hits already carry _score — re-reduce to k
-    VectorSearch.reduceTopK(
-      idxHits.drop("rank").unionByName(tailHits.drop("rank")),
-      schema.pkField, "qid", metric, k, out)
   }
 
   // ---- CDC / replication (reference: the CDC change feed + cluster
@@ -4550,22 +4428,18 @@ final class Collection private (
   // same tombstone semantics, no re-stamping. The log is the WAL
   // analogue: at deployment scale it would be the streaming sink the
   // WAL already feeds (Streaming.dedupedIngest), sharing this format.
-  @volatile private var changeLog: Option[DataFrame] = None
-  // (pk, ts, _op, _arrival) for every feed row this collection applied:
-  // arrival is the LOCAL tick of the apply, origin ts is the primary's.
-  // Bounded by the applied-feed volume (same order as changeLog).
-  @volatile private var cdcApplied: Option[DataFrame] = None
+  // One entry per logged write or applied feed. Only [[changesSince]]
+  // unions them, once per call: a union per write would grow one plan
+  // that every later write re-analyzes.
+  @volatile private var changeLog: Vector[DataFrame] = Vector.empty
 
   /** The ts of the most recent [[truncate]] (0 if never truncated) —
     * the earliest valid [[changesSince]] cursor.
     */
   def truncateTs: Long = truncateHorizon
 
-  private def logChange(op: String, rows: DataFrame): Unit = {
-    val entry = rows.withColumn("_op", lit(op))
-    changeLog = Some(changeLog
-      .map(_.unionByName(entry, allowMissingColumns = true)).getOrElse(entry))
-  }
+  private def logChange(op: String, rows: DataFrame): Unit =
+    changeLog :+= rows.withColumn("_op", lit(op))
 
   /** The change feed strictly after `sinceTs` (op ∈ insert|delete, rows
     * with their original write ts). Feed it to [[applyChanges]] on a
@@ -4578,37 +4452,36 @@ final class Collection private (
     if (sinceTs < truncateHorizon) throw new IllegalStateException(
       s"changesSince($sinceTs) predates a truncate at ts=$truncateHorizon — " +
         "re-seed the replica from a snapshot instead of the change feed")
-    changeLog match {
-      case Some(log) =>
-        val out = log.filter(col(schema.tsField) > sinceTs)
-        // TEXT-LOB payloads ship INLINE in the feed (the reference's
-        // CDC carries full row data): a hidden `$lob_` ref is
-        // meaningless outside THIS collection's blob store — a replica
-        // applying raw refs would silently resolve null. The replica's
-        // apply path re-externalizes into its own store; delete
-        // entries carry null refs and fall through the left join.
-        // The resolve is STRICT: after lobGc collects a superseded
-        // payload, a re-seed feed (sinceTs=0) can no longer reproduce
-        // the historical insert — raising here beats handing audit/ETL
-        // consumers silently-nulled payloads (the same loud-failure
-        // contract the truncate-horizon guard above gives row data).
-        // no store at all = resolve against an EMPTY canonical store:
-        // every surviving non-null ref takes the same loud dangling-ref
-        // path through ONE strict-resolve implementation
-        val store = lobStore.getOrElse {
-          import spark.implicits._
-          Seq.empty[(String, String)].toDF("_lob_ref", "_lob_payload")
-        }
-        (schema.textFields.keySet ++ dynamicTextFields.keySet)
-          .foldLeft(out) { (df, f) =>
-            val ref = Collection.lobRefCol(f)
-            if (df.columns.contains(ref))
-              graft.operators.Lob.resolveTextStrict(df, store, f, ref,
-                s"changesSince($sinceTs)")
-            else df
-          }
-      case None => throw new IllegalStateException("no writes logged yet")
+    val entries = changeLog
+    if (entries.isEmpty) throw new IllegalStateException("no writes logged yet")
+    val out = entries.reduceLeft(_.unionByName(_, allowMissingColumns = true))
+      .filter(col(schema.tsField) > sinceTs)
+    // TEXT-LOB payloads ship INLINE in the feed (the reference's
+    // CDC carries full row data): a hidden `$lob_` ref is
+    // meaningless outside THIS collection's blob store — a replica
+    // applying raw refs would silently resolve null. The replica's
+    // apply path re-externalizes into its own store; delete
+    // entries carry null refs and fall through the left join.
+    // The resolve is STRICT: after lobGc collects a superseded
+    // payload, a re-seed feed (sinceTs=0) can no longer reproduce
+    // the historical insert — raising here beats handing audit/ETL
+    // consumers silently-nulled payloads (the same loud-failure
+    // contract the truncate-horizon guard above gives row data).
+    // no store at all = resolve against an EMPTY canonical store:
+    // every surviving non-null ref takes the same loud dangling-ref
+    // path through ONE strict-resolve implementation
+    val store = lobStore.getOrElse {
+      import spark.implicits._
+      Seq.empty[(String, String)].toDF("_lob_ref", "_lob_payload")
     }
+    (schema.textFields.keySet ++ dynamicTextFields.keySet)
+      .foldLeft(out) { (df, f) =>
+        val ref = Collection.lobRefCol(f)
+        if (df.columns.contains(ref))
+          graft.operators.Lob.resolveTextStrict(df, store, f, ref,
+            s"changesSince($sinceTs)")
+        else df
+      }
   }
 
   /** Apply a primary's change feed to THIS collection (the replica):
@@ -4618,15 +4491,10 @@ final class Collection private (
     */
   def applyChanges(changes: DataFrame): Long = mutate {
     val pinned = changes.localCheckpoint(true)
-    // local arrival tick: feed rows keep their ORIGIN timestamps (for
-    // LWW convergence), so index-vs-tail splits need to know when they
-    // landed HERE — nextTs() is strictly greater than every earlier
-    // buildTs and ≤ every later one
+    // the apply is a local write and takes a local tick: feed rows keep
+    // their ORIGIN timestamps (LWW convergence), which can all predate
+    // this collection's own writes
     val arrivalTs = nextTs()
-    val cdcEntry = pinned
-      .select(col(schema.pkField), col(schema.tsField), col("_op"))
-      .withColumn("_arrival", lit(arrivalTs))
-    cdcApplied = Some(cdcApplied.map(_.unionByName(cdcEntry)).getOrElse(cdcEntry))
     val ins0 = pinned.filter(col("_op") === "insert").drop("_op")
     // keep partition tagging consistent with insert(): an untagged feed
     // (pre-partition primary) must not union a null column into growing
@@ -4643,12 +4511,8 @@ final class Collection private (
       else externalizeTextFields(ins1)
     val del = pinned.filter(col("_op") === "delete")
       .select(col(schema.pkField), col(schema.tsField))
-    if (!ins.isEmpty) {
+    if (!ins.isEmpty)
       growing = Some(growing.map(_.unionByName(ins, allowMissingColumns = true)).getOrElse(ins))
-      // CDC rows enter the interim index exactly like direct inserts —
-      // otherwise an indexed search silently drops them from the tail
-      assignInterim(ins)
-    }
     if (!del.isEmpty)
       tombs = Some(tombs.map(_.unionByName(del)).getOrElse(del))
     // mutable-column patch ops replicate like deletes: tiny (pk, ts,
@@ -4667,8 +4531,7 @@ final class Collection private (
     // ops + timestamps), so chained replication (replica-of-replica)
     // reproduces the full state — a leaf-only replica would otherwise
     // serve an empty/partial feed from changesSince
-    changeLog = Some(changeLog
-      .map(_.unionByName(pinned, allowMissingColumns = true)).getOrElse(pinned))
+    changeLog :+= pinned
     val feedMax = pinned.agg(max(col(schema.tsField))).head() match {
       case r if r.isNullAt(0) => 0L
       case r                  => r.getLong(0)
@@ -4676,9 +4539,9 @@ final class Collection private (
     var cur = tso.get()
     while (feedMax > cur && !tso.compareAndSet(cur, feedMax)) cur = tso.get()
     if (feedMax > lastWriteTs) lastWriteTs = feedMax
-    // the apply IS a local write: later index builds must carry a
-    // buildTs ≥ this arrival so the late-CDC split above excludes rows
-    // those builds already cover
+    // like any local write, the apply moves the write ts (the Strong
+    // read ts, the TTL clock and the next index build's buildTs) to its
+    // own tick
     if (arrivalTs > lastWriteTs) lastWriteTs = arrivalTs
     feedMax
   }

@@ -1209,9 +1209,10 @@ object LifecycleQueries {
       .orderBy(col("event_id"))
   }
 
-  /** Growing-tail interim index end-to-end (IVFFLAT_CC): seal the
+  /** Indexed search over post-build rows end to end: seal the
     * embeddings table, build an IVF index, then insert a shifted copy of
-    * the first 200 vectors as post-build tail; searchIndexed at
+    * the first 200 vectors as post-build tail (rows the build's cluster
+    * map does not hold, assigned at search time); searchIndexed at
     * nprobe = nlist is exact, so the hits must equal brute-force top-k
     * over the sealed ∪ tail union — which the oracle recomputes. Ties
     * (each tail vector duplicates a sealed one) break by pk ascending on

@@ -262,26 +262,30 @@ class CollectionSpec extends SparkSpec {
     assert(!pks.contains(8L) && !pks.contains(61L))
   }
 
-  test("growing-tail interim index: ingest assigns clusters, search probe-prunes the tail") {
+  test("post-build rows: indexed search probe-prunes them and stays exact at nprobe=nlist") {
     val c = fresh()
     c.createIndex("emb", nlist = 4, trainSample = 1000)
-    assert(c.interimLayout("emb").isEmpty) // nothing post-build yet
     c.insert(mkRows(100L until 140L))
     c.insert(mkRows(140L until 160L))
-    // both post-build batches are centroid-assigned on ingest
-    val asg = c.interimLayout("emb").get
-    assert(asg.count() == 60)
-    assert(asg.columns.contains("_cluster"))
-    val nClusters = asg.select($"_cluster").distinct().count()
-    assert(nClusters > 1 && nClusters <= 4) // genuinely spread over the codebook
-    // recall at practical nprobe: a tail row's own vector must come back
-    // at rank 1 (its assigned cluster IS the query's nearest centroid).
+    // recall at practical nprobe: a post-build row's own vector must come
+    // back at rank 1 (its cluster IS the query's nearest centroid).
     // pk 155: vec() aliases mod 97, and 155 % 97 = 58 collides with no
-    // sealed row (0-49) or other tail row — the match is unique.
+    // sealed row (0-49) or other post-build row — the match is unique.
     val qs = Seq((0L, vec(155))).toDF("qid", "qvec")
     val hits = c.searchIndexed("emb", qs, k = 3, nprobe = 1, metric = Metric.L2)
     assert(hits.filter($"rank" === 1).select($"pk").as[Long].head() == 155L)
-    // exhaustive probes == brute force, tail upserts/deletes included
+    // the post-build rows are probe-pruned, not brute-forced: with k
+    // covering every visible row, nprobe=1 still returns the query's own
+    // row and omits post-build rows that exact search returns
+    val all = c.count().toInt
+    val pruned = c.searchIndexed("emb", qs, k = all, nprobe = 1, metric = Metric.L2)
+      .select($"pk").as[Long].collect().toSet
+    val exact = c.search("emb", qs, k = all, metric = Metric.L2)
+      .select($"pk").as[Long].collect().toSet
+    val postBuild = (100L until 160L).toSet
+    assert(pruned.contains(155L))
+    assert((exact & postBuild).exists(pk => !pruned.contains(pk)))
+    // exhaustive probes == brute force, post-build upserts/deletes included
     c.upsert(Seq((110L, vec(999), "doc 110 v2", 0L)).toDF("pk", "emb", "txt", "grp"))
     c.delete("pk == 150")
     val qs2 = Seq((0L, vec(7)), (1L, vec(145))).toDF("qid", "qvec")
@@ -293,18 +297,16 @@ class CollectionSpec extends SparkSpec {
     assert(!got.map(_.getLong(2)).contains(150L))
   }
 
-  test("CDC-applied rows enter the interim index and surface in indexed search") {
+  test("CDC-applied rows surface in indexed search, probe-pruned like direct inserts") {
     val c = fresh()
     c.createIndex("emb", nlist = 4, trainSample = 1000)
-    // a direct post-build insert creates an interim — the regression
-    // scenario: CDC rows must then ALSO enter it, or searchIndexed's
-    // interim semi-join silently drops them (no brute-force fallback)
+    // post-build rows from both sources: a direct insert and a replicated
+    // feed whose rows carry the primary's timestamps
     c.insert(mkRows(100L until 110L))
     val primary = Collection.create(spark,
       CollectionSchema(pkField = "pk", vectorFields = Map("emb" -> 4)))
     primary.insert(mkRows(200L until 210L))
     c.applyChanges(primary.changesSince(0L))
-    assert(c.interimLayout("emb").get.count() == 20) // direct + CDC batches
     // pk 205: 205 % 97 = 11 collides with sealed pk 11 — query vec(203)
     // instead (203 % 97 = 9... also collides). Compare against brute
     // force over the same view, which is the exactness contract anyway.
@@ -316,6 +318,18 @@ class CollectionSpec extends SparkSpec {
     assert(got == want)
     // the CDC rows are genuinely reachable through the index
     assert(got.map(_.getLong(2)).exists(pk => pk >= 200L && pk < 210L))
+    // ...and probe-pruned: with k covering every visible row, nprobe=1
+    // returns the CDC row equal to the query and omits post-build rows
+    // that exact search returns
+    val all = c.count().toInt
+    val q1 = Seq((0L, vec(205))).toDF("qid", "qvec")
+    val pruned = c.searchIndexed("emb", q1, k = all, nprobe = 1, metric = Metric.L2)
+      .select($"pk").as[Long].collect().toSet
+    val exact = c.search("emb", q1, k = all, metric = Metric.L2)
+      .select($"pk").as[Long].collect().toSet
+    val postBuild = ((100L until 110L) ++ (200L until 210L)).toSet
+    assert(pruned.contains(205L))
+    assert((exact & postBuild).exists(pk => !pruned.contains(pk)))
   }
 
   test("changesSince refuses a cursor predating a truncate") {
