@@ -775,18 +775,31 @@ final class Collection private (
   private def namespacePredicate(keyNs: Option[String]): Option[Column] =
     keyNs.map(n => col("`" + Collection.NamespaceField + "`") === lit(n))
 
-  /** Namespace-scoped read view for the read paths that take no
-    * explicit partition list (range search, iterators, get, hybrid
-    * legs) — every read task resolves namespaces the same way
-    * (resolveNamespacePartitionNames runs in search, query, AND delete
-    * preExecute).
+  /** A read's resolved scope: the partitions it reads and, in key mode,
+    * the tenant its rows must carry. Only [[readScope]] makes one, so no
+    * facade read reaches a scoped view without its privilege check.
     */
-  private def nsView(namespace: Option[String],
-      level: ConsistencyLevel.Value = ConsistencyLevel.Strong,
-      pkDomain: Option[graft.operators.PkPruning.Domain] = None): DataFrame = {
-    val (effParts, keyNs) = namespaceScope(namespace, Nil)
-    val v = readView(level, partitionNames = effParts, pkDomain = pkDomain)
-    namespacePredicate(keyNs).map(v.filter).getOrElse(v)
+  private final class ReadScope(parts: Seq[String], keyNs: Option[String]) {
+    def view(level: ConsistencyLevel.Value = ConsistencyLevel.Strong,
+        ignoreGrowing: Boolean = false,
+        pkDomain: Option[graft.operators.PkPruning.Domain] = None): DataFrame = {
+      val v = readView(level, partitionNames = parts,
+        ignoreGrowing = ignoreGrowing, pkDomain = pkDomain)
+      namespacePredicate(keyNs).map(v.filter).getOrElse(v)
+    }
+  }
+
+  /** The read gate (the reference's privilege interceptor plus every
+    * read task's namespace preExecute): checks `priv` — RBAC and the
+    * database force-deny quota — then resolves the namespace scope.
+    * Every facade read and filter-delete takes its view from here, and
+    * runs it before any validation that can start a Spark job.
+    */
+  private def readScope(priv: String, namespace: Option[String],
+      partitionNames: Seq[String] = Nil): ReadScope = {
+    requirePriv(priv)
+    val (parts, keyNs) = namespaceScope(namespace, partitionNames)
+    new ReadScope(parts, keyNs)
   }
 
   /** Insert into a NAMED partition (reference Insert with
@@ -1077,9 +1090,8 @@ final class Collection private (
   def delete(filterExpr: String,
       params: Map[String, Any] = Map.empty,
       namespace: Option[String] = None): Long = mutate {
-    requirePriv("Delete")
     // task_delete.go:138 — deletes are namespace-checked and -scoped too
-    val (delParts, delKeyNs) = namespaceScope(namespace, Nil)
+    val scope = readScope("Delete", namespace)
     val ts = nextTs()
     // evaluate on the CURRENT VISIBLE VIEW, not raw versions: a predicate
     // matching only a superseded (upserted-over) version must not delete
@@ -1088,10 +1100,7 @@ final class Collection private (
     // against rows inserted later and delete them retroactively.
     // A pk-anchored delete (the reference's delete-by-pk shape) prunes
     // the sealed file list like any other pk read (MEP 20260324).
-    val view0 = readView(partitionNames = delParts,
-      pkDomain = pkDomainOf(filterExpr))
-    val view = namespacePredicate(delKeyNs).map(view0.filter).getOrElse(view0)
-    val victims = view
+    val victims = scope.view(pkDomain = pkDomainOf(filterExpr))
       .filter(compiled(filterExpr, params))
       .select(col(schema.pkField), lit(ts).as(schema.tsField))
       .localCheckpoint(true)
@@ -1103,8 +1112,7 @@ final class Collection private (
 
   def deletePks(pks: Seq[Any], namespace: Option[String] = None): Long =
     mutate {
-      requirePriv("Delete")
-      checkNamespace(namespace)
+      val scope = readScope("Delete", namespace)
       val ts = nextTs()
       val t = namespace match {
         case None =>
@@ -1120,7 +1128,7 @@ final class Collection private (
           // in preExecute like every read): tombstone only the pks
           // VISIBLE in the caller's namespace — a raw (pk, ts)
           // tombstone would delete the pk across every tenant
-          nsView(namespace)
+          scope.view()
             .filter(col(schema.pkField).isin(pks: _*))
             .select(col(schema.pkField), lit(ts).as(schema.tsField))
             .localCheckpoint(true)
@@ -2093,6 +2101,7 @@ final class Collection private (
     * collection re-pins the cut source, a NotLoad one pins nothing.
     */
   def truncate(): Long = mutate {
+    requirePriv("Truncate")
     val ts = nextTs()
     // a full-range tombstone per existing pk would be O(rows); instead
     // cut the raw view at the horizon, which visible() honors because
@@ -2668,8 +2677,9 @@ final class Collection private (
   private def requirePriv(privilege: String): Unit = {
     // database force-deny quota states (reference rootcoord
     // quota_center: database.force.deny.writing/reading reject the
-    // operation with a quota error before any work happens). One check
-    // point for every facade verb; the home-db lookup is a driver-side
+    // operation with a quota error before any work happens). Write and
+    // DDL verbs call this directly; every facade read reaches it through
+    // the read gate [[readScope]]. The home-db lookup is a driver-side
     // scan over the registry, negligible next to any Spark job.
     if (Collection.WritePrivileges.contains(privilege))
       Collection.requireDbAllows(this, "database.force.deny.writing", "write")
@@ -3538,14 +3548,15 @@ final class Collection private (
       outputFields: Seq[String],
       limit: Int = -1,
       orderBy: Seq[Column] = Nil): DataFrame = {
+    val scope = readScope("Query", None)
     val base = stateLock.synchronized {
       // the partial-load scope is part of visibility: a cached view
       // baked under one loaded-partition set must not serve another
-      val scope = rlsPolicies.mkString(";") + "|" + currentUser.toString +
+      val visibility = rlsPolicies.mkString(";") + "|" + currentUser.toString +
         "|" + loadedPartitions.map(_.toSeq.sorted.mkString(",")).getOrElse("*")
-      val key = (filterExpr, generation, scope)
+      val key = (filterExpr, generation, visibility)
       filterCache.get(key).getOrElse {
-        val df = readView().filter(compiled(filterExpr))
+        val df = scope.view().filter(compiled(filterExpr))
         filterCache.put(key, df)
         df
       }
@@ -3651,28 +3662,63 @@ final class Collection private (
 
   private def compiled(filterExpr: String, params: Map[String, Any] = Map.empty,
       tzOverride: Option[String] = None): Column =
-    ExprCompiler.compile(filterExpr,
-      ExprCompiler.Ctx(exprSchema, jsonColumns = schema.jsonFields,
-        metaColumn = schema.metaField, params = params,
-        strictColumns = true,
-        // request timezone > collection > database > UTC — the SAME
-        // resolution feeds literal parsing and time_fields extraction
-        // (task_query.go resolvedTimezoneStr serves both)
-        timezone = tzOverride.getOrElse(resolvedTimezone),
-        // only the tstz-domain int64 carries take the iso-literal epoch
-        // fold; every other int64 vs iso is a strict type error
-        tstzFields = GraftSession.tsDomainCols + schema.tsField,
-        // declared TEXT fields without enable_match raise the proxy's
-        // "does not enable match" error on any token-matching construct
-        noMatchFields = textFieldSpecs.collect {
-          case (f, spec) if !spec.enableMatch => f
-        }.toSet,
-        // declared non-default analyzers drive the match tokenization
-        // (reference: text_match evaluates over the FIELD's analyzer)
-        fieldAnalyzers = textFieldSpecs.collect {
-          case (f, spec) if spec.enableAnalyzer && spec.analyzerParams.nonEmpty =>
-            f -> spec.analyzerParams
-        }.toMap))
+    ExprCompiler.compile(filterExpr, exprCtx(params, tzOverride))
+
+  /** A read's filter: none for the empty expression. */
+  private def filterOf(filterExpr: String, params: Map[String, Any] = Map.empty,
+      tzOverride: Option[String] = None): Option[Column] =
+    if (filterExpr.isEmpty) None else Some(compiled(filterExpr, params, tzOverride))
+
+  /** A search's output columns: the pk alone unless fields are named. */
+  private def hitFields(outputFields: Seq[String]): Seq[String] =
+    if (outputFields.nonEmpty) outputFields else Seq(schema.pkField)
+
+  /** An element_filter ROOT expands to per-ELEMENT rows with `offset`
+    * (reference: query on element_filter returns one row per matching
+    * element, duplicate pks with offsets; MATCH_ANY and element_filter
+    * under a conjunction stay row-level —
+    * test_element_filter_returns_matching_element_offsets...). `rows`
+    * already passed the row-level filter, which keeps the explode to
+    * matching rows; the per-element predicate compiles in the same
+    * context. None when the filter is not an element root.
+    */
+  private def elementRows(rows: DataFrame, filterExpr: String,
+      params: Map[String, Any], tzOverride: Option[String]): Option[DataFrame] =
+    Option.when(filterExpr.nonEmpty)(graft.expr.Parser.parse(filterExpr)).collect {
+      case graft.expr.Call("element_filter", Seq(graft.expr.Ident(f), pred), _) =>
+        val elemSchema = rows.schema(f).dataType match {
+          case ArrayType(st: StructType, _) => Some(st)
+          case _                            => None
+        }
+        rows.select((rows.columns.map(col) :+
+            posexplode(col(f)).as(Seq("offset", "_elem"))): _*)
+          .filter(ExprCompiler.compile(pred, exprCtx(params, tzOverride)
+            .copy(element = Some((col("_elem"), elemSchema)))))
+    }
+
+  private def exprCtx(params: Map[String, Any],
+      tzOverride: Option[String]): ExprCompiler.Ctx =
+    ExprCompiler.Ctx(exprSchema, jsonColumns = schema.jsonFields,
+      metaColumn = schema.metaField, params = params,
+      strictColumns = true,
+      // request timezone > collection > database > UTC — the SAME
+      // resolution feeds literal parsing and time_fields extraction
+      // (task_query.go resolvedTimezoneStr serves both)
+      timezone = tzOverride.getOrElse(resolvedTimezone),
+      // only the tstz-domain int64 carries take the iso-literal epoch
+      // fold; every other int64 vs iso is a strict type error
+      tstzFields = GraftSession.tsDomainCols + schema.tsField,
+      // declared TEXT fields without enable_match raise the proxy's
+      // "does not enable match" error on any token-matching construct
+      noMatchFields = textFieldSpecs.collect {
+        case (f, spec) if !spec.enableMatch => f
+      }.toSet,
+      // declared non-default analyzers drive the match tokenization
+      // (reference: text_match evaluates over the FIELD's analyzer)
+      fieldAnalyzers = textFieldSpecs.collect {
+        case (f, spec) if spec.enableAnalyzer && spec.analyzerParams.nonEmpty =>
+          f -> spec.analyzerParams
+      }.toMap)
 
   /** Scalar retrieve (reference `Proxy.Query`): filter expression in the
     * collection's expression language, projection, optional sort/limit.
@@ -3724,17 +3770,13 @@ final class Collection private (
       timezone: Option[String] = None,
       namespace: Option[String] = None,
       orderByFields: Seq[String] = Nil): DataFrame = {
-    requirePriv("Query")
+    val scope = readScope("Query", namespace, partitionNames)
     // window validation runs only when a limit is requested, matching
     // task_query.go:388-402 (an unlimited query has no window to check)
     if (limit != -1) validateResultWindow(0L, limit.toLong)
     require(orderBy.isEmpty || orderByFields.isEmpty,
       "pass either orderBy columns or orderByFields specs, not both")
-    val (effParts, keyNs) = namespaceScope(namespace, partitionNames)
-    val unscoped = readView(level, partitionNames = effParts,
-      ignoreGrowing = ignoreGrowing, pkDomain = pkDomainOf(filterExpr))
-    val scoped0 =
-      namespacePredicate(keyNs).map(unscoped.filter).getOrElse(unscoped)
+    val scoped0 = scope.view(level, ignoreGrowing, pkDomainOf(filterExpr))
     // the hidden tenant column is a system field: `*` never returns it
     // (it stays addressable by explicit request)
     val scoped =
@@ -3742,38 +3784,11 @@ final class Collection private (
           !outputFields.contains(Collection.NamespaceField))
         scoped0.drop(Collection.NamespaceField)
       else scoped0
-    // an element_filter ROOT expands to per-ELEMENT rows with `offset`
-    // (reference: query on element_filter returns one row per matching
-    // element, duplicate pks with offsets; MATCH_ANY stays row-level —
-    // test_element_filter_returns_matching_element_offsets...)
-    val elementRoot: Option[(String, graft.expr.Node)] =
-      if (filterExpr.isEmpty) None
-      else graft.expr.Parser.parse(filterExpr) match {
-        case graft.expr.Call("element_filter",
-            Seq(graft.expr.Ident(f), pred), _) => Some((f, pred))
-        case _ => None
-      }
-    val base = elementRoot match {
-      case Some((f, pred)) =>
-        // row-level pre-filter keeps the explode to matching rows only
-        val matching = scoped.filter(compiled(filterExpr, params, timezone))
-        val elemSchema = matching.schema(f).dataType match {
-          case ArrayType(st: StructType, _) => Some(st)
-          case _                            => None
-        }
-        val exploded = matching.select(
-          (matching.columns.map(col) :+
-            posexplode(col(f)).as(Seq("offset", "_elem"))): _*)
-        val perElem = exploded.filter(ExprCompiler.compile(pred,
-          ExprCompiler.Ctx(exprSchema, jsonColumns = schema.jsonFields,
-            metaColumn = schema.metaField, strictColumns = true,
-            element = Some((col("_elem"), elemSchema)))))
-        perElem.select((expandFields(outputFields, scoped.columns).map(col) :+
-          col("offset")): _*)
-      case None =>
-        (if (filterExpr.isEmpty) scoped
-         else scoped.filter(compiled(filterExpr, params, timezone)))
-          .select(expandFields(outputFields, scoped.columns).map(col): _*)
+    val fields = expandFields(outputFields, scoped.columns).map(col)
+    val matching = filterOf(filterExpr, params, timezone).fold(scoped)(scoped.filter)
+    val base = elementRows(matching, filterExpr, params, timezone) match {
+      case Some(perElem) => perElem.select(fields :+ col("offset"): _*)
+      case None          => matching.select(fields: _*)
     }
     // string specs take the reference's ParseOrderByFields contract
     // (orderby/types.go:106-180): "field[:asc|desc[:nulls_first|last]]",
@@ -3809,7 +3824,7 @@ final class Collection private (
       ignoreGrowing: Boolean = false,
       params: Map[String, Any] = Map.empty,
       namespace: Option[String] = None): DataFrame = {
-    requirePriv("Query")
+    val scope = readScope("Query", namespace, partitionNames)
     if (limit != -1) validateResultWindow(0L, limit.toLong)
     // count(*) without GROUP BY is a single-value result — pagination is
     // meaningless (task_query.go:834-836); with GROUP BY a limit bounds
@@ -3819,13 +3834,8 @@ final class Collection private (
         .exists { case (op, p) => op == "count" && p == "*" })
     require(!(hasCountStar && limit != -1 && groupByFields.isEmpty),
       "count entities with pagination is not allowed")
-    val (effParts, keyNs) = namespaceScope(namespace, partitionNames)
-    val scoped0 = readView(level, partitionNames = effParts,
-      ignoreGrowing = ignoreGrowing, pkDomain = pkDomainOf(filterExpr))
-    val scoped =
-      namespacePredicate(keyNs).map(scoped0.filter).getOrElse(scoped0)
-    val base =
-      if (filterExpr.isEmpty) scoped else scoped.filter(compiled(filterExpr, params))
+    val scoped = scope.view(level, ignoreGrowing, pkDomainOf(filterExpr))
+    val base = filterOf(filterExpr, params).fold(scoped)(scoped.filter)
     graft.operators.QueryAgg.run(base, outputFields, groupByFields,
       orderByFields, limit, jsonFields = schema.jsonFields,
       excluded = Set(schema.tsField, Collection.NamespaceField))
@@ -3836,13 +3846,9 @@ final class Collection private (
       ignoreGrowing: Boolean = false,
       params: Map[String, Any] = Map.empty,
       namespace: Option[String] = None): Long = {
-    requirePriv("Query")
-    val (effParts, keyNs) = namespaceScope(namespace, partitionNames)
-    val v0 = readView(level, partitionNames = effParts,
-      ignoreGrowing = ignoreGrowing, pkDomain = pkDomainOf(filterExpr))
-    val v = namespacePredicate(keyNs).map(v0.filter).getOrElse(v0)
-    (if (filterExpr.isEmpty) v
-     else v.filter(compiled(filterExpr, params))).count()
+    val v = readScope("Query", namespace, partitionNames)
+      .view(level, ignoreGrowing, pkDomainOf(filterExpr))
+    filterOf(filterExpr, params).fold(v)(v.filter).count()
   }
 
   /** Get by primary keys (reference `Get`/requery path): the pk list IS
@@ -3851,12 +3857,7 @@ final class Collection private (
     */
   def get(pks: Seq[Any], outputFields: Seq[String],
       namespace: Option[String] = None): DataFrame = {
-    requirePriv("Query")
-    val dom = graft.operators.PkPruning.points(pks.map {
-      case i: Int => i.toLong // the pk literal space is int64/varchar
-      case x      => x
-    })
-    val v = nsView(namespace, pkDomain = dom)
+    val v = readScope("Query", namespace).view(pkDomain = pkPoints(pks))
       .filter(col(schema.pkField).isin(pks: _*))
     v.select(expandFields(outputFields, v.columns).map(col): _*)
   }
@@ -3872,6 +3873,13 @@ final class Collection private (
     Map("row_count" ->
       rlsFilter(readViewUnscoped(ttl = propertyTtl)).count().toString)
   }
+
+  /** A pk list as a prune domain (the pk literal space is int64/varchar). */
+  private def pkPoints(pks: Seq[Any]): Option[graft.operators.PkPruning.Domain] =
+    graft.operators.PkPruning.points(pks.map {
+      case i: Int => i.toLong
+      case x      => x
+    })
 
   /** `output_fields = ["*"]` means every field (reference wildcard). */
   private def expandFields(fields: Seq[String], all: Seq[String]): Seq[String] =
@@ -3896,7 +3904,7 @@ final class Collection private (
       timezone: Option[String] = None,
       namespace: Option[String] = None,
       orderByFields: Seq[String] = Nil): DataFrame = {
-    requirePriv("Search")
+    val scope = readScope("Search", namespace, partitionNames)
     require(orderBy.isEmpty || orderByFields.isEmpty,
       "pass either orderBy columns or orderByFields specs, not both")
     require(schema.vectorFields.contains(vectorField),
@@ -3906,15 +3914,10 @@ final class Collection private (
     // partition scope prunes BEFORE any distance work — at scale this
     // is the reference's partition-level segment pruning; a pk-anchored
     // filter additionally prunes the sealed FILE list (MEP 20260324)
-    val (effParts, keyNs) = namespaceScope(namespace, partitionNames)
-    val corpus0 = readView(level, partitionNames = effParts,
-      ignoreGrowing = ignoreGrowing, pkDomain = pkDomainOf(filterExpr))
-    val corpus =
-      namespacePredicate(keyNs).map(corpus0.filter).getOrElse(corpus0)
-    val filter = if (filterExpr.isEmpty) None else Some(compiled(filterExpr, tzOverride = timezone))
-    val out = if (outputFields.nonEmpty) outputFields else Seq(schema.pkField)
+    val corpus = scope.view(level, ignoreGrowing, pkDomainOf(filterExpr))
     val hits = VectorSearch.topK(corpus, schema.pkField, vectorField, queries,
-      "qid", "qvec", metric, k, filter = filter, outputCols = out, roundTo = roundTo)
+      "qid", "qvec", metric, k, filter = filterOf(filterExpr, tzOverride = timezone),
+      outputCols = hitFields(outputFields), roundTo = roundTo)
     // search order-by (reference MEP 20260129-search-orderby): recall is
     // still similarity top-k; the RETURNED hits re-sort by scalar fields
     // within each query (presentation order, not candidate selection)
@@ -3945,12 +3948,12 @@ final class Collection private (
       outputFields: Seq[String] = Nil,
       roundTo: Option[Int] = None,
       namespace: Option[String] = None): DataFrame = {
+    val scope = readScope("Search", namespace)
     if (k != 0) validateTopK(k, "topk")
     validateNq(nqOf(queries))
-    val filter = if (filterExpr.isEmpty) None else Some(compiled(filterExpr))
-    val out = if (outputFields.nonEmpty) outputFields else Seq(schema.pkField)
-    VectorSearch.rangeSearch(nsView(namespace), schema.pkField, vectorField,
-      queries, "qid", "qvec", metric, radius, rangeFilter, k, filter, out, roundTo)
+    VectorSearch.rangeSearch(scope.view(), schema.pkField, vectorField,
+      queries, "qid", "qvec", metric, radius, rangeFilter, k,
+      filterOf(filterExpr), hitFields(outputFields), roundTo)
   }
 
   /** Grouping search over the MVCC view (group_by_field_ids +
@@ -3970,11 +3973,12 @@ final class Collection private (
       namespace: Option[String] = None,
       groupScorer: String = "max",
       emitGroupScore: Boolean = false): DataFrame = {
-    val filter = if (filterExpr.isEmpty) None else Some(compiled(filterExpr))
-    val out = if (outputFields.nonEmpty) outputFields else Seq(schema.pkField)
-    VectorSearch.groupBySearch(nsView(namespace), schema.pkField, vectorField,
+    val scope = readScope("Search", namespace)
+    validateTopK(k, "topk")
+    validateNq(nqOf(queries))
+    VectorSearch.groupBySearch(scope.view(), schema.pkField, vectorField,
       queries, "qid", "qvec", metric, k, groupFields, groupSize,
-      strictGroupSize, filter, out, roundTo,
+      strictGroupSize, filterOf(filterExpr), hitFields(outputFields), roundTo,
       groupScorer = groupScorer, emitGroupScore = emitGroupScore)
   }
 
@@ -3992,15 +3996,15 @@ final class Collection private (
       outputFields: Seq[String] = Nil,
       roundTo: Option[Int] = None,
       namespace: Option[String] = None): DataFrame = {
+    val scope = readScope("Search", namespace)
     // iterator batchSize takes the same cap, as an ERROR (search_util
     // .go:433); an over-cap plain topk on an iterator request CLAMPS
     // instead (:487-500), which is the iterator driver's concern
     validateTopK(batch, "batchSize")
     validateNq(nqOf(queries))
-    val filter = if (filterExpr.isEmpty) None else Some(compiled(filterExpr))
-    val out = if (outputFields.nonEmpty) outputFields else Seq(schema.pkField)
-    VectorSearch.searchIterator(nsView(namespace), schema.pkField, vectorField,
-      queries, "qid", "qvec", metric, batch, lastBound, filter, out, roundTo)
+    VectorSearch.searchIterator(scope.view(), schema.pkField, vectorField,
+      queries, "qid", "qvec", metric, batch, lastBound, filterOf(filterExpr),
+      hitFields(outputFields), roundTo)
   }
 
   /** Search-by-pk (reference: client `search(ids=...)`,
@@ -4022,7 +4026,7 @@ final class Collection private (
       outputFields: Seq[String] = Nil,
       roundTo: Option[Int] = None,
       level: ConsistencyLevel.Value = ConsistencyLevel.Strong): DataFrame = {
-    requirePriv("Search")
+    val scope = readScope("Search", None)
     require(ids.nonEmpty, "searchByPk needs at least one id")
     validateTopK(k, "topk")
     validateNq(ids.size.toLong)
@@ -4030,11 +4034,7 @@ final class Collection private (
       s"$vectorField is not a vector field (have: ${schema.vectorFields.keys.mkString(", ")})")
     // the anchor-id fetch is a point get — prune its file list like
     // get()'s (MEP 20260324)
-    val dom = graft.operators.PkPruning.points(ids.map {
-      case i: Int => i.toLong
-      case x      => x
-    })
-    val view = readView(level, pkDomain = dom)
+    val view = scope.view(level, pkDomain = pkPoints(ids))
     val fetched = view
       .filter(col(schema.pkField).isin(ids: _*))
       .select(col(schema.pkField), col(vectorField))
@@ -4102,6 +4102,7 @@ final class Collection private (
       outputFields: Seq[String] = Nil,
       level: ConsistencyLevel.Value = ConsistencyLevel.Strong,
       namespace: Option[String] = None): DataFrame = {
+    val scope = readScope("Search", namespace)
     require(subs.nonEmpty, "hybrid search needs at least one sub-search")
     validateTopK(k, "limit")
     subs.foreach { sub =>
@@ -4120,10 +4121,10 @@ final class Collection private (
       require(outputFields.isEmpty,
         "element-level hybrid output is (pk, element_index); requery is row-level")
     }
-    val corpus = nsView(namespace, level)
+    val corpus = scope.view(level)
     val fuseKey = if (elementLevel) "_ekey" else schema.pkField
     val results = subs.map { sub =>
-      val filter = if (sub.filterExpr.isEmpty) None else Some(compiled(sub.filterExpr))
+      val filter = filterOf(sub.filterExpr)
       sub.structArrayField match {
         case Some(arr) =>
           // element-level: row filter scopes the corpus, elements score
@@ -4189,6 +4190,7 @@ final class Collection private (
     * runs again.
     */
   def dropIndex(vectorField: String): Unit = stateLock.synchronized {
+    requirePriv("DropIndex")
     indexes.get(vectorField).foreach(releaseIndexState)
     indexes -= vectorField
     indexProps -= vectorField
@@ -4331,6 +4333,7 @@ final class Collection private (
     */
   def createScalarIndex(field: String, indexType: String,
       params: Map[String, String] = Map.empty): DataFrame = {
+    requirePriv("CreateIndex")
     graft.operators.IndexParamCheck.check(indexType, scalarFieldKind(field),
       params, isPrimaryKey = field == schema.pkField)
     graft.operators.InvertedIndex.buildValueIndex(
@@ -4345,6 +4348,7 @@ final class Collection private (
     * rest per call. A rebuild replaces (and unpersists) the old map.
     */
   def createIndex(vectorField: String, nlist: Int, trainSample: Int = 10000): Unit = {
+    requirePriv("CreateIndex")
     require(schema.vectorFields.contains(vectorField),
       s"$vectorField is not a vector field")
     // index-param hygiene BEFORE any build job is planned
@@ -4408,17 +4412,18 @@ final class Collection private (
       outputFields: Seq[String] = Nil,
       roundTo: Option[Int] = None): DataFrame = {
     import graft.operators.IvfIndex
+    val scope = readScope("Search", None)
     validateTopK(k, "topk")
     validateNq(nqOf(queries))
     val st = indexes.getOrElse(vectorField,
       throw new IllegalStateException(s"no index on $vectorField — createIndex first"))
-    val out = if (outputFields.nonEmpty) outputFields else Seq(schema.pkField)
-    val clustered = readView()
+    val clustered = scope.view()
       .join(st.clusterMap, Seq(schema.pkField, schema.tsField), "left")
       .withColumn("_cluster",
         coalesce(col("_cluster"), IvfIndex.assign(st.model, col(vectorField))))
     IvfIndex.search(clustered, schema.pkField, vectorField, st.model,
-      queries, "qid", "qvec", metric, k, nprobe, outputCols = out, roundTo = roundTo)
+      queries, "qid", "qvec", metric, k, nprobe, outputCols = hitFields(outputFields),
+      roundTo = roundTo)
   }
 
   // ---- CDC / replication (reference: the CDC change feed + cluster
@@ -4556,6 +4561,7 @@ final class Collection private (
       lastPk: Option[Any] = None,
       namespace: Option[String] = None,
       lastElementOffset: Option[Long] = None): DataFrame = {
+    val scope = readScope("Query", namespace)
     validateResultWindow(0L, batch.toLong)
     // the element-offset half of the cursor (QueryIteratorCursor,
     // plan.proto:377-381; parseQueryIteratorCursor task_query.go:461-503)
@@ -4583,31 +4589,13 @@ final class Collection private (
         Some(graft.operators.PkPruning.intersectDomains(a, b).getOrElse(b))
       case (a, b) => b.orElse(a)
     }
-    val base = nsView(namespace, pkDomain = dom).filter(
-      if (filterExpr.isEmpty) lit(true) else compiled(filterExpr))
+    val view = scope.view(pkDomain = dom)
+    val base = filterOf(filterExpr).fold(view)(view.filter)
     val pkc = col(schema.pkField)
-    val elementRoot: Option[(String, graft.expr.Node)] =
-      if (filterExpr.isEmpty) None
-      else graft.expr.Parser.parse(filterExpr) match {
-        case graft.expr.Call("element_filter",
-            Seq(graft.expr.Ident(f), pred), _) => Some((f, pred))
-        case _ => None
-      }
-    elementRoot match {
-      case Some((f, pred)) =>
+    elementRows(base, filterExpr, Map.empty, None) match {
+      case Some(perElem) =>
         // per-element page in (pk, offset) order, like query()'s
         // element-root expansion
-        val elemSchema = base.schema(f).dataType match {
-          case ArrayType(st: StructType, _) => Some(st)
-          case _                            => None
-        }
-        val exploded = base.select(
-          (base.columns.map(col) :+
-            posexplode(col(f)).as(Seq("offset", "_elem"))): _*)
-        val perElem = exploded.filter(ExprCompiler.compile(pred,
-          ExprCompiler.Ctx(exprSchema, jsonColumns = schema.jsonFields,
-            metaColumn = schema.metaField, strictColumns = true,
-            element = Some((col("_elem"), elemSchema)))))
         val cursored = lastPk match {
           case Some(p) => lastElementOffset match {
             case Some(o) => perElem.filter(

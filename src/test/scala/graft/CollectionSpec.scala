@@ -895,6 +895,10 @@ class CollectionSpec extends SparkSpec {
       groupSize = 2, outputFields = Seq("pk")) // group col comes back on its own
     val byGrp = grouped.groupBy($"grp").count().as[(Long, Long)].collect().toMap
     assert(byGrp.size == 3 && byGrp.values.forall(_ <= 2))
+    // topk takes the same cap as every other search verb
+    val e = intercept[IllegalArgumentException](
+      c.groupBySearch("emb", qs, k = 16385, groupFields = Seq("grp")))
+    assert(e.getMessage.contains("topk [16385] is invalid"))
   }
 
   test("facade search iterator pages by last-bound cursor without overlap") {
@@ -1225,6 +1229,13 @@ class CollectionSpec extends SparkSpec {
     val rows = c.query("""element_filter(events, $[rank] >= 10 and $[tag] == "qa")""",
       Seq("pk")).select($"pk", $"offset").as[(Long, Int)].collect().sorted
     assert(rows.toSeq == Seq((1L, 0), (2L, 0), (2L, 1)))
+    // the per-element predicate compiles with the request's params, like
+    // the row-level filter over the same text
+    def elems(filter: String, params: Map[String, Any]) =
+      c.query(filter, Seq("pk"), params = params)
+        .select($"pk", $"offset").as[(Long, Int)].collect().sorted.toSeq
+    assert(elems("element_filter(events, $[rank] >= {r})", Map("r" -> 10)) ==
+      elems("element_filter(events, $[rank] >= 10)", Map.empty))
     // MATCH_ANY stays row-level: unique pks, no offset column
     val any = c.query("""match_any(events, $[rank] >= 10 and $[tag] == "qa")""",
       Seq("pk"))
@@ -1279,6 +1290,7 @@ class CollectionSpec extends SparkSpec {
     val db = s"deny_${System.nanoTime()}"
     Collection.createDatabase(db)
     val c = fresh()
+    c.createIndex("emb", nlist = 2) // so searchIndexed reaches its gate
     Collection.registerCollection("c", c, db)
     // deny writing: inserts/deletes rejected, reads fine
     Collection.alterDatabase(db, Map("database.force.deny.writing" -> "true"))
@@ -1291,6 +1303,10 @@ class CollectionSpec extends SparkSpec {
       "database.force.deny.reading" -> "true"))
     intercept[IllegalStateException](c.query("value >= 0", Seq("pk")))
     intercept[IllegalStateException](c.count())
+    ReadVerbs.all(c).foreach { case (verb, op) =>
+      val e = withClue(verb)(intercept[IllegalStateException](op()))
+      assert(e.getMessage.contains("denies read"), verb)
+    }
     c.insert(mkRows(900L until 910L))
     Collection.alterDatabase(db, Map("database.force.deny.reading" -> "false"))
     assert(c.count() == 60)

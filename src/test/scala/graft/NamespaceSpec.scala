@@ -113,6 +113,15 @@ class NamespaceSpec extends SparkSpec {
     // and each path still rejects a missing namespace
     intercept[IllegalArgumentException](c.rangeSearch("vec", q, radius = 0.0))
     intercept[IllegalArgumentException](c.get(Seq(1L), Seq("id")))
+    // including the reads that take no namespace at all
+    Seq[(String, () => Any)](
+      "queryCached" -> (() => c.queryCached("id >= 0", Seq("id"))),
+      "searchIndexed" -> (() => c.searchIndexed("vec", q, k = 1, nprobe = 1)),
+      "searchByPk" -> (() => c.searchByPk("vec", Seq(1L), k = 1))
+    ).foreach { case (verb, op) =>
+      val e = withClue(verb)(intercept[IllegalArgumentException](op()))
+      assert(e.getMessage.contains("namespace data is not set"), verb)
+    }
   }
 
   test("queryAgg aggregates within the tenant scope") {

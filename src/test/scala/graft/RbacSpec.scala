@@ -98,9 +98,28 @@ class RbacSpec extends SparkSpec {
     intercept[SecurityException] { c.insert(mkRows(Seq(100L))) } // ...not write
     intercept[SecurityException] { c.delete("grp == 1") }
     intercept[SecurityException] { c.createPartition("p") }
-    // revoking the read grant closes the read path too
+    // index DDL and truncate check their own privileges: ReadOnly lacks
+    // them, ReadWrite holds them
+    val ddl = Seq[(String, () => Any)](
+      "dropIndex" -> (() => c.dropIndex("emb")),
+      "createScalarIndex" -> (() => c.createScalarIndex("grp", "INVERTED")),
+      "createIndex" -> (() => c.createIndex("emb", nlist = 2)),
+      "truncate" -> (() => c.truncate()))
+    ddl.foreach { case (verb, op) =>
+      withClue(verb)(intercept[SecurityException](op()))
+    }
+    c.setUser(Rls.UserContext("bob"))
+    // (the index createIndex builds here serves searchIndexed below)
+    ddl.take(3).foreach { case (verb, op) => withClue(verb)(op()) }
+    c.setUser(Rls.UserContext("alice"))
+    // every read verb passes the reader's grant...
+    ReadVerbs.all(c).foreach { case (verb, op) => withClue(verb)(op()) }
+    // ...and revoking the read grant closes every one of them
     reg.revoke("reader", "CollectionReadOnly", "events")
     intercept[SecurityException] { c.count() }
+    ReadVerbs.all(c).foreach { case (verb, op) =>
+      withClue(verb)(intercept[SecurityException](op()))
+    }
     // upsert is its own privilege, not Insert (reference semantics)
     reg.createRole("upserter")
     reg.addUserToRole("carol", "upserter")
@@ -112,6 +131,10 @@ class RbacSpec extends SparkSpec {
     c.disableRbac()
     c.setUser(Rls.UserContext("alice"))
     assert(c.count() == 20)
+    c.enableRbac(reg, "events")
+    c.setUser(Rls.UserContext("bob"))
+    c.truncate() // ReadWrite holds Truncate
+    assert(c.count() == 0)
   }
 
   test("credentials: create/verify/update/delete, never plaintext-equal") {
