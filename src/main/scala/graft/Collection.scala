@@ -315,7 +315,7 @@ final class Collection private (
       val ts = nextTs()
       droppedFields -= field // re-add: the ts mask below prevents resurrection
       dynamicTextFields += field -> ((spec, ts))
-      lastWriteTs = ts
+      append(ts)
     }
 
   // ---- TEXT-LOB blob store (reference: storagev2 LobFileInfo +
@@ -718,10 +718,8 @@ final class Collection private (
       .filter(col(Collection.PartitionCol) === name)
       .select(col(schema.pkField), lit(ts).as(schema.tsField))
       .localCheckpoint(true)
-    tombs = Some(tombs.map(_.unionByName(victims)).getOrElse(victims))
-    logChange("delete", victims)
+    append(ts, tombstones = Some(victims))
     partitionSet -= name
-    lastWriteTs = ts
     ts
   }
 
@@ -739,37 +737,28 @@ final class Collection private (
     collectionProperties.getOrElse(Collection.NamespaceModeKey,
       Collection.NamespaceModePartitionKey)
 
-  /** CheckNamespace (common.go:961-971): the namespace argument must be
-    * present EXACTLY when the collection enables namespaces.
-    */
-  private def checkNamespace(ns: Option[String]): Unit =
-    if (schema.enableNamespace != ns.isDefined) {
-      if (ns.isDefined) throw new IllegalArgumentException(
-        "namespace data is set but namespace disabled")
-      else throw new IllegalArgumentException(
-        "namespace data is not set but namespace enabled")
-    }
-
-  /** Read-side scope (resolveNamespacePartitionNames util.go:2844-2863 +
-    * namespaceForPlan :2865): partition mode maps the namespace to its
-    * partition (a caller-supplied partition list must match); key mode
-    * keeps partitions and filters on the hidden column downstream.
-    * Returns (effectivePartitionNames, keyModePredicateNamespace).
+  /** The namespace scope of every read and write: the argument must be
+    * present EXACTLY when the collection enables namespaces
+    * (CheckNamespace common.go:961-971); partition mode maps it to its
+    * partition (a caller-supplied partition list must match), key mode
+    * keeps partitions and filters on the hidden column downstream
+    * (resolveNamespacePartitionNames util.go:2844-2863 + namespaceForPlan
+    * :2865). Returns (effectivePartitionNames, keyModePredicateNamespace).
     */
   private def namespaceScope(ns: Option[String],
-      partitionNames: Seq[String]): (Seq[String], Option[String]) = {
-    checkNamespace(ns)
-    ns match {
-      case None => (partitionNames, None)
-      case Some(n) =>
-        if (namespaceMode == Collection.NamespaceModePartition) {
-          if (partitionNames.nonEmpty &&
-              partitionNames != Seq(n)) throw new IllegalArgumentException(
-            s"""partition names ${partitionNames.mkString("[", ", ", "]")} """ +
-              s"""mismatch namespace "$n"""")
-          (Seq(n), None)
-        } else (partitionNames, Some(n))
-    }
+      partitionNames: Seq[String]): (Seq[String], Option[String]) = ns match {
+    case _ if schema.enableNamespace != ns.isDefined =>
+      throw new IllegalArgumentException(
+        if (ns.isDefined) "namespace data is set but namespace disabled"
+        else "namespace data is not set but namespace enabled")
+    case None => (partitionNames, None)
+    case Some(n) if namespaceMode == Collection.NamespaceModePartition =>
+      if (partitionNames.nonEmpty &&
+          partitionNames != Seq(n)) throw new IllegalArgumentException(
+        s"""partition names ${partitionNames.mkString("[", ", ", "]")} """ +
+          s"""mismatch namespace "$n"""")
+      (Seq(n), None)
+    case Some(n) => (partitionNames, Some(n))
   }
 
   private def namespacePredicate(keyNs: Option[String]): Option[Column] =
@@ -800,6 +789,46 @@ final class Collection private (
     requirePriv(priv)
     val (parts, keyNs) = namespaceScope(namespace, partitionNames)
     new ReadScope(parts, keyNs)
+  }
+
+  private final class WriteScope(parts: Seq[String], keyNs: Option[String]) {
+
+    /** addNamespaceData (proxy/util.go:2872+, task_upsert.go:1400,1583):
+      * partition mode tags the tenant's partition, auto-created on first
+      * write; key mode stamps the hidden `$namespace_id` column, and
+      * caller-supplied values must MATCH, never be silently overwritten.
+      */
+    def stamp(rows: DataFrame): DataFrame = (parts, keyNs) match {
+      case (Seq(ns), _) =>
+        stateLock.synchronized {
+          if (!hasPartition(ns)) createPartitionInternal(ns)
+        }
+        rows.withColumn(Collection.PartitionCol, lit(ns))
+      case (_, Some(ns)) if rows.columns.contains(Collection.NamespaceField) =>
+        val owned = namespacePredicate(keyNs).get
+        require(rows.filter(owned.isNull || !owned).limit(1).count() == 0,
+          s"""namespace field data mismatches namespace "$ns"""")
+        rows
+      case (_, Some(ns)) => rows.withColumn(Collection.NamespaceField, lit(ns))
+      case _ => rows
+    }
+
+    /** The tenant's rows of `df` (a merge basis read outside the read gate). */
+    def owns(df: DataFrame): DataFrame = parts match {
+      case Seq(ns) => df.filter(col(Collection.PartitionCol) === ns)
+      case _       => namespacePredicate(keyNs).map(df.filter).getOrElse(df)
+    }
+  }
+
+  /** The write gate, [[readScope]]'s twin for every facade write that
+    * stamps rows: checks `priv` (RBAC and the database write-deny quota),
+    * then resolves the namespace, before anything that can start a job.
+    * Only it makes a [[WriteScope]], so no write stamps rows unchecked.
+    */
+  private def writeScope(priv: String, namespace: Option[String]): WriteScope = {
+    requirePriv(priv)
+    val (parts, keyNs) = namespaceScope(namespace, Nil)
+    new WriteScope(parts, keyNs)
   }
 
   /** Insert into a NAMED partition (reference Insert with
@@ -918,11 +947,6 @@ final class Collection private (
     case (None, None) => throw new IllegalStateException("empty collection — insert first")
   }
 
-  /** Insert rows (reference `Proxy.Insert`): stamps the write ts; with
-    * autoID, assigns collision-free pks from the ts counter base. The
-    * rows land in the growing tail — immediately searchable, exactly
-    * like a growing segment. Returns the write ts.
-    */
   /** AutoID block allocator (reference: rootcoord's ID allocator hands
     * out contiguous blocks per insert). A partition-stride scheme
     * (monotonically_increasing_id + batch offset) is NOT collision-free
@@ -932,49 +956,24 @@ final class Collection private (
     */
   private val idAlloc = new AtomicLong(1L << 40)
 
-  def insert(rows: DataFrame, namespace: Option[String] = None): Long = {
-    requirePriv("Insert")
-    insertImpl(stampNamespace(rows, namespace))
-  }
-
-  /** Namespace write plumbing shared by insert AND upsert (the
-    * reference resolves namespaces in both preExecutes — addNamespaceData
-    * proxy/util.go:2872+, task_upsert.go:1400,1583): partition mode tags
-    * the namespace partition (auto-created on first write — tenants
-    * appear dynamically — via the privilege-free internal path); key
-    * mode stamps the hidden `$namespace_id` column. Caller-supplied
-    * namespace values must MATCH, never be silently overwritten.
+  /** Insert rows (reference `Proxy.Insert`): stamps the write ts; with
+    * autoID, assigns collision-free pks from the ts counter base. The
+    * rows land in the growing tail — immediately searchable, exactly
+    * like a growing segment. Returns the write ts.
     */
-  private def stampNamespace(rows: DataFrame, namespace: Option[String]): DataFrame = {
-    checkNamespace(namespace)
-    namespace match {
-      case None => rows
-      case Some(ns) if namespaceMode == Collection.NamespaceModePartition =>
-        // the namespace IS a partition (resolveNamespacePartitionName
-        // util.go:2826-2842)
-        stateLock.synchronized {
-          if (!hasPartition(ns)) createPartitionInternal(ns)
-        }
-        rows.withColumn(Collection.PartitionCol, lit(ns))
-      case Some(ns) =>
-        if (rows.columns.contains(Collection.NamespaceField)) {
-          val bad = rows.filter(
-            namespacePredicate(Some(ns)).get.isNull ||
-              !namespacePredicate(Some(ns)).get).limit(1).count()
-          require(bad == 0,
-            s"""namespace field data mismatches namespace "$ns"""")
-          rows
-        } else rows.withColumn(Collection.NamespaceField, lit(ns))
-    }
-  }
+  def insert(rows: DataFrame, namespace: Option[String] = None): Long =
+    insertImpl(writeScope("Insert", namespace).stamp(rows))
 
   /** @param preservePks restore path only: rows arriving from a
     *   snapshot already carry their pks — the autoId allocator must not
     *   re-assign (the reference restore preserves ids), and appending a
     *   second pk column would break every later read.
+    * @param superseded the partition-key upsert's tombstones, appended
+    *   with the rows in one [[append]] (see [[rekeyWrite]]).
     */
   private[graft] def insertImpl(rows: DataFrame,
-      preservePks: Boolean = false): Long = mutate {
+      preservePks: Boolean = false,
+      superseded: Option[DataFrame] = None): Long = mutate {
     val ts = nextTs()
     // untagged rows land in the default partition; insertInto pre-tags;
     // a declared partition key routes each row to the hash bucket of
@@ -1063,10 +1062,8 @@ final class Collection private (
     // instead of null-filling.
     val evolved = droppedFields.nonEmpty || maskedFields.nonEmpty ||
       dynamicTextFields.nonEmpty || functionsEverChanged
-    growing = Some(growing
-      .map(_.unionByName(withPk, allowMissingColumns = evolved)).getOrElse(withPk))
-    logChange("insert", withPk)
-    lastWriteTs = ts
+    append(ts, rows = Some(withPk), tombstones = superseded,
+      allowMissingColumns = evolved)
     // seal-policy check (capacity / lifetime): rows are counted only
     // while a policy is installed, so the extra action is opt-in
     sealPolicy.foreach { p =>
@@ -1081,11 +1078,9 @@ final class Collection private (
 
   /** Delete by filter expression or pk list (reference `Proxy.Delete`):
     * appends (pk, ts) tombstones; nothing is rewritten until
-    * [[compact]]. Returns the delete ts.
-    */
-  /** `params` are template variables (the client's filter_params) — an
-    * empty template list deletes nothing, it does not error (the
-    * reference's #51617 delete contract).
+    * [[compact]]. Returns the delete ts. `params` are template variables
+    * (the client's filter_params) — an empty template list deletes
+    * nothing, it does not error (the reference's #51617 delete contract).
     */
   def delete(filterExpr: String,
       params: Map[String, Any] = Map.empty,
@@ -1104,9 +1099,7 @@ final class Collection private (
       .filter(compiled(filterExpr, params))
       .select(col(schema.pkField), lit(ts).as(schema.tsField))
       .localCheckpoint(true)
-    tombs = Some(tombs.map(_.unionByName(victims)).getOrElse(victims))
-    logChange("delete", victims)
-    lastWriteTs = ts
+    append(ts, tombstones = Some(victims))
     ts
   }
 
@@ -1133,9 +1126,7 @@ final class Collection private (
             .select(col(schema.pkField), lit(ts).as(schema.tsField))
             .localCheckpoint(true)
       }
-      tombs = Some(tombs.map(_.unionByName(t)).getOrElse(t))
-      logChange("delete", t)
-      lastWriteTs = ts
+      append(ts, tombstones = Some(t))
       ts
     }
 
@@ -1146,8 +1137,7 @@ final class Collection private (
     * column invisible to every scoped read.
     */
   def upsert(rows: DataFrame, namespace: Option[String] = None): Long = {
-    requirePriv("Upsert")
-    val stamped = stampNamespace(rows, namespace)
+    val stamped = writeScope("Upsert", namespace).stamp(rows)
     // partition-key re-route (issue #30607): the new version lands in
     // the bucket of its NEW key value — possibly a different bucket
     // than the old version's — and a partition-scoped read applies its
@@ -1159,13 +1149,12 @@ final class Collection private (
     else insertImpl(stamped)
   }
 
-  /** The partition-key upsert's delete+insert pair, committed TOGETHER:
-    * the delete ts is reserved below the insert ts, but the tombstones
-    * append only after the insert half lands — a rejected insert
-    * (privilege, dropped field, null contract) must not leave a bare
-    * delete behind (the reference's WAL writes both halves atomically).
-    * The tombstones make the superseded version — possibly in a
-    * DIFFERENT bucket — invisible under any partition scope.
+  /** The partition-key upsert's delete+insert pair, committed TOGETHER
+    * in one [[append]]: the delete ts is reserved below the insert ts,
+    * and a rejected insert (dropped field, null contract) appends
+    * neither half (the reference's WAL writes both atomically). The
+    * tombstones make the superseded version — possibly in a DIFFERENT
+    * bucket — invisible under any partition scope.
     */
   private def rekeyWrite(stamped: DataFrame): Long = mutate {
     require(stamped.columns.contains(schema.pkField),
@@ -1173,10 +1162,7 @@ final class Collection private (
     val delTs = nextTs()
     val t = stamped.select(col(schema.pkField), lit(delTs).as(schema.tsField))
       .distinct().localCheckpoint(true)
-    val ts = insertImpl(stamped) // throws ⇒ neither half landed
-    tombs = Some(tombs.map(_.unionByName(t)).getOrElse(t))
-    logChange("delete", t)
-    ts
+    insertImpl(stamped, superseded = Some(t))
   }
 
   /** Partial upsert (reference task_upsert_partial_op.go + the array
@@ -1191,21 +1177,13 @@ final class Collection private (
   def upsertPartial(rows: DataFrame,
       fieldOps: Map[String, Mvcc.FieldOp] = Map.empty,
       namespace: Option[String] = None): Long = {
-    checkNamespace(namespace)
+    val scope = writeScope("Upsert", namespace)
     val pk = schema.pkField
     require(rows.columns.contains(pk), s"partial upsert rows need the pk column $pk")
     val provided = rows.columns.filterNot(_ == pk).toSet
-    // merge basis: RLS-unscoped (see above) but namespace-SCOPED — a
-    // tenant merges against ITS version of the pk, never another
-    // tenant's fields (the reference runs the namespace resolution on
-    // upsert preExecute too, task_upsert.go:1400)
-    val current0 = readViewUnscoped()
-    val current = namespace match {
-      case None => current0
-      case Some(ns) if namespaceMode == Collection.NamespaceModePartition =>
-        current0.filter(col(Collection.PartitionCol) === ns)
-      case keyNs => current0.filter(namespacePredicate(keyNs).get)
-    }
+    // merge basis: RLS-unscoped (see above) but tenant-scoped — a tenant
+    // merges against ITS version of the pk (task_upsert.go:1400)
+    val current = scope.owns(readViewUnscoped())
     // key mode re-stamps the hidden column on write (a new pk has no
     // current version to carry it from), so it leaves the merge set
     val dataCols = current.columns.filterNot(c => c == schema.tsField ||
@@ -1227,15 +1205,11 @@ final class Collection private (
       }
     }: _*)
     val pinned = full.localCheckpoint(true) // pin: the merge must not re-resolve later
-    if (schema.partitionKeyField.isDefined) {
-      // partial upsert can CHANGE the partition key: drop the carried
-      // bucket tag so the write re-routes by the merged key value, with
-      // the tombstone half committed only alongside the insert (the
-      // #30607 contract via the partial path); the write privilege
-      // gates BEFORE any tombstone work
-      requirePriv("Insert")
-      rekeyWrite(stampNamespace(pinned.drop(Collection.PartitionCol), namespace))
-    } else insert(pinned, namespace)
+    // partial upsert can CHANGE the partition key: drop the carried
+    // bucket tag so the write re-routes by the merged key value (#30607)
+    if (schema.partitionKeyField.isDefined)
+      rekeyWrite(scope.stamp(pinned.drop(Collection.PartitionCol)))
+    else insertImpl(scope.stamp(pinned))
   }
 
   /** Attach a Structured Streaming source as this collection's live
@@ -2116,7 +2090,7 @@ final class Collection private (
     indexes.valuesIterator.foreach(releaseIndexState)
     indexes = Map.empty
     changeLog = Vector.empty
-    lastWriteTs = ts
+    append(ts)
     ts
   }
 
@@ -2677,10 +2651,11 @@ final class Collection private (
   private def requirePriv(privilege: String): Unit = {
     // database force-deny quota states (reference rootcoord
     // quota_center: database.force.deny.writing/reading reject the
-    // operation with a quota error before any work happens). Write and
-    // DDL verbs call this directly; every facade read reaches it through
-    // the read gate [[readScope]]. The home-db lookup is a driver-side
-    // scan over the registry, negligible next to any Spark job.
+    // operation with a quota error before any work happens). Reads and
+    // deletes reach it through the read gate [[readScope]], row-stamping
+    // writes through the write gate [[writeScope]]; DDL, import and
+    // feed-apply verbs call it directly. The home-db lookup is a
+    // driver-side scan over the registry, negligible next to any job.
     if (Collection.WritePrivileges.contains(privilege))
       Collection.requireDbAllows(this, "database.force.deny.writing", "write")
     else if (Collection.ReadPrivileges.contains(privilege))
@@ -2843,6 +2818,7 @@ final class Collection private (
     * tombstone-free by construction).
     */
   def exportBinlog(dir: String, segments: Int = 4): Unit = {
+    readScope("Query", None) // gate only: the view below is the storage one
     // migration-out reads storage, not the query path: a partial load
     // in effect must NOT drop unloaded partitions from the backup (a
     // round-trip import would silently lose them) — so skip the
@@ -3034,7 +3010,7 @@ final class Collection private (
     ingestFunctions = ingestFunctions.filterNot(_.outputField == field)
     backfillFunctions = backfillFunctions.filterNot(_.outputField == field)
     functionsEverChanged = true
-    lastWriteTs = ts
+    append(ts)
     ts
   }
 
@@ -3051,7 +3027,7 @@ final class Collection private (
     val ts = nextTs()
     droppedFields -= field
     maskedFields += field -> ((ts, default))
-    lastWriteTs = ts
+    append(ts)
     ts
   }
 
@@ -3236,7 +3212,7 @@ final class Collection private (
     * valid); pk / MVCC ts / partition tag are immutable.
     */
   def setField(field: String, updates: DataFrame): Long = mutate {
-    requirePriv("Upsert")
+    writeScope("Upsert", None) // no namespace argument: refused on a tenant collection
     require(field != schema.pkField && field != schema.tsField &&
       field != Collection.PartitionCol, s"cannot patch system field '$field'")
     require(!schema.vectorFields.contains(field),
@@ -3258,12 +3234,7 @@ final class Collection private (
       .select(col(schema.pkField), col(field).as(s"_patch_$field"))
       .withColumn("_patch_ts", lit(ts))
       .localCheckpoint(true) // pin: the caller's lineage may mutate later
-    colPatches += field -> colPatches.get(field)
-      .map(_.unionByName(patch)).getOrElse(patch)
-    logChange(s"patch:$field",
-      patch.select(col(schema.pkField), col("_patch_ts").as(schema.tsField),
-        col(s"_patch_$field")))
-    lastWriteTs = ts
+    append(ts, patches = Map(field -> patch))
     ts
   }
 
@@ -4219,16 +4190,20 @@ final class Collection private (
     * maps them.
     */
   def describeIndex(vectorField: String): Collection.IndexDescription = {
+    requirePriv("IndexDetail")
     val st = indexes.getOrElse(vectorField, throw new NoSuchElementException(
       s"no index on field '$vectorField'"))
-    val visible = readViewUnscoped() // metadata: not scoped to one caller's RLS view
+    // metadata: not scoped to one caller's RLS view; one aggregate job
+    import org.apache.spark.sql.functions.{count => countOf}
+    val rows = readViewUnscoped().agg(countOf(lit(1)),
+      countOf(when(col(schema.tsField) > st.buildTs, 1))).head()
     Collection.IndexDescription(
       field = vectorField,
       indexType = "IVF_FLAT",
       nlist = st.model.nlist,
       indexedRows = st.clusterMap.count(), // persisted map → cheap re-count
-      pendingRows = visible.filter(col(schema.tsField) > st.buildTs).count(),
-      totalRows = visible.count(),
+      pendingRows = rows.getLong(1),
+      totalRows = rows.getLong(0),
       buildTs = st.buildTs)
   }
 
@@ -4241,8 +4216,7 @@ final class Collection private (
     * the build, centroid-assigned per search until a rebuild.
     */
   def getIndexStatistics(field: String): IndexStatistics = {
-    requirePriv("IndexDetail")
-    val d = describeIndex(field) // throws for unknown fields, like the reference
+    val d = describeIndex(field) // gates; throws for unknown fields, like the reference
     IndexStatistics(field, d.indexType, getIndexState(field),
       d.indexedRows, d.totalRows, d.pendingRows)
   }
@@ -4252,15 +4226,17 @@ final class Collection private (
     * no index is `IndexStateNone` — the Unissued/InProgress window is
     * zero-width, same contract as [[manualCompaction]]'s.
     */
-  def getIndexState(vectorField: String): String =
+  def getIndexState(vectorField: String): String = {
+    requirePriv("IndexDetail")
     if (indexes.contains(vectorField)) "Finished" else "IndexStateNone"
+  }
 
   /** GetIndexBuildProgress (reference impl.go): (indexed, total) row
     * counts — post-build writes show up as total > indexed until a
     * rebuild, exactly DescribeIndex's pending-rows view.
     */
   def getIndexBuildProgress(vectorField: String): (Long, Long) = {
-    val d = describeIndex(vectorField)
+    val d = describeIndex(vectorField) // gates
     (d.indexedRows, d.totalRows)
   }
 
@@ -4280,8 +4256,10 @@ final class Collection private (
       indexProps += vectorField -> (indexProps.getOrElse(vectorField, Map.empty) ++ props)
     }
 
-  def describeIndexProperties(vectorField: String): Map[String, String] =
+  def describeIndexProperties(vectorField: String): Map[String, String] = {
+    requirePriv("IndexDetail")
     indexProps.getOrElse(vectorField, Map.empty)
+  }
 
   /** The indexparamcheck field family for a SCALAR field, derived from
     * the schema — TEXT declarations (including DDL-added ones) first,
@@ -4433,9 +4411,9 @@ final class Collection private (
   // same tombstone semantics, no re-stamping. The log is the WAL
   // analogue: at deployment scale it would be the streaming sink the
   // WAL already feeds (Streaming.dedupedIngest), sharing this format.
-  // One entry per logged write or applied feed. Only [[changesSince]]
-  // unions them, once per call: a union per write would grow one plan
-  // that every later write re-analyzes.
+  // One entry per appended part ([[append]] is its only writer). Only
+  // [[changesSince]] unions them, once per call: a union per write
+  // would grow one plan that every later write re-analyzes.
   @volatile private var changeLog: Vector[DataFrame] = Vector.empty
 
   /** The ts of the most recent [[truncate]] (0 if never truncated) —
@@ -4443,8 +4421,34 @@ final class Collection private (
     */
   def truncateTs: Long = truncateHorizon
 
-  private def logChange(op: String, rows: DataFrame): Unit =
-    changeLog :+= rows.withColumn("_op", lit(op))
+  /** The one way a write reaches collection state (the WAL message that
+    * feeds the growing segment, the delete buffer and the change feed):
+    * rows join the growing tail (under the caller's column rule),
+    * (pk, ts) tombstones the delete set and (pk, `_patch_<f>`,
+    * `_patch_ts`) patches their field's log, each with its change-log
+    * entry; the write ts advances to `ts` (alone: a DDL tick). Callers
+    * run in [[mutate]].
+    */
+  private def append(ts: Long,
+      rows: Option[DataFrame] = None,
+      tombstones: Option[DataFrame] = None,
+      patches: Map[String, DataFrame] = Map.empty,
+      allowMissingColumns: Boolean = false): Unit = {
+    rows.foreach { r =>
+      growing = Some(growing.map(_.unionByName(r, allowMissingColumns)).getOrElse(r))
+      changeLog :+= r.withColumn("_op", lit("insert"))
+    }
+    tombstones.foreach { t =>
+      tombs = Some(tombs.map(_.unionByName(t)).getOrElse(t))
+      changeLog :+= t.withColumn("_op", lit("delete"))
+    }
+    patches.foreach { case (field, p) =>
+      colPatches += field -> colPatches.get(field).map(_.unionByName(p)).getOrElse(p)
+      changeLog :+= p.select(col(schema.pkField), col("_patch_ts").as(schema.tsField),
+        col(s"_patch_$field")).withColumn("_op", lit(s"patch:$field"))
+    }
+    lastWriteTs = math.max(lastWriteTs, ts)
+  }
 
   /** The change feed strictly after `sinceTs` (op ∈ insert|delete, rows
     * with their original write ts). Feed it to [[applyChanges]] on a
@@ -4495,12 +4499,17 @@ final class Collection private (
     * feed's horizon so subsequent local writes stay ordered after it.
     */
   def applyChanges(changes: DataFrame): Long = mutate {
+    // a feed lands another collection's pre-stamped rows, like
+    // importBinlog: the import privilege and write-deny quota gate it
+    requirePriv("Import")
     val pinned = changes.localCheckpoint(true)
     // the apply is a local write and takes a local tick: feed rows keep
     // their ORIGIN timestamps (LWW convergence), which can all predate
     // this collection's own writes
     val arrivalTs = nextTs()
-    val ins0 = pinned.filter(col("_op") === "insert").drop("_op")
+    // patch columns stay off the tail (a local insert's union is strict)
+    val ins0 = pinned.filter(col("_op") === "insert")
+      .drop("_op" +: pinned.columns.filter(_.startsWith("_patch_")).toSeq: _*)
     // keep partition tagging consistent with insert(): an untagged feed
     // (pre-partition primary) must not union a null column into growing
     val ins1 =
@@ -4516,38 +4525,27 @@ final class Collection private (
       else externalizeTextFields(ins1)
     val del = pinned.filter(col("_op") === "delete")
       .select(col(schema.pkField), col(schema.tsField))
-    if (!ins.isEmpty)
-      growing = Some(growing.map(_.unionByName(ins, allowMissingColumns = true)).getOrElse(ins))
-    if (!del.isEmpty)
-      tombs = Some(tombs.map(_.unionByName(del)).getOrElse(del))
     // mutable-column patch ops replicate like deletes: tiny (pk, ts,
     // value) rows re-entering the patch log with their ORIGIN ts
     val patchOps = pinned.filter(col("_op").startsWith("patch:"))
       .select(col("_op")).distinct().collect().map(_.getString(0))
-    patchOps.foreach { op =>
+    val patches = patchOps.map { op =>
       val field = op.stripPrefix("patch:")
-      val patch = pinned.filter(col("_op") === op)
+      field -> pinned.filter(col("_op") === op)
         .select(col(schema.pkField), col(s"_patch_$field"),
           col(schema.tsField).as("_patch_ts"))
-      colPatches += field -> colPatches.get(field)
-        .map(_.unionByName(patch)).getOrElse(patch)
-    }
-    // append the applied feed to THIS collection's changelog (original
-    // ops + timestamps), so chained replication (replica-of-replica)
-    // reproduces the full state — a leaf-only replica would otherwise
-    // serve an empty/partial feed from changesSince
-    changeLog :+= pinned
+    }.toMap
     val feedMax = pinned.agg(max(col(schema.tsField))).head() match {
       case r if r.isNullAt(0) => 0L
       case r                  => r.getLong(0)
     }
-    var cur = tso.get()
-    while (feedMax > cur && !tso.compareAndSet(cur, feedMax)) cur = tso.get()
-    if (feedMax > lastWriteTs) lastWriteTs = feedMax
-    // like any local write, the apply moves the write ts (the Strong
-    // read ts, the TTL clock and the next index build's buildTs) to its
-    // own tick
-    if (arrivalTs > lastWriteTs) lastWriteTs = arrivalTs
+    tso.accumulateAndGet(feedMax, (a, b) => math.max(a, b))
+    // the parts enter THIS changelog with their origin ops and ts, so a
+    // replica-of-replica reproduces the full state; like any local write
+    // the apply moves the write ts (Strong read ts, TTL clock, next
+    // index build's buildTs) at least to its own tick
+    append(math.max(arrivalTs, feedMax), Some(ins).filterNot(_.isEmpty),
+      Some(del).filterNot(_.isEmpty), patches, allowMissingColumns = true)
     feedMax
   }
 

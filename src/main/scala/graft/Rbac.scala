@@ -7,12 +7,13 @@ package graft
   *
   * Operation-level security, complementing [[Rls]] (row-level): a user
   * holds roles, a role holds grants of (privilege | privilege group)
-  * on a collection name (`*` = any). Every facade query and search
-  * verb checks its privilege through one gate, `Collection.readScope`,
-  * and write and DDL verbs check theirs, before touching a plan. Three
-  * row-reading methods stay ungated: the engine primitives
-  * `Collection.readView` and `Collection.changesSince`, which fixtures
-  * and replicas read directly, and `Collection.exportBinlog`. Pure
+  * on a collection name (`*` = any). Every facade query, search and
+  * export verb checks its privilege through one gate,
+  * `Collection.readScope`, every row-stamping write through
+  * `Collection.writeScope`, and DDL, import and feed-apply verbs check
+  * theirs directly, before touching a plan. Two row-reading methods stay
+  * ungated: the engine primitives `Collection.readView` and
+  * `Collection.changesSince`, which fixtures and replicas read directly. Pure
   * driver-side metadata — nothing here runs on executors, so
   * enforcement cost is O(grants) per operation, independent of data
   * size.

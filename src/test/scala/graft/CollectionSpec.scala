@@ -382,11 +382,18 @@ class CollectionSpec extends SparkSpec {
     // incremental sync: only the delta ships, original timestamps kept
     primary.insert(mkRows(300L until 310L))
     primary.delete("pk == 3")
+    primary.setField("grp", Seq((7L, 42L), (300L, 43L)).toDF("pk", "grp"))
     replica.applyChanges(primary.changesSince(syncTs))
     assert(view(replica) == view(primary))
     // replica stays writable and ordered after the feed horizon
     replica.insert(mkRows(900L until 905L))
     assert(replica.count() == primary.count() + 5)
+    // replica-of-replica: the replica's own log (applied feeds plus its
+    // local insert) reproduces its view
+    val r2 = Collection.create(spark,
+      CollectionSchema(pkField = "pk", vectorFields = Map("emb" -> 4)))
+    r2.applyChanges(replica.changesSince(0L))
+    assert(view(r2) == view(replica))
   }
 
   test("truncate clears data but keeps the collection usable") {
@@ -1292,10 +1299,16 @@ class CollectionSpec extends SparkSpec {
     val c = fresh()
     c.createIndex("emb", nlist = 2) // so searchIndexed reaches its gate
     Collection.registerCollection("c", c, db)
-    // deny writing: inserts/deletes rejected, reads fine
+    // deny writing: every write verb rejected before any job, reads fine
     Collection.alterDatabase(db, Map("database.force.deny.writing" -> "true"))
     intercept[IllegalStateException](c.insert(mkRows(900L until 910L)))
     intercept[IllegalStateException](c.deletePks(Seq(1L.asInstanceOf[Any])))
+    WriteVerbs.all(c, mkRows).foreach { case (verb, op) =>
+      val e = withClue(verb)(intercept[IllegalStateException](op()))
+      assert(e.getMessage.contains("denies write"), verb)
+    }
+    assert(WriteVerbs.jobsOf(spark)(intercept[IllegalStateException](
+      c.upsertPartial(Seq((1L, 3L)).toDF("pk", "grp")))) == 0)
     assert(c.count() == 50)
     // deny reading: queries rejected, writes restored
     Collection.alterDatabase(db, Map(

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions.col
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
@@ -8,7 +9,8 @@ import org.scalacheck.rng.Seed
   * mutations, each followed by reads that pin and reuse both memos, must
   * answer exactly as a driver-side pk -> row model does. The ops
   * include every site that rewrites the sealed state (flush, compact,
-  * truncate, forceMerge) and both load transitions.
+  * truncate, forceMerge) and both load transitions. At the end of each
+  * sequence a fresh replica fed the change log must hold the model too.
   */
 class MemoCoherenceSpec extends SparkSpec {
   import spark.implicits._
@@ -111,6 +113,18 @@ class MemoCoherenceSpec extends SparkSpec {
       assert(collected(c.query(filter, fields)) == want, at)
       assert(collected(c.queryCached(filter, fields)) == want, at)
       assert(collected(c.queryCached(filter, fields)) == want, at)
+    }
+    // the change log since the last truncate replays to the model, or
+    // the sequence logged no rows at all
+    val feed = scala.util.Try(c.changesSince(c.truncateTs)).toOption
+      .filterNot(_.isEmpty)
+    feed match {
+      case Some(f) =>
+        val replica = Collection.create(spark, CollectionSchema(pkField = "pk"))
+        replica.applyChanges(f)
+        assert(collected(replica.readView().select(fields.map(col): _*)) ==
+          rowsWhere(model)((_, _) => true), s"seed $seed, replica")
+      case None => assert(model.isEmpty, s"seed $seed, nothing logged")
     }
   }
 

@@ -112,21 +112,39 @@ class RbacSpec extends SparkSpec {
     // (the index createIndex builds here serves searchIndexed below)
     ddl.take(3).foreach { case (verb, op) => withClue(verb)(op()) }
     c.setUser(Rls.UserContext("alice"))
-    // every read verb passes the reader's grant...
-    ReadVerbs.all(c).foreach { case (verb, op) => withClue(verb)(op()) }
+    // every write verb refuses the reader, and a refused partial upsert
+    // starts no Spark job (the gate runs before its merge join)
+    WriteVerbs.all(c, mkRows).foreach { case (verb, op) =>
+      withClue(verb)(intercept[SecurityException](op()))
+    }
+    assert(WriteVerbs.jobsOf(spark)(intercept[SecurityException](
+      c.upsertPartial(Seq((1L, 3L)).toDF("pk", "grp")))) == 0)
+    // every read verb and index describe passes the reader's grant...
+    val indexReads = Seq[(String, () => Any)](
+      "describeIndex" -> (() => c.describeIndex("emb")),
+      "getIndexState" -> (() => c.getIndexState("emb")),
+      "getIndexBuildProgress" -> (() => c.getIndexBuildProgress("emb")),
+      "describeIndexProperties" -> (() => c.describeIndexProperties("emb")))
+    (ReadVerbs.all(c) ++ indexReads).foreach { case (verb, op) =>
+      withClue(verb)(op())
+    }
     // ...and revoking the read grant closes every one of them
     reg.revoke("reader", "CollectionReadOnly", "events")
     intercept[SecurityException] { c.count() }
-    ReadVerbs.all(c).foreach { case (verb, op) =>
+    (ReadVerbs.all(c) ++ indexReads).foreach { case (verb, op) =>
       withClue(verb)(intercept[SecurityException](op()))
     }
-    // upsert is its own privilege, not Insert (reference semantics)
+    // upsert is its own privilege, not Insert (reference semantics): it
+    // covers upsert, partial upsert and setField, and nothing else
     reg.createRole("upserter")
     reg.addUserToRole("carol", "upserter")
     reg.grant("upserter", "Upsert", "events")
     c.setUser(Rls.UserContext("carol"))
-    c.upsert(mkRows(Seq(5L)))
-    intercept[SecurityException] { c.insert(mkRows(Seq(200L))) }
+    val upserts = Set("upsert", "upsertPartial", "setField")
+    WriteVerbs.all(c, mkRows).foreach { case (verb, op) =>
+      if (upserts(verb)) withClue(verb)(op())
+      else withClue(verb)(intercept[SecurityException](op()))
+    }
     // disabling restores open access
     c.disableRbac()
     c.setUser(Rls.UserContext("alice"))

@@ -1,9 +1,10 @@
 package graft
 
-/** Every facade read verb, one small call each, for specs that check the
-  * reads pass one gate (RBAC, the database read-deny quota). The
-  * collection needs an int64 pk `pk`, a 4-d vector field `emb`, an int
-  * field `grp`, a row with pk 1 and an IVF index on `emb`.
+/** Every facade read verb (and the binlog export), one small call each,
+  * for specs that check the reads pass one gate (RBAC, the database
+  * read-deny quota). The collection needs an int64 pk `pk`, a 4-d vector
+  * field `emb`, an int field `grp`, a row with pk 1 and an IVF index on
+  * `emb`.
   */
 object ReadVerbs {
 
@@ -25,6 +26,8 @@ object ReadVerbs {
         c.groupBySearch("emb", qs, k = 1, groupFields = Seq("grp"))),
       "searchIterator" -> (() => c.searchIterator("emb", qs, batch = 5)),
       "hybridSearch" -> (() => c.hybridSearch(Seq(c.SubSearch("emb", qs)), k = 1)),
-      "searchIndexed" -> (() => c.searchIndexed("emb", qs, k = 1, nprobe = 1)))
+      "searchIndexed" -> (() => c.searchIndexed("emb", qs, k = 1, nprobe = 1)),
+      "exportBinlog" -> (() => c.exportBinlog(
+        java.nio.file.Files.createTempDirectory("graft_export").toString + "/out")))
   }
 }
