@@ -208,12 +208,11 @@ final class Collection private (
   /** Segment dirs -> sealed source: the dirs' frames in a left-deep
     * by-name union in list order, then the truncate cut.
     */
-  private def sealedOf(segs: Seq[String]): Option[DataFrame] = {
-    val horizon = truncateHorizon
+  private def sealedOf(segs: Seq[String],
+      horizon: Long = truncateHorizon): Option[DataFrame] =
     segs.map(recordOf(_).df)
       .reduceOption(_.unionByName(_, allowMissingColumns = true))
       .map(df => if (horizon > 0L) df.filter(col(schema.tsField) > horizon) else df)
-  }
 
   @volatile private var sealedDf: Option[DataFrame] = {
     sealedSegments.foreach(register(_))
@@ -221,10 +220,11 @@ final class Collection private (
   }
 
   /** Publish `segs` as the live segment list, rebuild the sealed source
-    * from its records, trim the record map to it and [[repin]], so a
-    * loaded collection keeps exactly one pin per resident artifact and
-    * NotLoad none. Flush, fold, compaction and force-merge [[register]]
-    * their new dir with its written schema first.
+    * from its records, trim the record map to it, move a pinned
+    * resident collapse to the new state ([[collapse]]) and [[repin]],
+    * so a loaded collection keeps exactly one pin per resident artifact
+    * and NotLoad none. Flush, fold, compaction and force-merge
+    * [[register]] their new dir with its written schema first.
     */
   private def reseal(segs: Vector[String]): Unit = {
     import scala.jdk.CollectionConverters._
@@ -232,6 +232,9 @@ final class Collection private (
     sealedDf = sealedOf(segs)
     sealedSegments = segs
     segRecords.keySet.retainAll(segs.asJava)
+    collapseTs = lastWriteTs
+    collapse = collapse.filter(_.pinned)
+      .flatMap(c => collapseOf(c.scope)).map(_.copy(pinned = true))
     repin()
   }
 
@@ -529,12 +532,15 @@ final class Collection private (
     unload()
   }
 
-  /** NotLoad with no partition or field scope (release and close). */
+  /** NotLoad with no partition or field scope and no resident collapse
+    * (release and close).
+    */
   private def unload(): Unit = {
     loadedPartitions = None
     loadedFields = None
     skipDynamic = false
     loadedFlag = false
+    collapse = None
     repin()
   }
 
@@ -562,19 +568,22 @@ final class Collection private (
   @volatile private var pins: Seq[((DataFrame, Option[Set[String]]), DataFrame)] = Nil
 
   /** The one residency rule: the only code that persists or unpersists
-    * the sealed layout, its partition-scoped view or the blob store.
-    * Wanted: nothing when NotLoad; else the sealed source (filtered to
-    * the loaded partitions under a partial load), plus the blob store
-    * when [[lobResident]]. Held pins not wanted are unpersisted, wanted
-    * ones not held are persisted — so a loaded collection holds exactly
-    * one pin per resident artifact and NotLoad holds none. Pins are
-    * lazy: the first read (or [[load]]'s warmup) materializes them.
+    * the sealed layout, its partition-scoped view, the blob store or a
+    * resident collapse. Wanted: the pinned resident collapse, plus
+    * when loaded the sealed source (filtered to the loaded partitions
+    * under a partial load) and the blob store when [[lobResident]].
+    * Held pins not wanted are unpersisted, wanted ones not held are
+    * persisted — so a loaded collection holds exactly one pin per
+    * resident artifact and a NotLoad one only its pinned collapse.
+    * Pins are lazy: the first read (or [[load]]'s warmup) materializes
+    * them.
     */
   private def repin(): Unit = {
     val wanted =
-      if (!loadedFlag) Nil
-      else sealedDf.map(_ -> loadedPartitions).toSeq ++
-        lobSealed.filter(_ => lobResident).map(_ -> None)
+      residentCollapse.map(_ -> None).toList ++
+        (if (!loadedFlag) Nil
+        else sealedDf.map(_ -> loadedPartitions).toSeq ++
+          lobSealed.filter(_ => lobResident).map(_ -> None))
     val (keep, drop) = pins.partition { case (k, _) => wanted.contains(k) }
     drop.foreach(_._2.unpersist())
     pins = keep ++ wanted.filterNot(k => keep.exists(_._1 == k)).map {
@@ -2308,11 +2317,10 @@ final class Collection private (
     * versions, tombstone keys, and patch matches live inside retained
     * segments by the min/max containment argument in [[PkPruning]].
     */
-  private def keptSealed(d: Option[graft.operators.PkPruning.Domain],
+  private def keptSealed(segs: Vector[String],
+      d: Option[graft.operators.PkPruning.Domain],
       tsBound: Option[Long]): Option[Seq[String]] = {
-    val segs = sealedSegments
-    if (segs.size <= 1 || sealedDf.isEmpty ||
-        (d.isEmpty && tsBound.isEmpty)) None
+    if (segs.size <= 1 || (d.isEmpty && tsBound.isEmpty)) None
     else {
       val keep = segs.filter { p =>
         val pkOk = d.forall(segmentMayContain(p, _))
@@ -2329,18 +2337,19 @@ final class Collection private (
     }
   }
 
-  /** The sealed source restricted to the [[keptSealed]] segments. */
-  private def prunedSealed(keep: Seq[String]): Option[DataFrame] =
-    sealedDf.map { fullDf =>
-      sealedOf(keep).fold(fullDf.filter(lit(false))) { kept =>
-        // align to the full sealed schema — a pruned subset may miss
-        // columns later segments introduced
-        val cols = fullDf.schema.fields.map { f =>
-          if (kept.columns.contains(f.name)) col(f.name)
-          else lit(null).cast(f.dataType).as(f.name)
-        }
-        kept.select(cols.toIndexedSeq: _*)
+  /** The sealed source `fullDf` restricted to the [[keptSealed]]
+    * segments, cut at `horizon`.
+    */
+  private def prunedSealed(fullDf: DataFrame, keep: Seq[String],
+      horizon: Long): DataFrame =
+    sealedOf(keep, horizon).fold(fullDf.filter(lit(false))) { kept =>
+      // align to the full sealed schema — a pruned subset may miss
+      // columns later segments introduced
+      val cols = fullDf.schema.fields.map { f =>
+        if (kept.columns.contains(f.name)) col(f.name)
+        else lit(null).cast(f.dataType).as(f.name)
       }
+      kept.select(cols.toIndexedSeq: _*)
     }
 
   /** Which sealed segment paths a filter would dispatch to — the
@@ -2841,7 +2850,7 @@ final class Collection private (
     * matching [[bulkImport]]'s contract.
     */
   def importBinlog(dir: String): Long = {
-    requirePriv("Import")
+    writeScope("Import", None) // no namespace argument: refused on a tenant collection
     insertImpl(graft.sources.Binlog.readSegments(spark, dir))
     recordImport("binlog", Seq(dir))
   }
@@ -2853,7 +2862,7 @@ final class Collection private (
     * the task lands in the import registry for progress polling.
     */
   def bulkImport(format: String, path: String): Long = {
-    requirePriv("Import")
+    writeScope("Import", None) // no namespace argument: refused on a tenant collection
     insertImpl(graft.sources.BulkImport.read(spark, format, path))
     recordImport(format, Seq(path))
   }
@@ -2889,7 +2898,7 @@ final class Collection private (
     * the path) but stay invisible until [[commitImport]].
     */
   def bulkImportUncommitted(format: String, path: String): Long = {
-    requirePriv("Import")
+    writeScope("Import", None) // no namespace argument: refused on a tenant collection
     val batch = graft.sources.BulkImport.read(spark, format, path)
       .localCheckpoint(true)
     stateLock.synchronized {
@@ -2914,7 +2923,7 @@ final class Collection private (
     * localCheckpoint-pinned, so the job is one bounded union append.
     */
   def commitImport(id: Long): Unit = stateLock.synchronized {
-    requirePriv("Import") // the commit fence is a write verb like the staging one
+    writeScope("Import", None) // the commit fence is a write verb like the staging one
     val t = getImportProgress(id)
     t.state match {
       case "Committing" | "Completed" => () // idempotent success
@@ -3323,14 +3332,15 @@ final class Collection private (
     }
     val readTs = Mvcc.resolveReadTs(level, writeTs, writeTs, staleness, sessionTs)
     val tsBound = if (readTs < writeTs) Some(readTs) else None
-    if (!cacheable)
+    if (!cacheable) {
+      val segs = sealedSegments
       return buildReadViewUnscoped(readTs, ttl, preFilter, ignoreGrowing,
-        keptSealed(pkDomain, tsBound))
+        readState(segs, keptSealed(segs, pkDomain, tsBound), None))
+    }
     def keyOf(sealedSlot: String): String =
       Seq(level.id, staleness, sessionTs, gen,
         ttl.map(_.toString).getOrElse("-"),
-        preFilter.map(_.toString).getOrElse("-"),
-        ignoreGrowing, sealedSlot).mkString("|")
+        scopeKey(preFilter), ignoreGrowing, sealedSlot).mkString("|")
     // resident-view rule: a pinned unpruned view of the same scope serves
     // a pk-anchored read — every caller applies its pk predicate on top,
     // and (pruned view ∩ pk predicate) = (full view ∩ pk predicate)
@@ -3338,15 +3348,57 @@ final class Collection private (
       if (pkDomain.isEmpty) None
       else stateLock.synchronized(viewCache.get(keyOf("-"), pinnedOnly = true))
     resident.getOrElse {
-      val kept = keptSealed(pkDomain, tsBound)
-      val key = keyOf(kept.fold("-")(_.sorted.mkString("[", ",", "]")))
+      // a pinned collapse serves a pk-anchored read whole (the pk
+      // predicate filters it in memory); while unpinned, the read prunes
+      // segments instead
+      val segs = sealedSegments
+      val collapsePinned = stateLock.synchronized(collapseTs <= readTs &&
+        collapse.exists(c =>
+          c.pinned && scopeKey(c.scope) == scopeKey(preFilter)))
+      val kept =
+        if (collapsePinned) None else keptSealed(segs, pkDomain, tsBound)
+      // an unpruned read at or above the watermark reads the collapse,
+      // whether it builds its view now or the memo serves one built on it
+      val state = readState(segs, kept, readCollapse(preFilter, readTs))
+      val key = keyOf(state.kept.fold("-")(_.sorted.mkString("[", ",", "]")))
       stateLock.synchronized(viewCache.get(key)).getOrElse {
         val df = buildReadViewUnscoped(readTs, ttl, preFilter, ignoreGrowing,
-          kept)
+          state)
         stateLock.synchronized(if (generation == gen) viewCache.put(key, df))
         df
       }
     }
+  }
+
+  /** The state one read view is built from.
+    *
+    * @param kept the sealed segments a pk/ts-pruned read scans (None:
+    *   all of them)
+    * @param collapse the resident collapse R of the read's scope, at a
+    *   watermark ≤ the read ts: the view merges only the growing tail
+    *   and the tombstones on top of it. None: the read collapses the
+    *   sealed segments itself.
+    */
+  private final case class ReadState(
+      sealedSrc: Option[DataFrame],
+      horizon: Long,
+      kept: Option[Seq[String]],
+      collapse: Option[DataFrame],
+      growing: Option[DataFrame],
+      tombs: Option[DataFrame])
+
+  /** One [[ReadState]] taken under one stateLock hold. A flush publishes
+    * the new sealed state (and the next collapse) and clears the growing
+    * tail under the same lock, so a read sees the flushed rows in exactly
+    * one of the two. `kept` was decided on `segs` outside the lock; a
+    * reseal since then voids it, and the read takes the whole new state.
+    * `r` (evaluated only for an unpruned read) is the scope's R.
+    */
+  private def readState(segs: Vector[String], kept: Option[Seq[String]],
+      r: => Option[DataFrame]): ReadState = stateLock.synchronized {
+    val k = kept.filter(_ => sealedSegments eq segs)
+    ReadState(sealedDf, truncateHorizon, k,
+      if (k.isEmpty) r else None, growing, tombs)
   }
 
   private def buildReadViewUnscoped(
@@ -3354,39 +3406,57 @@ final class Collection private (
       ttl: Option[Column],
       preFilter: Option[Column],
       ignoreGrowing: Boolean,
-      keptSegments: Option[Seq[String]]): DataFrame = {
-    // a pk-anchored filter prunes the sealed FILE list before any scan
-    // (MEP 20260324), and a time-travel read additionally skips
-    // segments sealed entirely after the read ts (MEP 20260602 ts
-    // range); the growing tail always rides along — it has no file
-    // stats and is small by the seal policy
-    val sealedSrc: Option[DataFrame] =
-      keptSegments.flatMap(prunedSealed).orElse(sealedDf)
+      state: ReadState): DataFrame = {
+    def visible(df: DataFrame) = Mvcc.visible(df, schema.pkField,
+      schema.tsField, lit(readTs), tombstones = state.tombs, ttl = ttl)
+    def latest(df: DataFrame) =
+      Mvcc.latestByPk(df, schema.pkField, schema.tsField, schema.pkField)
     // ignore_growing (reference search/query param): serve SEALED
     // segments only — the un-flushed tail is skipped entirely, trading
-    // freshness for not touching the in-memory segment
-    val src =
-      if (!ignoreGrowing) (sealedSrc, growing) match {
-        case (Some(s), Some(g)) => s.unionByName(g, allowMissingColumns = true)
-        case (Some(s), None)    => s
-        case (None, Some(g))    => g
-        case (None, None)       => raw // throws the empty-collection error
-      }
-      else sealedSrc.getOrElse(growing.map(_.filter(lit(false))).getOrElse(raw))
-    // partition scope lands UNDER the MVCC aggregate so it reaches the
-    // scan (PartitionFilters on a flushed hive layout); rows missing
-    // the tag (pre-partition sealed data) are never scope-visible
-    val base = preFilter.map(src.filter).getOrElse(src)
-    val visible = Mvcc.visible(base, schema.pkField, schema.tsField, lit(readTs),
-      tombstones = tombs, ttl = ttl)
+    // freshness for not touching the in-memory segment. Partition scope
+    // lands UNDER the MVCC aggregate so it reaches the scan
+    // (PartitionFilters on a flushed hive layout); rows missing the tag
+    // (pre-partition sealed data) are never scope-visible.
+    val tail = state.growing.filter(_ => !ignoreGrowing)
+      .map(g => preFilter.map(g.filter).getOrElse(g))
     // patches overlay the SURVIVING row version (after LWW). Field DDL
     // runs FIRST so a patch on a DDL-added (masked) field lands on the
     // materialized column — otherwise the default mask would clobber it
     // for pre-addTs rows (and skip it entirely before any post-DDL batch
     // carries the column). Drop still wins: dropField clears the
     // field's patch log, so ordering cannot resurrect dropped patches.
-    val collapsed =
-      Mvcc.latestByPk(visible, schema.pkField, schema.tsField, schema.pkField)
+    val collapsed = (state.collapse, tail) match {
+      // R holds each sealed pk's latest version at its watermark, and
+      // that version is visible at readTs iff the pk's sealed history
+      // is (a tombstone or TTL cut that hides it hides every older
+      // version too). So pks the tail never wrote are R's rows through
+      // the visibility cut; the rest re-collapse with their tail
+      // versions — a merge over the tail's size, not the corpus's.
+      case (Some(r), Some(g)) =>
+        val pks = g.select(col(schema.pkField))
+        visible(r.join(pks, Seq(schema.pkField), "left_anti")).unionByName(
+          latest(visible(r.join(pks, Seq(schema.pkField), "left_semi")
+            .unionByName(g, allowMissingColumns = true))),
+          allowMissingColumns = true)
+      case (Some(r), None) => visible(r)
+      case (None, _) =>
+        // a pk-anchored filter prunes the sealed FILE list before any
+        // scan (MEP 20260324), and a time-travel read additionally skips
+        // segments sealed entirely after the read ts (MEP 20260602 ts
+        // range); the growing tail always rides along — it has no file
+        // stats and is small by the seal policy
+        val sealedSrc = state.sealedSrc
+          .map(s => state.kept.fold(s)(prunedSealed(s, _, state.horizon)))
+          .map(s => preFilter.map(s.filter).getOrElse(s))
+        latest(visible((sealedSrc, tail) match {
+          case (Some(s), Some(g)) => s.unionByName(g, allowMissingColumns = true)
+          case (Some(s), None)    => s
+          case (None, Some(g))    => g
+          case (None, None) if ignoreGrowing =>
+            state.growing.map(_.filter(lit(false))).getOrElse(raw)
+          case (None, None)       => raw // throws the empty-collection error
+        }))
+    }
     // TEXT-LOB resolve: re-attach externalized payloads so every
     // downstream consumer — filter compile (text_match/phrase over the
     // column), BM25/function backfill, projections, iterators — sees
@@ -3439,7 +3509,8 @@ final class Collection private (
   }
 
   // ---- facade memos: two driver-side memos over one device,
-  // [[Collection.PinnedLru]].
+  // [[Collection.PinnedLru]], above one resident sealed collapse
+  // ([[collapse]]).
   //
   // `filterCache` is [[queryCached]]'s compiled-filter result cache
   // (reference: exec/expression/ExprCache.cpp — per-segment cache of
@@ -3475,6 +3546,24 @@ final class Collection private (
   // memos and bumps `generation`, and both keys carry the generation.
   // Clearing is eager — a pinned entry holds executor memory, so stale
   // entries must not age out lazily.
+  //
+  // Below both memos, and outliving the writes that clear them, sits the
+  // resident sealed collapse R: `latestByPk(visible(sealed, w))` over the
+  // live segment list and truncate horizon, for one partition pre-filter
+  // at a time (the reference's querynode keeps sealed segments loaded,
+  // and a read applies only the growing segment and the (pk, ts) delete
+  // records — segcore/DeletedRecord.h, MvccNode.cpp). A read at readTs ≥ w builds
+  // its view as R's untouched pks through the visibility cut plus a
+  // re-collapse of the pks the growing tail wrote, so a write leaves the
+  // corpus-wide sort of the sealed rows done; only a reseal (flush,
+  // fold, compaction, force-merge, truncate) makes a new R, and a read in
+  // another scope replaces it. R is a plan until a read materializes it,
+  // and pinned once it is read again after a write dropped the view memo
+  // (until then the view memo's own pin serves every read); [[reseal]]
+  // moves its pin to the new state's R (flush and compact run no job for
+  // it), and [[repin]] persists and unpersists it with the load pins.
+  // Time travel below w, and pk-anchored reads while R is unpinned,
+  // collapse the (pruned) segments themselves.
   private val filterCache =
     new Collection.PinnedLru[(String, Long, String)](capacity = 16, pinAtRead = 1)
   // Nth read of the same view pins it (persist). 2 = the battery
@@ -3482,6 +3571,61 @@ final class Collection private (
   private val viewCache = new Collection.PinnedLru[String](capacity = 8, pinAtRead = 2)
   // guarded by stateLock; assigned only by dropMemos
   private var generation = 0L
+
+  /** The resident sealed collapse: `df` is R over the current sealed
+    * state under the read scope `scope`, at watermark [[collapseTs]];
+    * `gen` is the generation of its first read.
+    */
+  private final case class Collapse(scope: Option[Column], df: DataFrame,
+      gen: Long, pinned: Boolean)
+
+  private def scopeKey(scope: Option[Column]): String =
+    scope.fold("-")(_.toString)
+
+  // one scope's collapse of the current sealed state; guarded by
+  // stateLock, assigned only by reseal, unload and readCollapse
+  private var collapse: Option[Collapse] = None
+  // the watermark w of the collapse: the write ts when reseal last
+  // published the sealed state, so at least every sealed row's ts
+  @volatile private var collapseTs: Long = lastWriteTs
+
+  /** R for `scope` over the current sealed state (None when nothing is
+    * sealed): a plan, no job.
+    */
+  private def collapseOf(scope: Option[Column]): Option[Collapse] =
+    sealedDf.map { s =>
+      val visible = Mvcc.visible(scope.fold(s)(s.filter), schema.pkField,
+        schema.tsField, lit(collapseTs))
+      Collapse(scope, Mvcc.latestByPk(visible, schema.pkField,
+        schema.tsField, schema.pkField), generation, pinned = false)
+    }
+
+  /** `scope`'s collapse for a read at `readTs` (None when nothing is
+    * sealed or the read is below the watermark). A read in another scope
+    * than the held one replaces it. The collapse is pinned when it is
+    * read at a later generation than its first read: a write dropped the
+    * view memo in between, so the collapse outlives a view. A collection
+    * that never writes is served by its pinned view alone. Caller holds
+    * stateLock.
+    */
+  private def readCollapse(scope: Option[Column], readTs: Long)
+      : Option[DataFrame] =
+    if (readTs < collapseTs) None
+    else {
+      val held = residentCollapse
+      collapse = collapse.filter(c => scopeKey(c.scope) == scopeKey(scope))
+        .orElse(collapseOf(scope))
+        .map(c =>
+          if (c.pinned || c.gen == generation) c else c.copy(pinned = true))
+      if (residentCollapse != held) repin()
+      collapse.map(_.df)
+    }
+
+  /** The pinned collapse's frame (the residency invariant made
+    * observable).
+    */
+  private[graft] def residentCollapse: Option[DataFrame] =
+    stateLock.synchronized(collapse.filter(_.pinned).map(_.df))
 
   private[graft] def filterCacheStats: (Long, Long) =
     stateLock.synchronized((filterCache.hits, filterCache.misses))

@@ -14,11 +14,13 @@ import org.apache.spark.sql.{Column, DataFrame}
   *
   * Scale notes: visibility is a pushdown-friendly `_ts <= readTs`
   * predicate (Parquet zone-maps prune whole row groups once data is
-  * laid out by time) plus ONE left-anti join against the tombstone set —
-  * tombstones are usually tiny relative to data, so Spark broadcasts
-  * them (AQE does this automatically; `broadcast()` hint applied when
-  * small). Upsert LWW uses `max_by` hash aggregation (partial+final),
-  * not a window, so there is no single-reducer sort at 100 TB.
+  * laid out by time) plus ONE conditional left-anti join against the
+  * tombstone set (`pk = t.pk ∧ ts ≤ t.ts ≤ readTs`), with no aggregate
+  * over the tombstones — they are usually tiny relative to data, so AQE
+  * broadcasts them on its own. Upsert LWW uses `max_by` aggregation
+  * (partial+final), not a window, so there is no single-reducer sort at
+  * 100 TB, and the collapse emits the pk from its grouping key, so a pk
+  * predicate above it reaches the scans' `PushedFilters`.
   */
 /** Consistency levels (reference: proxy/util.go:1301-1320 — the level
   * picks the `guarantee_ts` a read waits for / filters at).
@@ -93,31 +95,32 @@ object Mvcc {
     }
     tombstones match {
       case Some(tombs) =>
-        val activeTombs = tombs
-          .filter(col(tsCol) <= readTs)
-          .groupBy(col(pkCol)).agg(max(col(tsCol)).as("_tomb_ts"))
+        val active = tombs.filter(col(tsCol) <= readTs)
+          .select(col(pkCol).as("_tomb_pk"), col(tsCol).as("_tomb_ts"))
         // no broadcast hint: tombstones are usually tiny and AQE picks a
         // broadcast join on its own, but a delete-heavy table (tombstones
         // ≈ data) must be allowed to fall back to a shuffle join instead
         // of OOMing the driver on a forced broadcast.
-        unexpired
-          .join(activeTombs, Seq(pkCol), "left")
-          .filter(col("_tomb_ts").isNull || col(tsCol) > col("_tomb_ts"))
-          .drop("_tomb_ts")
+        unexpired.join(active,
+          col(pkCol) === col("_tomb_pk") && col("_tomb_ts") >= col(tsCol),
+          "left_anti")
       case None => unexpired
     }
   }
 
   /** Last-writer-wins collapse: one row per pk — the one with the
-    * highest (ts, tiebreak) — via partial-aggregating max_by.
+    * highest (ts, tiebreak) — via partial-aggregating max_by. The pk
+    * comes out of the grouping key, not the payload, so a pk predicate
+    * above the collapse is pushed below it.
     */
   def latestByPk(data: DataFrame, pkCol: String, tsCol: String,
       tiebreakCol: String): DataFrame = {
-    val payload = struct(data.columns.map(col): _*)
+    val payload = struct(data.columns.filterNot(_ == pkCol).map(col): _*)
     data
-      .groupBy(col(pkCol).as("_pk"))
+      .groupBy(col(pkCol))
       .agg(max_by(payload, struct(col(tsCol), col(tiebreakCol))).as("_row"))
-      .select(data.columns.map(c => col(s"_row.$c")): _*)
+      .select(data.columns.map(c =>
+        if (c == pkCol) col(pkCol) else col(s"_row.$c")): _*)
   }
 
   /** Apply a batch of upserts to a base snapshot: rows in `updates`

@@ -9,7 +9,10 @@ import org.scalacheck.rng.Seed
   * mutations, each followed by reads that pin and reuse both memos, must
   * answer exactly as a driver-side pk -> row model does. The ops
   * include every site that rewrites the sealed state (flush, compact,
-  * truncate, forceMerge) and both load transitions. At the end of each
+  * truncate, forceMerge) and both load transitions. The reads include a
+  * partition-scoped one, which takes its own resident sealed collapse,
+  * and after each op that changes the sealed state an ignoreGrowing
+  * count, checked against the pks sealed so far. At the end of each
   * sequence a fresh replica fed the change log must hold the model too.
   */
 class MemoCoherenceSpec extends SparkSpec {
@@ -39,12 +42,16 @@ class MemoCoherenceSpec extends SparkSpec {
     val c = Collection.create(spark, CollectionSchema(pkField = "pk"))
     val path = "/tmp/graft_test_memocoh_" + System.nanoTime()
     var model = Map.empty[Long, (Long, String)]
+    // the pks an ignoreGrowing read sees: the model's at the last seal,
+    // minus every pk deleted since (a tombstone hides sealed versions)
+    var sealedPks = Set.empty[Long]
     Seq(0L until 20L, 20L until 40L).foreach { r =>
       val rows = r.map(pk => pk -> ((pk % Groups, s"v$pk")))
       c.insert(df(rows))
       model ++= rows
       c.flush(path)
     }
+    sealedPks = model.keySet
     var nextPk = 40L
     val filter = s"grp < ${Groups / 2}"
     ops.zipWithIndex.foreach { case (op, step) =>
@@ -70,11 +77,13 @@ class MemoCoherenceSpec extends SparkSpec {
           val pks = picked(ps)
           c.deletePks(pks)
           model --= pks
+          sealedPks --= pks
           pks
         case DeleteExpr(g) =>
           val pks = model.collect { case (pk, (grp, _)) if grp == g => pk }.toSeq
           c.delete(s"grp == $g")
           model --= pks
+          sealedPks --= pks
           pks
         case SetField(ps, v) =>
           val pks = picked(ps)
@@ -83,10 +92,12 @@ class MemoCoherenceSpec extends SparkSpec {
           pks
         case Flush =>
           c.flush(path)
+          sealedPks = model.keySet
           Nil
         case Compact =>
           c.flush(path) // compaction needs a sealed tail
           c.compact(path)
+          sealedPks = model.keySet
           Nil
         case Load =>
           c.load()
@@ -97,6 +108,7 @@ class MemoCoherenceSpec extends SparkSpec {
         case Truncate =>
           c.truncate()
           model = Map.empty
+          sealedPks = Set.empty
           Nil
         case ForceMerge =>
           c.forceMerge(path, 2048)
@@ -113,6 +125,13 @@ class MemoCoherenceSpec extends SparkSpec {
       assert(collected(c.query(filter, fields)) == want, at)
       assert(collected(c.queryCached(filter, fields)) == want, at)
       assert(collected(c.queryCached(filter, fields)) == want, at)
+      // a partition-scoped read takes its own (keyed) sealed collapse
+      val default = Seq(Collection.DefaultPartition)
+      assert(c.count(partitionNames = default) == model.size.toLong, at)
+      assert(collected(c.query(filter, fields, partitionNames = default)) == want, at)
+      // the sealed side alone, right after the sealed state changed
+      if (Set[Op](Flush, Compact, ForceMerge).contains(op))
+        assert(c.count(ignoreGrowing = true) == sealedPks.size.toLong, at)
     }
     // the change log since the last truncate replays to the model, or
     // the sequence logged no rows at all

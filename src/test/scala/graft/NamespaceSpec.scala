@@ -204,6 +204,34 @@ class NamespaceSpec extends SparkSpec {
     intercept[IllegalArgumentException](c.deletePks(Seq(2L)))
   }
 
+  test("import verbs take the write gate: an unscoped import is refused before any job") {
+    val dir = "/tmp/graft_test_ns_import_" + System.nanoTime()
+    rows(_ => "").filter(col("id") > 20).write.parquet(dir)
+    Seq(Collection.NamespaceModePartitionKey, Collection.NamespaceModePartition).foreach { mode =>
+      val c = Collection.create(spark, CollectionSchema(pkField = "id",
+        enableNamespace = true))
+      if (mode == Collection.NamespaceModePartition)
+        c.alterCollection(Map(Collection.NamespaceModeKey -> mode))
+      c.insert(rows(_ => "").filter(col("id") <= 10), Some("t"))
+      Seq[(String, () => Any)](
+        "bulkImport" -> (() => c.bulkImport("parquet", dir)),
+        "importBinlog" -> (() => c.importBinlog(dir)),
+        "bulkImportUncommitted" -> (() => c.bulkImportUncommitted("parquet", dir)),
+        "commitImport" -> (() => c.commitImport(1L))
+      ).foreach { case (verb, call) =>
+        var refused: Option[Throwable] = None
+        val jobs = WriteVerbs.jobsOf(spark) {
+          try call() catch { case e: Exception => refused = Some(e) }
+        }
+        assert(refused.exists(e => e.isInstanceOf[IllegalArgumentException] &&
+          e.getMessage.contains("namespace data is not set but namespace enabled")),
+          s"$mode $verb: $refused")
+        assert(jobs == 0, s"$mode $verb ran $jobs Spark jobs before refusing")
+      }
+      assert(c.count("", namespace = Some("t")) == 10L, mode)
+    }
+  }
+
   test("partition-key bucket scope prunes the flushed layout at directory level") {
     val c = Collection.create(spark, CollectionSchema(pkField = "id",
       partitionKeyField = Some("grp"), numPartitions = 8))

@@ -152,6 +152,125 @@ class ReadViewMemoSpec extends SparkSpec {
     }
   }
 
+  /** Ids of the cached RDDs alive now, local checkpoints (write inputs)
+    * left out.
+    */
+  private def cachePins(): Set[Int] =
+    spark.sparkContext.getPersistentRDDs
+      .collect { case (id, rdd) if !rdd.isCheckpointed => id }.toSet
+
+  test("a pinned sealed collapse stays resident across writes") {
+    val (c, _) = multiSeg()
+    var model = ((0L until 300L) :+ 400L).map(i => i -> (i % 7, s"v$i")).toMap
+    val baseline = cachePins()
+    // with no write in between, the pinned view serves every read: the
+    // collapse stays a plan
+    (1 to 3).foreach(_ => assert(c.count() == model.size.toLong))
+    assert(c.residentCollapse.isEmpty, "reads with no write pinned the collapse")
+    assert((cachePins() -- baseline).size == 1, "more than the view pinned")
+    // read again after a write dropped the view memo, the collapse pins;
+    // a single read pins no view, so what stays cached is the collapse
+    c.insert(rows(Seq(500L)))
+    model += 500L -> (500L % 7, "v500")
+    assert(c.count() == model.size.toLong)
+    val Some(r) = c.residentCollapse
+    val rPins = cachePins() -- baseline
+    assert(rPins.size == 1 && r.storageLevel.useMemory)
+    def write(label: String)(f: => Unit): Unit = {
+      f
+      (1 to 2).foreach(_ => assert(c.count() == model.size.toLong, label))
+      assert(pkReads(c) == expected(model), label)
+      assert(c.residentCollapse.exists(_ eq r), s"$label replaced the collapse")
+      assert(rPins.subsetOf(cachePins()), s"$label unpersisted the collapse")
+    }
+    write("insert") {
+      c.insert(rows(Seq(501L)))
+      model += 501L -> (501L % 7, "v501")
+    }
+    write("upsert") {
+      c.upsert(rows(Seq(50L, 250L, 400L), "u"))
+      model ++= Seq(50L, 250L, 400L).map(i => i -> (i % 7, s"u$i"))
+    }
+    write("deletePks") {
+      c.deletePks(Seq(150L, 400L))
+      model --= Seq(150L, 400L)
+    }
+    write("delete(expr)") {
+      c.delete("pk in [160, 290]")
+      model --= Seq(160L, 290L)
+    }
+    write("setField") {
+      c.setField("grp", Seq((50L, 9L), (250L, 9L)).toDF("pk", "grp"))
+      model ++= Seq(50L, 250L).map(i => i -> (9L, model(i)._2))
+    }
+    // the read memo pins views; a NotLoad collection holds no load pin
+    assert(!c.sealedStorageLevel.exists(_.useMemory))
+  }
+
+  test("flush and compact move the collapse pin: exactly one remains") {
+    val (c, path) = multiSeg()
+    val model = (0L until 300L).toSet + 400L + 500L
+    c.count()
+    c.insert(rows(Seq(500L)))
+    c.count()
+    var r = c.residentCollapse.get
+    def moved(label: String): Unit = {
+      val Some(next) = c.residentCollapse
+      assert(!(next eq r), s"$label kept the old collapse")
+      assert(!r.storageLevel.useMemory, s"$label left the old collapse pinned")
+      assert(next.storageLevel.useMemory, label)
+      assert(c.count() == model.size.toLong, label)
+      assert(c.residentCollapse == Some(next), label)
+      r = next
+    }
+    c.flush(path)
+    moved("flush")
+    c.deletePks(Seq(10L))
+    c.insert(rows(Seq(10L)))
+    c.flush(path)
+    c.compact(path)
+    moved("compact")
+    c.close()
+    assert(c.residentCollapse.isEmpty && !r.storageLevel.useMemory,
+      "close left the collapse pinned")
+  }
+
+  test("one collapse is held: a read in another scope replaces it") {
+    val (c, _) = multiSeg()
+    val default = Seq(Collection.DefaultPartition)
+    c.count(partitionNames = default)
+    c.insert(rows(Seq(500L)))
+    assert(c.count(partitionNames = default) == 302L)
+    val Some(keyed) = c.residentCollapse
+    assert(keyed.storageLevel.useMemory)
+    // the full scope takes the slot; its first read pins nothing
+    assert(c.count() == 302L)
+    assert(c.residentCollapse.isEmpty, "the keyed collapse stayed pinned")
+    assert(!keyed.storageLevel.useMemory, "the replaced collapse kept its pin")
+    c.insert(rows(Seq(501L)))
+    assert(c.count() == 303L)
+    assert(c.residentCollapse.exists(_.storageLevel.useMemory))
+  }
+
+  test("a Session or BoundedStaleness read below the collapse watermark sees the superseded version") {
+    val (c, path) = multiSeg()
+    c.count()
+    val before = c.upsert(rows(Seq(50L), "u"))
+    c.count() // read again after a write: pinned
+    val tUp = c.upsert(rows(Seq(50L), "w"))
+    c.flush(path) // the pin moves; the collapse's watermark is now tUp
+    assert(c.residentCollapse.nonEmpty)
+    def s50(v: DataFrame) =
+      v.filter(col("pk") === 50L).select("s").as[String].collect().toList
+    assert(s50(c.readView()) == List("w50"))
+    assert(s50(c.readView(ConsistencyLevel.BoundedStaleness,
+      staleness = tUp - before)) == List("u50"))
+    assert(s50(c.readView(ConsistencyLevel.Session, staleness = Long.MaxValue / 2,
+      sessionTs = before)) == List("u50"))
+    assert(s50(c.readView(ConsistencyLevel.BoundedStaleness,
+      staleness = tUp - before + 1)) == List("v50"))
+  }
+
   test("LRU: a hot pinned view outlives a stream of one-shot scopes") {
     val (c, _) = multiSeg()
     val hot = pinFull(c)
