@@ -1272,13 +1272,7 @@ final class Collection private (
         // root-locked write span (see flush); reentrant under compact
         val folded = applyColumnPatches(preFold, lit(lastWriteTs), foldable)
         val foldPath = s"$path/fold-${nextTs()}"
-        // keep the hive partition layout (and directory DEPTH) of
-        // flushed segments — a later open() of the whole layout root
-        // lists every historical dir, and mixed depths are a Spark
-        // partition-discovery error
-        if (folded.columns.contains(Collection.PartitionCol))
-          folded.write.partitionBy(Collection.PartitionCol).parquet(foldPath)
-        else folded.write.parquet(foldPath)
+        writeSegment(folded, foldPath)
         register(foldPath, Some(folded.schema))
         reseal(Vector(foldPath))
       }
@@ -1429,7 +1423,7 @@ final class Collection private (
         if (keptCount == total) 0L
         else {
           val snapPath = s"$path/_lobs/snap-${nextTs()}"
-          kept.write.parquet(snapPath)
+          sized(kept).write.parquet(snapPath)
           // schema-supplied read-back (see SegRecord): no footer job
           lobSealed = Some(spark.read.schema(kept.schema).parquet(snapPath))
           lobGrowing = None // folded into the snapshot
@@ -2114,6 +2108,10 @@ final class Collection private (
     * a full-dataset rewrite — and the collection keeps serving the union
     * of segment reads. Every flush writes a fresh directory, never one a
     * live segment list names, so repeated flushes to one path are safe.
+    * The segment (and its blob-store delta) is written one file per read
+    * split and partition value, whatever partitioning the client's
+    * batches carried ([[sized]]); a tail with no size estimate (an
+    * RDD-backed batch) keeps its own partitioning.
     */
   def flush(path: String): Unit = stateLock.synchronized {
     requirePriv("Flush")
@@ -2124,6 +2122,33 @@ final class Collection private (
     Collection.gcRootLock(Collection.qualifiedRoot(spark, path)).synchronized {
       flushLocked(path)
     }
+  }
+
+  /** `df` sized to one file per read split
+    * (`spark.sql.files.maxPartitionBytes`) by the engine's one sizing
+    * rule, [[graft.operators.Compaction.sized]]: a flush writes its
+    * tail's bytes, not one file per client batch partition, so every
+    * later scan of the dir (the seal-time summary, compaction, the
+    * collapse rebuild) pays one task per split.
+    */
+  private def sized(df: DataFrame): DataFrame =
+    graft.operators.Compaction.sized(df, spark.sessionState.conf.filesMaxPartitionBytes)
+
+  /** Write a flushed or patch-folded segment dir, [[sized]]. Sealed
+    * segments are laid out BY NAMED PARTITION (hive-style directories):
+    * a partition_names-scoped read then prunes whole directories at the
+    * file source (PartitionFilters) before any row is touched — the
+    * reference's partition-level segment pruning, expressed as Spark
+    * partitioned parquet. Every such dir keeps the same directory
+    * DEPTH: a later open() of the whole layout root lists every
+    * historical dir, and mixed depths are a Spark partition-discovery
+    * error.
+    */
+  private def writeSegment(df: DataFrame, path: String): Unit = {
+    val w = sized(df).write
+    if (df.columns.contains(Collection.PartitionCol))
+      w.partitionBy(Collection.PartitionCol).parquet(path)
+    else w.parquet(path)
   }
 
   private def flushLocked(path: String): Unit = {
@@ -2137,7 +2162,7 @@ final class Collection private (
     // supersedes all earlier dirs — see [[Collection.lobLiveDirs]].
     lobGrowing.foreach { g =>
       val genPath = s"$path/_lobs/gen-${nextTs()}"
-      g.write.parquet(genPath)
+      sized(g).write.parquet(genPath)
       // schema-supplied read-back: we just wrote these files (see
       // SegRecord — skips the footer-inference job)
       val seg = spark.read.schema(g.schema).parquet(genPath)
@@ -2147,22 +2172,16 @@ final class Collection private (
     }
     growing.foreach { g =>
       val segPath = s"$path/seg-${nextTs()}"
-      // sealed segments are laid out BY NAMED PARTITION (hive-style
-      // directories): a partition_names-scoped read then prunes whole
-      // directories at the file source (PartitionFilters) before any
-      // row is touched — the reference's partition-level segment
-      // pruning, expressed as Spark partitioned parquet
-      if (g.columns.contains(Collection.PartitionCol))
-        g.write.partitionBy(Collection.PartitionCol).parquet(segPath)
-      else g.write.parquet(segPath)
+      writeSegment(g, segPath)
       // writer-side publish (MEP 20260602): the summary aggregates,
       // pk range included, are extracted at seal time, never re-derived
-      // by a later consumer scan. Aggregated over the READ-BACK files,
-      // not the growing plan: `g` may carry un-checkpointed caller
-      // lineage (attached ingest functions, autoId zipWithIndex) that a
-      // second evaluation would re-run — and could diverge from the
-      // bytes just written; the fresh columnar files are both cheaper
-      // and authoritative.
+      // by a later consumer scan. Aggregated over the READ-BACK files
+      // (one per split and partition value, see [[writeSegment]]), not
+      // the growing plan: `g` may carry un-checkpointed caller lineage
+      // (attached ingest functions, autoId zipWithIndex) that a second
+      // evaluation would re-run — and could diverge from the bytes just
+      // written; the fresh columnar files are both cheaper and
+      // authoritative.
       register(segPath, Some(g.schema)).stats
       // a loaded collection stays loaded across flushes (the reference
       // keeps serving from memory while handoff swaps segments)
@@ -2551,10 +2570,11 @@ final class Collection private (
     * path is unchanged by construction. Returns a compaction id for
     * [[getCompactionState]].
     *
-    * Spark shape: per merge group, one union + parquet rewrite sized by
-    * the on-disk bytes already in hand from the segment listing — at
-    * deployment scale each group is an independent job over only the
-    * small segments' bytes; big segments never rewrite.
+    * Spark shape: per merge group, one union + parquet rewrite of one
+    * file per read split ([[sized]]: the group's parquet scans report
+    * their on-disk bytes) — at deployment scale each group is an
+    * independent job over only the small segments' bytes; big segments
+    * never rewrite.
     */
   def forceMerge(path: String, targetSizeMb: Long,
       maxSizeMb: Long = 1024L): Long = mutate {
@@ -2569,12 +2589,12 @@ final class Collection private (
       import org.apache.hadoop.fs.Path
       val conf = spark.sessionState.newHadoopConf()
       val targetBytes = targetSizeMb * 1024L * 1024L
-      val sized = sealedSegments.map { p =>
+      val onDisk = sealedSegments.map { p =>
         val fs = new Path(p).getFileSystem(conf)
         p -> fs.getContentSummary(new Path(p)).getLength
       }
       // greedy fill in segment order; a group of one never rewrites
-      val groups = sized.foldLeft(Vector.empty[Vector[(String, Long)]]) {
+      val groups = onDisk.foldLeft(Vector.empty[Vector[(String, Long)]]) {
         case (acc, seg @ (_, bytes)) =>
           acc.lastOption match {
             case Some(g) if g.map(_._2).sum + bytes <= targetBytes =>
@@ -2589,7 +2609,7 @@ final class Collection private (
         else {
           val dst = s"$path/merge-${nextTs()}-$i"
           sealedOf(g.map(_._1)).foreach { merged =>
-            merged.write.parquet(dst)
+            sized(merged).write.parquet(dst)
             register(dst, Some(merged.schema))
           }
           dst

@@ -47,9 +47,10 @@ object Compaction {
       tsCol: String, compactTs: Column, path: String): Unit = {
     val (compacted, residual) = foldDeletes(data, tombstones, pkCol, tsCol, compactTs)
     compacted.write.mode("overwrite").parquet(s"$path/data")
-    residual.write.mode("overwrite").parquet(s"$path/tombstones")
     val spark = data.sparkSession
-    spark.range(1).select(compactTs.cast("long").as("compact_ts"))
+    val split = spark.sessionState.conf.filesMaxPartitionBytes
+    sized(residual, split).write.mode("overwrite").parquet(s"$path/tombstones")
+    sized(spark.range(1).select(compactTs.cast("long").as("compact_ts")), split)
       .write.mode("overwrite").parquet(s"$path/_watermark")
   }
 
@@ -76,19 +77,16 @@ object Compaction {
     * small sealed segments into ~maxSize ones, no delete folding):
     * coalesce a fragmented layout into files of ≈`targetFileBytes`,
     * optionally keeping/establishing a sort by `sortCol` so zone-map
-    * pruning survives the merge. Returns the output file count.
-    *
-    * File count derives from the INPUT's on-disk bytes (compressed), so
-    * the merge stays proportional at any scale; `coalesce` avoids a
+    * pruning survives the merge. Returns the output file count: the
+    * rule of [[fileCount]] over the input's on-disk (compressed) bytes,
+    * so the merge stays proportional at any scale; `coalesce` avoids a
     * shuffle entirely in the unsorted case.
     */
   def mergeSmallFiles(spark: SparkSession, inPath: String, outPath: String,
       targetFileBytes: Long = 128L * 1024 * 1024,
       sortCol: Option[String] = None): Int = {
     val data = spark.read.parquet(inPath)
-    val inputBytes = data.queryExecution.optimizedPlan.stats.sizeInBytes
-    val nFiles = math.max(1,
-      math.ceil(inputBytes.toDouble / targetFileBytes).toInt)
+    val nFiles = fileCount(data, targetFileBytes).getOrElse(data.rdd.getNumPartitions)
     val merged = sortCol match {
       case Some(c) => data.repartitionByRange(nFiles, col(c)).sortWithinPartitions(col(c))
       case None    => data.coalesce(nFiles)
@@ -96,4 +94,38 @@ object Compaction {
     merged.write.mode("overwrite").parquet(outPath)
     nFiles
   }
+
+  /** The sizing rule for every file the engine writes (the reference
+    * seals binlogs by its segment size policy, not by how the client
+    * batched its inserts): `ceil(estimated bytes / targetFileBytes)`
+    * files, at least one, from the optimized plan's size estimate.
+    * None when the plan has no estimate — an RDD-backed frame reports
+    * `spark.sql.defaultSizeInBytes` — so such a write keeps its own
+    * partitioning.
+    *
+    * The estimate is Spark's, not the bytes on disk: a parquet scan
+    * reports its files' compressed length, but a local relation counts
+    * an array as ONE element, so a 64-d vector row is estimated at ~80 B
+    * against ~280 B written, and a string at 20 B whatever its length.
+    * The rule under-counts such rows, so their files run larger than one
+    * split: a few splits for vectors, more for a LOB payload delta. A
+    * read still splits a large file by row group, so only the write's
+    * parallelism drops.
+    */
+  def fileCount(df: DataFrame, targetFileBytes: Long): Option[Int] = {
+    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (bytes >= df.sparkSession.sessionState.conf.defaultSizeInBytes) None
+    else Some(math.max(1, ((bytes + targetFileBytes - 1) / targetFileBytes)
+      .min(Int.MaxValue).toInt))
+  }
+
+  /** `df` coalesced (no shuffle) to [[fileCount]] partitions, so a write
+    * of it lands one file per `targetFileBytes` (per hive partition
+    * value, under `partitionBy`); untouched when the estimate is
+    * unknown. A count at or above the frame's own partitions is a no-op
+    * (a coalesce never adds partitions). The coalesce also runs the
+    * frame's lineage in that many tasks.
+    */
+  def sized(df: DataFrame, targetFileBytes: Long): DataFrame =
+    fileCount(df, targetFileBytes).fold(df)(df.coalesce)
 }

@@ -1588,6 +1588,19 @@ class CollectionSpec extends SparkSpec {
     val st = c.getCompactionState(id)
     assert(st.state == "Completed" && st.segmentsBefore == 3 && st.segmentsAfter == 1)
     assert(c.getQuerySegmentInfo.map(i => (i.state, i.rows)) == Seq(("Sealed", 80L)))
+    // the merge dir is sized like a flush: at most one data file per
+    // read split of the merged inputs' bytes, however many files they had
+    def parquetFiles(d: String): Seq[java.io.File] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+      walk(new java.io.File(d)).filter(_.getName.endsWith(".parquet"))
+    }
+    val inputBytes = Seq("seg1", "seg2", "seg3")
+      .flatMap(s => parquetFiles(s"$dir/$s")).map(_.length).sum
+    val split = spark.sessionState.conf.filesMaxPartitionBytes
+    val mergedFiles = parquetFiles(c.getQuerySegmentInfo.head.path).size
+    assert(mergedFiles >= 1 && mergedFiles <= (inputBytes + split - 1) / split,
+      s"$mergedFiles merged files for $inputBytes input bytes")
     // the rebuilt index covers the merged segment (nothing pending)
     assert(c.getQuerySegmentInfo.head.indexedFields == Seq("emb"))
     assert(c.describeIndex("emb").indexedRows == preBuildTs) // same 80 rows
