@@ -1242,13 +1242,6 @@ final class Collection private (
       }
       .start()
 
-  /** L0 / delete-merge compaction (reference: datacoord L0 policy via
-    * [[graft.operators.Compaction]]): fold every current tombstone into
-    * a rewritten sealed layout at `path`, drop the tombstones, and keep
-    * serving — reads stop paying the per-query anti-join for old
-    * deletes. Requires a flushed collection (the reference also
-    * compacts sealed segments only).
-    */
   /** Fold pending mutable-column patches into the sealed layout
     * (20260709-mutable-columns.md: compaction folds the patch overlay
     * into the column files). Shared by [[compact]] and
@@ -1279,6 +1272,18 @@ final class Collection private (
       colPatches = deferred
     }
 
+  /** L0 / delete-merge compaction (reference: datacoord L0 policy,
+    * compaction_l0_view.go / compaction_task_l0.go): fold pending
+    * patches, then — when tombstones exist — rewrite the sealed layout
+    * through the read path's own MVCC rule at compactTs = the last write
+    * ts, `latestByPk(visible(sealed, tombstones))`, collapsed per scope
+    * key, drop the tombstones, and keep serving: reads stop paying the
+    * per-query anti-join for old deletes. The rewrite is one segment dir,
+    * `run-<ts>`, written by [[writeSegment]] like every sealed dir, and
+    * it supersedes every earlier dir (see
+    * [[Collection.resolveLayoutDirs]]). Requires a flushed collection
+    * (the reference also compacts sealed segments only).
+    */
   def compact(path: String): Unit = mutate {
     requirePriv("Compaction")
     require(growing.isEmpty, "flush the growing tail before compacting")
@@ -1296,58 +1301,47 @@ final class Collection private (
     foldPatchesIntoLayout(path)
     val sealedData = sealedDf.getOrElse(
       throw new IllegalStateException("nothing to compact — empty collection"))
-    tombs match {
-      case None => () // nothing to fold
-      case Some(t) =>
-        // each compaction runs in a fresh run directory: overwriting a
-        // directory the live sealed source reads from is illegal in
-        // Spark (and the reference likewise seals into new segment files)
-        val runPath = s"$path/run-${nextTs()}"
-        // fold superseded LWW versions along with the tombstones: the
-        // rewrite keeps only the newest version per pk (the reference's
-        // compaction merges segments through the same delete+LWW
-        // collapse). Safe because compactTs = lastWriteTs and reads
-        // below the compaction watermark are already rejected — no
-        // surviving read can distinguish the physical drop. This is
-        // also what lets [[lobGc]] reclaim an upserted-over TEXT
-        // payload: its ref physically leaves the data here.
-        // the rewrite also materializes lazy field drops (the
-        // reference's compaction drops the dropped fields' binlogs):
-        // the dropped columns — and their hidden LOB refs, which until
-        // now pinned their blobs against lobGc — leave the layout here
-        val droppedCols = droppedFields.keysIterator
-          .flatMap(f => Seq(f, Collection.lobRefCol(f)))
-          .filter(sealedData.columns.contains).toSeq
-        // the fold key is (pk, partition, namespace) — the SCOPE key,
-        // not the bare pk: a partition- or tenant-scoped read collapses
-        // within its scope and can still serve a version that loses the
-        // global LWW; a bare-pk fold would silently drop it
-        val scopeCols = Seq(Collection.PartitionCol, Collection.NamespaceField)
-          .filter(sealedData.columns.contains)
-        val keyCols = (schema.pkField +: scopeCols).map(col)
-        val rowStruct = struct(sealedData.columns.map(col).toIndexedSeq: _*)
-        val collapsed = sealedData
-          .groupBy(keyCols: _*)
-          .agg(max_by(rowStruct,
-            struct(col(schema.tsField), col(schema.pkField))).as("_row"))
-          .select(sealedData.columns.map(c => col(s"_row.$c")).toIndexedSeq: _*)
-        // materialize the DDL-added TEXT ts-mask physically too: a
-        // re-added field's pre-drop rows lose their old values AND LOB
-        // refs in the rewrite, so lobGc can reclaim those payloads
-        // (they were unreadable already — the read view masks them)
-        val ddlFolded = dynamicTextFields.foldLeft(collapsed) {
-          case (df, (f, (_, addTs))) =>
-            Seq(f, Collection.lobRefCol(f)).filter(df.columns.contains)
-              .foldLeft(df)((d, c0) => d.withColumn(c0,
-                when(col(schema.tsField) >= lit(addTs), col(c0))))
-        }
-        val merged = ddlFolded.drop(droppedCols: _*)
-        graft.operators.Compaction.writeCompacted(
-          merged, t, schema.pkField, schema.tsField,
-          lit(lastWriteTs), runPath)
-        register(s"$runPath/data", Some(merged.schema))
-        reseal(Vector(s"$runPath/data")) // the single live segment
-        tombs = None // all folded (compactTs = lastWriteTs leaves no residual)
+    tombs.foreach { t =>
+      // each compaction runs in a fresh run directory: overwriting a
+      // directory the live sealed source reads from is illegal in
+      // Spark (and the reference likewise seals into new segment files)
+      val runPath = s"$path/run-${nextTs()}"
+      // the read path's delete+LWW rule, so the rewrite keeps only the
+      // newest live version per key. Safe because compactTs =
+      // lastWriteTs and reads below the compaction watermark are
+      // already rejected — no surviving read can distinguish the
+      // physical drop. This is also what lets [[lobGc]] reclaim an
+      // upserted-over TEXT payload: its ref physically leaves the data
+      // here. The key is (pk, partition, namespace) — the SCOPE key,
+      // not the bare pk: a partition- or tenant-scoped read collapses
+      // within its scope and can still serve a version that loses the
+      // global LWW; a bare-pk collapse would silently drop it.
+      val scopeCols = Seq(Collection.PartitionCol, Collection.NamespaceField)
+        .filter(sealedData.columns.contains)
+      val collapsed = Mvcc.latestByPk(
+        Mvcc.visible(sealedData, schema.pkField, schema.tsField,
+          lit(lastWriteTs), tombstones = Some(t)),
+        schema.pkField, schema.tsField, schema.pkField, scopeCols)
+      // materialize the DDL-added TEXT ts-mask physically too: a
+      // re-added field's pre-drop rows lose their old values AND LOB
+      // refs in the rewrite, so lobGc can reclaim those payloads
+      // (they were unreadable already — the read view masks them)
+      val ddlFolded = dynamicTextFields.foldLeft(collapsed) {
+        case (df, (f, (_, addTs))) =>
+          Seq(f, Collection.lobRefCol(f)).filter(df.columns.contains)
+            .foldLeft(df)((d, c0) => d.withColumn(c0,
+              when(col(schema.tsField) >= lit(addTs), col(c0))))
+      }
+      // the rewrite also materializes lazy field drops (the reference's
+      // compaction drops the dropped fields' binlogs): the dropped
+      // columns — and their hidden LOB refs, which until now pinned
+      // their blobs against lobGc — leave the layout here
+      val merged = ddlFolded.drop(droppedFields.keysIterator
+        .flatMap(f => Seq(f, Collection.lobRefCol(f))).toSeq: _*)
+      writeSegment(merged, runPath)
+      register(runPath, Some(merged.schema))
+      reseal(Vector(runPath)) // the single live segment
+      tombs = None // all folded (compactTs = lastWriteTs leaves no residual)
     }
   }
 
@@ -1855,37 +1849,6 @@ final class Collection private (
     } finally stateLock.synchronized(unpinSnapshot(id))
   }
 
-  /** Physical retention sweep (reference:
-    * datacoord/garbage_collector.go `recycleDroppedSegments` — the GC
-    * that actually DELETES dropped/compacted segment files from object
-    * storage; `garbage_collector_lob.go:214-258` — segments protected
-    * by a snapshot are carved out). Every compact/fold/forceMerge/lobGc
-    * in this engine writes a FRESH directory and leaves the superseded
-    * one on disk (in-flight readers may still hold plans over it);
-    * without a sweep, storage grows by roughly one corpus per
-    * clustering compaction. This deletes, under `path`, every engine
-    * directory that
-    *   (a) neither this instance's current layout nor a REOPEN of the
-    *       root would serve (`seg-`/`fold-`/`run-`/`merge-` dirs out of
-    *       [[Collection.resolveLayoutDirs]]'s union, `_lobs` gen/snap
-    *       dirs out of [[Collection.lobLiveDirs]]), and
-    *   (b) no snapshot on this root manifests (the snapshot carve-out —
-    *       manifested data/blob dirs stay until their snapshot drops;
-    *       the pin set reconciles with DISK, so another handle's
-    *       snapshots pin too),
-    * plus `_snapshots/<id>` artifact dirs bearing the durable
-    * `_dropped` marker (and half-written create junk older than
-    * `halfWrittenGraceMs`).
-    * Cost rides the DIRECTORY COUNT (two listings + set math on dir
-    * names — no data files are read), never corpus bytes, so the sweep
-    * stays O(dirs) at any scale. Run it like the reference runs its GC:
-    * out of band, after a retention window has passed since the
-    * superseding rewrite, when no external reader still holds plans
-    * over pre-rewrite directories (this instance's own plans only
-    * reference served dirs — every rewrite re-reads its fresh output).
-    *
-    * Returns the per-kind deleted/kept directory counts.
-    */
   // ---- GC pause/resume (reference garbage_collector.go:285-360 + the
   // GcControl RPC): a backup/migration tool pauses physical reclamation
   // for a window so nothing it is copying disappears underneath it.
@@ -1971,6 +1934,37 @@ final class Collection private (
     }
   }
 
+  /** Physical retention sweep (reference:
+    * datacoord/garbage_collector.go `recycleDroppedSegments` — the GC
+    * that actually DELETES dropped/compacted segment files from object
+    * storage; `garbage_collector_lob.go:214-258` — segments protected
+    * by a snapshot are carved out). Every compact/fold/forceMerge/lobGc
+    * in this engine writes a FRESH directory and leaves the superseded
+    * one on disk (in-flight readers may still hold plans over it);
+    * without a sweep, storage grows by roughly one corpus per
+    * clustering compaction. This deletes, under `path`, every engine
+    * directory that
+    *   (a) neither this instance's current layout nor a REOPEN of the
+    *       root would serve (`seg-`/`fold-`/`run-`/`merge-` dirs out of
+    *       [[Collection.resolveLayoutDirs]]'s union, `_lobs` gen/snap
+    *       dirs out of [[Collection.lobLiveDirs]]), and
+    *   (b) no snapshot on this root manifests (the snapshot carve-out —
+    *       manifested data/blob dirs stay until their snapshot drops;
+    *       the pin set reconciles with DISK, so another handle's
+    *       snapshots pin too),
+    * plus `_snapshots/<id>` artifact dirs bearing the durable
+    * `_dropped` marker (and half-written create junk older than
+    * `halfWrittenGraceMs`).
+    * Cost rides the DIRECTORY COUNT (two listings + set math on dir
+    * names — no data files are read), never corpus bytes, so the sweep
+    * stays O(dirs) at any scale. Run it like the reference runs its GC:
+    * out of band, after a retention window has passed since the
+    * superseding rewrite, when no external reader still holds plans
+    * over pre-rewrite directories (this instance's own plans only
+    * reference served dirs — every rewrite re-reads its fresh output).
+    *
+    * Returns the per-kind deleted/kept directory counts.
+    */
   def retentionSweep(path: String,
       halfWrittenGraceMs: Long = 3600000L): Map[String, Long] =
       stateLock.synchronized {
@@ -1990,14 +1984,6 @@ final class Collection private (
     def qualified(p: String): String = {
       val pp = new Path(p)
       pp.getFileSystem(conf).makeQualified(pp).toString
-    }
-    // a served/manifested `<run>/data` entry protects its whole run dir
-    // (the rewrite's tombstones/_watermark files live beside `data`)
-    def carrier(p: String): String = {
-      val pp = new Path(p)
-      if (pp.getName == "data" && pp.getParent != null &&
-          pp.getParent.getName.startsWith("run-")) pp.getParent.toString
-      else pp.toString
     }
     def list(dir: Path, accept: String => Boolean): Seq[Path] = {
       val fs = dir.getFileSystem(conf)
@@ -2031,7 +2017,7 @@ final class Collection private (
     // strands a later open()), plus every pinned snapshot manifest
     val keepData = (sealedSegments.flatMap(Collection.resolveLayoutDirs(spark, _)) ++
       Collection.resolveLayoutDirs(spark, path) ++ pinnedData)
-      .map(d => qualified(carrier(d))).toSet
+      .map(qualified).toSet
     val dataAll = list(new Path(path), n =>
       Seq("seg-", "fold-", "run-", "merge-").exists(n.startsWith))
     val dataDead = dataAll.filterNot(p => keepData.contains(qualified(p.toString)))
@@ -2134,7 +2120,9 @@ final class Collection private (
   private def sized(df: DataFrame): DataFrame =
     graft.operators.Compaction.sized(df, spark.sessionState.conf.filesMaxPartitionBytes)
 
-  /** Write a flushed or patch-folded segment dir, [[sized]]. Sealed
+  /** Write a sealed segment dir, [[sized]] — the one writer of every
+    * `seg-` (flush), `fold-` (patch fold), `run-` (compaction) and
+    * `merge-` (force-merge) dir, so all of them share one shape. Sealed
     * segments are laid out BY NAMED PARTITION (hive-style directories):
     * a partition_names-scoped read then prunes whole directories at the
     * file source (PartitionFilters) before any row is touched — the
@@ -2570,11 +2558,12 @@ final class Collection private (
     * path is unchanged by construction. Returns a compaction id for
     * [[getCompactionState]].
     *
-    * Spark shape: per merge group, one union + parquet rewrite of one
-    * file per read split ([[sized]]: the group's parquet scans report
-    * their on-disk bytes) — at deployment scale each group is an
-    * independent job over only the small segments' bytes; big segments
-    * never rewrite.
+    * Spark shape: per merge group, one union + one `merge-<ts>-<i>`
+    * segment dir written by [[writeSegment]] like every sealed dir (one
+    * file per read split and `_partition` value: the group's parquet
+    * scans report their on-disk bytes) — at deployment scale each group
+    * is an independent job over only the small segments' bytes; big
+    * segments never rewrite.
     */
   def forceMerge(path: String, targetSizeMb: Long,
       maxSizeMb: Long = 1024L): Long = mutate {
@@ -2609,7 +2598,7 @@ final class Collection private (
         else {
           val dst = s"$path/merge-${nextTs()}-$i"
           sealedOf(g.map(_._1)).foreach { merged =>
-            sized(merged).write.parquet(dst)
+            writeSegment(merged, dst)
             register(dst, Some(merged.schema))
           }
           dst
@@ -4900,7 +4889,8 @@ object Collection {
 
   /** The CONCRETE live directories a layout root resolves to AT THIS
     * MOMENT — a plain dir resolves to itself; an engine-written root
-    * resolves to the newest fold/run rewrite plus segments flushed
+    * resolves to the newest `fold-`/`run-` rewrite (each one segment dir
+    * of the same shape as a flushed `seg-`) plus the segments flushed
     * after it. Snapshot manifests record THIS list (a root reference
     * would re-resolve per read and see later rewrites).
     */
@@ -4927,8 +4917,7 @@ object Collection {
       }.maxOption.getOrElse(Long.MinValue)
       engineDirs.collect {
         case ("seg", ts, p) if ts > rewriteTs => p
-        case ("fold", ts, p) if ts == rewriteTs => p
-        case ("run", ts, p) if ts == rewriteTs => s"$p/data"
+        case ("fold" | "run", ts, p) if ts == rewriteTs => p
       }.sorted
     }
   }
@@ -4945,13 +4934,14 @@ object Collection {
     * post-hoc cast of the inferred int would not.
     *
     * An ENGINE-WRITTEN layout root (flush `seg-<ts>` dirs, patch-fold
-    * `fold-<ts>` dirs, compaction `run-<ts>` dirs) is read with
-    * supersession honored: a fold/run rewrite REPLACED every earlier
-    * dir when it was written (`reseal(Vector(rewrite))`), so
-    * reopening reads the newest rewrite plus only the segments flushed
-    * after it — reading superseded dirs too would both trip Spark's
-    * mixed-structure partition discovery and resurrect pre-rewrite row
-    * versions that share their timestamps with the rewritten ones.
+    * `fold-<ts>` dirs, compaction `run-<ts>` dirs, all written by one
+    * writer in one shape) is read with supersession honored
+    * ([[resolveLayoutDirs]]): a fold/run rewrite REPLACED every earlier
+    * dir when it was written (`reseal(Vector(rewrite))`), so reopening
+    * reads the newest rewrite plus only the segments flushed after it,
+    * each dir on its own — reading superseded dirs too would resurrect
+    * pre-rewrite row versions that share their timestamps with the
+    * rewritten ones.
     */
   private[graft] def readLayoutAt(spark: SparkSession, path: String): DataFrame = {
     import org.apache.spark.sql.types.{StringType, StructType}
@@ -5419,7 +5409,6 @@ object Collection {
       subdirs(s"$destDir/_tombs").headOption, None))
   }
 
-  /** Create an empty collection (reference `CreateCollection`). */
   /** Case-sensitive warmup policy validation (the reference rejects
     * "Sync", "", and unknown values with "invalid warmup policy").
     */
@@ -5427,6 +5416,7 @@ object Collection {
     require(v == "sync" || v == "async" || v == "disable",
       s"invalid warmup policy '$v' for '$where' (sync | async | disable)")
 
+  /** Create an empty collection (reference `CreateCollection`). */
   def create(spark: SparkSession, schema: CollectionSchema): Collection =
     new Collection(spark, schema, None)
 
@@ -5440,9 +5430,6 @@ object Collection {
   // time, so in-flight readers of the old target are unaffected.
   private val aliases = new java.util.concurrent.ConcurrentHashMap[String, Collection]()
 
-  /** Register a new alias; rejects an existing name (the reference
-    * errors on duplicate CreateAlias — re-pointing is [[alterAlias]]).
-    */
   // ---- database namespaces (reference impl.go CreateDatabase /
   // DropDatabase / ListDatabases; collections are registered by name
   // inside a database — the rootcoord metastore's two-level namespace).
@@ -5689,6 +5676,9 @@ object Collection {
     c.close()
   }
 
+  /** Register a new alias; rejects an existing name (the reference
+    * errors on duplicate CreateAlias — re-pointing is [[alterAlias]]).
+    */
   def createAlias(name: String, target: Collection): Unit = {
     val prev = aliases.putIfAbsent(name, target)
     require(prev == null, s"alias '$name' already exists — use alterAlias to re-point it")

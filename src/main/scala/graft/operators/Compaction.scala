@@ -19,37 +19,22 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   */
 object Compaction {
 
-  /** Fold tombstones with ts <= `compactTs` into `data`: returns
-    * (compacted data, residual tombstones). A row is dropped when a
-    * folded tombstone for its pk has tomb.ts >= row.ts (the MVCC delete
-    * rule, evaluated once at compaction time instead of per read).
-    */
-  def foldDeletes(data: DataFrame, tombstones: DataFrame, pkCol: String,
-      tsCol: String, compactTs: Column): (DataFrame, DataFrame) = {
-    val foldable = tombstones
-      .filter(col(tsCol) <= compactTs)
-      .groupBy(col(pkCol)).agg(max(col(tsCol)).as("_tomb_ts"))
-    val compacted = data
-      .join(foldable, Seq(pkCol), "left")
-      .filter(col("_tomb_ts").isNull || col(tsCol) > col("_tomb_ts"))
-      .drop("_tomb_ts")
-    val residual = tombstones.filter(col(tsCol) > compactTs)
-    (compacted, residual)
-  }
-
-  /** Execute the L0 compaction: rewrite `data` with deletes folded,
-    * persist the residual tombstones next to it, and record the
-    * compaction watermark — reads below it would be WRONG (folded
-    * deletes are physically gone, so a row deleted at ts ∈ (readTs,
-    * compactTs] could not be resurrected) and must be rejected.
+  /** Execute the L0 compaction: rewrite `data` with the tombstones at
+    * or below `compactTs` folded by the read path's delete rule
+    * ([[Mvcc.dropDeleted]], evaluated once here instead of per read),
+    * persist the residual tombstones (ts > compactTs) next to it, and
+    * record the compaction watermark — reads below it would be WRONG
+    * (folded deletes are physically gone, so a row deleted at ts ∈
+    * (readTs, compactTs] could not be resurrected) and must be rejected.
     */
   def writeCompacted(data: DataFrame, tombstones: DataFrame, pkCol: String,
       tsCol: String, compactTs: Column, path: String): Unit = {
-    val (compacted, residual) = foldDeletes(data, tombstones, pkCol, tsCol, compactTs)
-    compacted.write.mode("overwrite").parquet(s"$path/data")
+    Mvcc.dropDeleted(data, tombstones, pkCol, tsCol, compactTs)
+      .write.mode("overwrite").parquet(s"$path/data")
     val spark = data.sparkSession
     val split = spark.sessionState.conf.filesMaxPartitionBytes
-    sized(residual, split).write.mode("overwrite").parquet(s"$path/tombstones")
+    sized(tombstones.filter(col(tsCol) > compactTs), split)
+      .write.mode("overwrite").parquet(s"$path/tombstones")
     sized(spark.range(1).select(compactTs.cast("long").as("compact_ts")), split)
       .write.mode("overwrite").parquet(s"$path/_watermark")
   }

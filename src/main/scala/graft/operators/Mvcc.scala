@@ -93,34 +93,43 @@ object Mvcc {
         else alive.filter(col(tsCol) + t > readTs)
       case None => alive
     }
-    tombstones match {
-      case Some(tombs) =>
-        val active = tombs.filter(col(tsCol) <= readTs)
-          .select(col(pkCol).as("_tomb_pk"), col(tsCol).as("_tomb_ts"))
-        // no broadcast hint: tombstones are usually tiny and AQE picks a
-        // broadcast join on its own, but a delete-heavy table (tombstones
-        // ≈ data) must be allowed to fall back to a shuffle join instead
-        // of OOMing the driver on a forced broadcast.
-        unexpired.join(active,
-          col(pkCol) === col("_tomb_pk") && col("_tomb_ts") >= col(tsCol),
-          "left_anti")
-      case None => unexpired
-    }
+    tombstones.fold(unexpired)(dropDeleted(unexpired, _, pkCol, tsCol, readTs))
   }
 
-  /** Last-writer-wins collapse: one row per pk — the one with the
-    * highest (ts, tiebreak) — via partial-aggregating max_by. The pk
-    * comes out of the grouping key, not the payload, so a pk predicate
-    * above the collapse is pushed below it.
+  /** The delete rule: rows of `data` that no tombstone at or below
+    * `readTs` covers — a row is dropped when a tombstone for its pk has
+    * data.ts <= tomb.ts <= readTs. ONE conditional left-anti join, no
+    * aggregate over the tombstones. Reads apply it per query
+    * ([[visible]]); a compaction applies it once, at its compaction ts.
+    */
+  def dropDeleted(data: DataFrame, tombstones: DataFrame, pkCol: String,
+      tsCol: String, readTs: Column): DataFrame = {
+    val active = tombstones.filter(col(tsCol) <= readTs)
+      .select(col(pkCol).as("_tomb_pk"), col(tsCol).as("_tomb_ts"))
+    // no broadcast hint: tombstones are usually tiny and AQE picks a
+    // broadcast join on its own, but a delete-heavy table (tombstones
+    // ≈ data) must be allowed to fall back to a shuffle join instead
+    // of OOMing the driver on a forced broadcast.
+    data.join(active,
+      col(pkCol) === col("_tomb_pk") && col("_tomb_ts") >= col(tsCol),
+      "left_anti")
+  }
+
+  /** Last-writer-wins collapse: one row per pk (per pk and `keyCols`
+    * value, for a collapse within a scope such as a partition) — the one
+    * with the highest (ts, tiebreak) — via partial-aggregating max_by.
+    * The key comes out of the grouping key, not the payload, so a pk
+    * predicate above the collapse is pushed below it.
     */
   def latestByPk(data: DataFrame, pkCol: String, tsCol: String,
-      tiebreakCol: String): DataFrame = {
-    val payload = struct(data.columns.filterNot(_ == pkCol).map(col): _*)
+      tiebreakCol: String, keyCols: Seq[String] = Nil): DataFrame = {
+    val key = pkCol +: keyCols
+    val payload = struct(data.columns.filterNot(key.contains).map(col): _*)
     data
-      .groupBy(col(pkCol))
+      .groupBy(key.map(col): _*)
       .agg(max_by(payload, struct(col(tsCol), col(tiebreakCol))).as("_row"))
       .select(data.columns.map(c =>
-        if (c == pkCol) col(pkCol) else col(s"_row.$c")): _*)
+        if (key.contains(c)) col(c) else col(s"_row.$c")): _*)
   }
 
   /** Apply a batch of upserts to a base snapshot: rows in `updates`

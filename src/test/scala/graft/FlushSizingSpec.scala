@@ -42,10 +42,11 @@ class FlushSizingSpec extends SparkSpec {
     vectorFields = Map("emb" -> 4), partitionKeyField = Some("grp"),
     numPartitions = 3)
 
-  test("a flush of four local batches writes one file per partition value; reads match the model") {
-    val path = s"${scratch("flush_sizing")}/data"
-    val c = Collection.create(spark, schema)
-    // pk -> (version, grp); versions bump on upsert
+  /** Four local insert/upsert batches and a pk delete on a partition-key
+    * collection; returns the pk -> (version, grp) model of what they leave.
+    */
+  private def populate(c: Collection): Map[Long, (Int, Long)] = {
+    // versions bump on upsert
     var model = Map.empty[Long, (Int, Long)]
     def write(pks: Seq[Long], v: Int, upsert: Boolean): Unit = {
       val df = pks.map(p => (p, vec(p, v), s"doc $p v$v", p % 7)).toDF("pk", "emb", "txt", "grp")
@@ -57,21 +58,31 @@ class FlushSizingSpec extends SparkSpec {
     write(10L until 30L, 1, upsert = true)
     write(Seq(5L, 15L, 50L, 90L), 2, upsert = true)
     c.deletePks(Seq(3L, 15L, 60L))
-    model --= Seq(3L, 15L, 60L)
-    c.flush(path)
+    model -- Seq(3L, 15L, 60L)
+  }
 
-    // the seg dir: one hive dir per written partition value, one file each
-    val seg = onlyDir(path, "seg")
+  /** The hive `_partition=` dirs of a segment dir: one data file each,
+    * and nothing else beside them.
+    */
+  private def assertOneFilePerPartitionValue(seg: String): Unit = {
     val files = dataFiles(seg)
     assert(files.size >= 2, s"expected several _partition dirs, got $files")
     assert(files.keys.forall(_.startsWith(s"${Collection.PartitionCol}=")), files)
     assert(files.values.forall(_ == 1), s"expected one file per partition value, got $files")
+    val subdirs = new java.io.File(seg).listFiles().filter(_.isDirectory).map(_.getName)
+    assert(subdirs.forall(_.startsWith(s"${Collection.PartitionCol}=")), subdirs.toSeq)
+  }
 
-    def rows(cc: Collection) =
-      cc.query("pk >= 0", Seq("pk", "txt", "grp")).as[(Long, String, Long)]
-        .collect().map(r => r._1 -> ((r._2, r._3))).toMap
-    def expect(m: Map[Long, (Int, Long)]) =
-      m.map { case (p, (v, g)) => p -> ((s"doc $p v$v", g)) }
+  private def rows(c: Collection) =
+    c.query("pk >= 0", Seq("pk", "txt", "grp")).as[(Long, String, Long)]
+      .collect().map(r => r._1 -> ((r._2, r._3))).toMap
+  private def expect(m: Map[Long, (Int, Long)]) =
+    m.map { case (p, (v, g)) => p -> ((s"doc $p v$v", g)) }
+
+  /** count/get/query/search on `c` answer `model` (pks 5/90 live at v2,
+    * 15/60 deleted).
+    */
+  private def assertReadsMatch(c: Collection, model: Map[Long, (Int, Long)]): Unit = {
     assert(c.count() == model.size)
     assert(rows(c) == expect(model))
     assert(c.get(Seq(5L, 15L, 60L, 90L), Seq("pk", "txt")).as[(Long, String)]
@@ -81,11 +92,34 @@ class FlushSizingSpec extends SparkSpec {
     val top = c.search("emb", qs, k = 1, metric = Metric.L2, outputFields = Seq("pk"))
       .select($"qid", $"pk").as[(Long, Long)].collect()
     assert(top.length == model.size && top.forall { case (q, p) => q == p })
+  }
+
+  test("a flush of four local batches writes one file per partition value; reads match the model") {
+    val path = s"${scratch("flush_sizing")}/data"
+    val c = Collection.create(spark, schema)
+    val model = populate(c)
+    c.flush(path)
+    // the seg dir: one hive dir per written partition value, one file each
+    assertOneFilePerPartitionValue(onlyDir(path, "seg"))
+    assertReadsMatch(c, model)
     // a fresh open of the layout root reads the same live rows back (the
     // delete buffer is not part of the layout, so it is not asked about
     // the deleted pks)
     val reopened = rows(Collection.open(spark, schema, path))
     assert(reopened.view.filterKeys(model.contains).toMap == expect(model))
+  }
+
+  test("a compaction after the flush writes one segment dir of the flush's shape; reads match the model") {
+    val path = s"${scratch("flush_sizing_compact")}/data"
+    val c = Collection.create(spark, schema)
+    val model = populate(c)
+    c.flush(path)
+    c.compact(path)
+    // the run dir holds the hive `_partition=` dirs alone: no nested
+    // data dir, no tombstones, no watermark
+    assertOneFilePerPartitionValue(onlyDir(path, "run"))
+    assertReadsMatch(c, model)
+    assert(rows(Collection.open(spark, schema, path)) == expect(model))
   }
 
   test("a TEXT-LOB flush writes its blob-store delta as one file") {

@@ -14,10 +14,13 @@ class CompactionSpec extends SparkSpec {
   // (residual), pk=4 row written AFTER its tombstone (survives)
   private val tombs = Seq((1L, 12L), (2L, 20L), (4L, 24L)).toDF("pk", "ts")
 
-  test("foldDeletes splits tombstones at compactTs and drops covered rows") {
-    val (compacted, residual) = Compaction.foldDeletes(data, tombs, "pk", "ts", lit(15L))
-    assert(compacted.select($"pk").as[Long].collect().sorted.toSeq == Seq(2L, 3L, 4L))
-    assert(residual.select($"pk").as[Long].collect().sorted.toSeq == Seq(2L, 4L))
+  test("writeCompacted splits tombstones at compactTs and drops covered rows") {
+    val path = "/tmp/graft_test_l0_split"
+    Compaction.writeCompacted(data, tombs, "pk", "ts", lit(15L), path)
+    def pks(dir: String) =
+      spark.read.parquet(s"$path/$dir").select($"pk").as[Long].collect().sorted.toSeq
+    assert(pks("data") == Seq(2L, 3L, 4L))
+    assert(pks("tombstones") == Seq(2L, 4L))
   }
 
   test("compacted read equals the uncompacted MVCC read at any later ts") {
