@@ -239,7 +239,12 @@ final class Collection private (
   }
 
   @volatile private var growing: Option[DataFrame] = None
-  @volatile private var tombs: Option[DataFrame] = None
+  // an opened layout starts from the delete set its last flush
+  // persisted ([[Collection.liveDeleteDir]]), held in memory: a later
+  // flush supersedes that dir, and a sweep may then delete it
+  @volatile private var tombs: Option[DataFrame] =
+    sealedPath.flatMap(Collection.liveDeleteDir(spark, _))
+      .map(spark.read.parquet(_).localCheckpoint(true))
 
   // ---- per-field warmup policy (reference: pkg/common WarmupKey
   // family + test_milvus_client_alter_warmup.py). Validated at create;
@@ -926,7 +931,7 @@ final class Collection private (
       case r                  => r.getLong(0)
     }).getOrElse(0L),
     // ...AND past every persisted layout tick: dir names (seg/fold/run/
-    // merge, blob gen/snap) and snapshot read horizons carry nextTs
+    // merge/del, blob gen/snap) and snapshot read horizons carry nextTs
     // ticks that can exceed the max ROW ts (flush names its dirs AFTER
     // stamping the rows). Reissuing a tick at or below a fold/run dir's
     // would make the supersession rule in readLayoutAt silently drop a
@@ -1946,8 +1951,9 @@ final class Collection private (
     * directory that
     *   (a) neither this instance's current layout nor a REOPEN of the
     *       root would serve (`seg-`/`fold-`/`run-`/`merge-` dirs out of
-    *       [[Collection.resolveLayoutDirs]]'s union, `_lobs` gen/snap
-    *       dirs out of [[Collection.lobLiveDirs]]), and
+    *       [[Collection.resolveLayoutDirs]]'s union, `del-` dirs other
+    *       than [[Collection.liveDeleteDir]], `_lobs` gen/snap dirs out
+    *       of [[Collection.lobLiveDirs]]), and
     *   (b) no snapshot on this root manifests (the snapshot carve-out —
     *       manifested data/blob dirs stay until their snapshot drops;
     *       the pin set reconciles with DISK, so another handle's
@@ -2021,6 +2027,10 @@ final class Collection private (
     val dataAll = list(new Path(path), n =>
       Seq("seg-", "fold-", "run-", "merge-").exists(n.startsWith))
     val dataDead = dataAll.filterNot(p => keepData.contains(qualified(p.toString)))
+    // delete sets: only the live one (what a reopen would seed from) stays
+    val keepDel = Collection.liveDeleteDir(spark, path).map(qualified).toSet
+    val delAll = list(new Path(path), _.startsWith("del-"))
+    val delDead = delAll.filterNot(p => keepDel.contains(qualified(p.toString)))
     val keepLob = (Collection.lobLiveDirs(spark, path) ++ pinnedLob)
       .map(qualified).toSet
     val lobAll = list(new Path(s"$path/_lobs"), n =>
@@ -2043,11 +2053,13 @@ final class Collection private (
           halfWrittenGraceMs
       (hasFile(p, "_dropped") && !local) || expiredJunk
     }
-    (dataDead ++ lobDead ++ snapDead).foreach(p =>
+    (dataDead ++ delDead ++ lobDead ++ snapDead).foreach(p =>
       p.getFileSystem(conf).delete(p, true))
     Map(
       "data_deleted" -> dataDead.size.toLong,
       "data_kept" -> (dataAll.size - dataDead.size).toLong,
+      "del_deleted" -> delDead.size.toLong,
+      "del_kept" -> (delAll.size - delDead.size).toLong,
       "lob_deleted" -> lobDead.size.toLong,
       "lob_kept" -> (lobAll.size - lobDead.size).toLong,
       "snapshots_deleted" -> snapDead.size.toLong,
@@ -2097,7 +2109,10 @@ final class Collection private (
     * The segment (and its blob-store delta) is written one file per read
     * split and partition value, whatever partitioning the client's
     * batches carried ([[sized]]); a tail with no size estimate (an
-    * RDD-backed batch) keeps its own partitioning.
+    * RDD-backed batch) keeps its own partitioning. When tombstones
+    * exist, the flush also writes the whole delete set to a `del-<ts>`
+    * dir, which a later [[Collection.open]] seeds its deletes from
+    * ([[Collection.liveDeleteDir]]).
     */
   def flush(path: String): Unit = stateLock.synchronized {
     requirePriv("Flush")
@@ -2148,6 +2163,10 @@ final class Collection private (
     // dir under `_lobs` (the underscore prefix keeps blob files out of
     // every data read of the layout); a lobGc snapshot (`snap-<ts>`)
     // supersedes all earlier dirs — see [[Collection.lobLiveDirs]].
+    // the delete set goes down whole, and before the segment: a crash
+    // between the two leaves durable tombstones over rows never sealed,
+    // never sealed rows whose deletes were lost
+    tombs.foreach(t => sized(t).write.parquet(s"$path/del-${nextTs()}"))
     lobGrowing.foreach { g =>
       val genPath = s"$path/_lobs/gen-${nextTs()}"
       sized(g).write.parquet(genPath)
@@ -4840,26 +4859,48 @@ object Collection {
     * side file to keep transactional with the data.
     */
   private[graft] def lobLiveDirs(spark: SparkSession, path: String): Seq[String] = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(s"$path/_lobs")
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return Nil
-    val entries = fs.listStatus(root).toSeq.filter(_.isDirectory)
-      .map(_.getPath).flatMap { p =>
-        p.getName.split("-", 2) match {
-          case Array(kind @ ("gen" | "snap"), ts) =>
-            // toLongOption guards the vacuous-forall cases too (an empty
-            // or overlong suffix must SKIP the dir, not crash open())
-            ts.toLongOption.map(n => (kind, n, p.toString))
-          case _ => None
-        }
-      }
+    val entries = tickedDirs(spark, s"$path/_lobs")
     val snapTs = entries.collect { case ("snap", ts, _) => ts }
       .maxOption.getOrElse(Long.MinValue)
     entries.collect {
       case ("snap", ts, p) if ts == snapTs => p
       case ("gen", ts, p) if ts > snapTs   => p
     }.sorted
+  }
+
+  /** The `<kind>-<tick>` subdirs of `dir` as (kind, tick, qualified
+    * path); a missing dir has none, and a name whose suffix is not a
+    * tick (empty, overlong, `merge-<tick>-<i>`) is skipped, never a
+    * crash in open().
+    */
+  private def tickedDirs(spark: SparkSession, dir: String): Seq[(String, Long, String)] = {
+    import org.apache.hadoop.fs.Path
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(root)) Nil
+    else fs.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath)
+      .flatMap { p =>
+        p.getName.split("-", 2) match {
+          case Array(kind, ts) => ts.toLongOption.map(n => (kind, n, p.toString))
+          case _ => None
+        }
+      }
+  }
+
+  /** The delete set an opened layout seeds its tombstones from: each
+    * flush with tombstones writes the collection's whole delete set to a
+    * `del-<ts>` dir, and a compaction folds every tombstone into its
+    * `run-<ts>` rewrite. Live = the newest `del-` dir above the newest
+    * `run-` (a patch-fold `fold-` dir folds no deletes, so it supersedes
+    * none); None when a compaction came last. Naming is the manifest,
+    * like [[lobLiveDirs]].
+    */
+  private[graft] def liveDeleteDir(spark: SparkSession, path: String): Option[String] = {
+    val entries = tickedDirs(spark, path)
+    val runTs = entries.collect { case ("run", ts, _) => ts }
+      .maxOption.getOrElse(Long.MinValue)
+    entries.collect { case ("del", ts, p) if ts > runTs => (ts, p) }
+      .maxOption.map(_._2)
   }
   val NamespaceModeKey = "namespace.mode"
   val NamespaceModePartitionKey = "partition_key"
@@ -4895,23 +4936,15 @@ object Collection {
     * would re-resolve per read and see later rewrites).
     */
   private[graft] def resolveLayoutDirs(spark: SparkSession, path: String): Seq[String] = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val engineDirs: Seq[(String, Long, String)] =
-      if (!fs.exists(root)) Nil
-      else fs.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath)
-        .flatMap { d =>
-          d.getName.split("-", 2) match {
-            case Array(kind @ ("seg" | "fold" | "run"), ts) =>
-              ts.toLongOption.map(n => (kind, n, d.toString))
-            case _ => None
-          }
-        }
+    val engineDirs = tickedDirs(spark, path)
+      .filter { case (kind, _, _) => Seq("seg", "fold", "run").contains(kind) }
     // qualified URIs throughout (listStatus returns them): a caller
     // mixing raw and resolved entries must be able to dedupe by string
-    if (engineDirs.isEmpty) Seq(fs.makeQualified(root).toString)
-    else {
+    if (engineDirs.isEmpty) {
+      import org.apache.hadoop.fs.Path
+      val root = new Path(path)
+      Seq(root.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(root).toString)
+    } else {
       val rewriteTs = engineDirs.collect {
         case ("fold" | "run", ts, _) => ts
       }.maxOption.getOrElse(Long.MinValue)
@@ -5245,8 +5278,8 @@ object Collection {
       else Map.empty)
   }
 
-  /** The maximum DIR-NAME tick of this layout (seg/fold/run/merge, blob
-    * gen/snap). Snapshot read horizons are covered by the registry at
+  /** The maximum DIR-NAME tick of this layout (seg/fold/run/merge/del,
+    * blob gen/snap). Snapshot read horizons are covered by the registry at
     * the call site. The TSO must reseed ABOVE all of them on open — see
     * the seeding comment at the tso declaration.
     */
@@ -5268,7 +5301,7 @@ object Collection {
     }
     // snapshot read horizons come from the already-loaded registry at
     // the (single) call site — no second pass over the meta parquets
-    (dirTicks(path, Set("seg", "fold", "run", "merge")) ++
+    (dirTicks(path, Set("seg", "fold", "run", "merge", "del")) ++
       dirTicks(s"$path/_lobs", Set("gen", "snap")) :+ 0L).max
   }
 

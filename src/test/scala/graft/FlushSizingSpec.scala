@@ -102,11 +102,9 @@ class FlushSizingSpec extends SparkSpec {
     // the seg dir: one hive dir per written partition value, one file each
     assertOneFilePerPartitionValue(onlyDir(path, "seg"))
     assertReadsMatch(c, model)
-    // a fresh open of the layout root reads the same live rows back (the
-    // delete buffer is not part of the layout, so it is not asked about
-    // the deleted pks)
-    val reopened = rows(Collection.open(spark, schema, path))
-    assert(reopened.view.filterKeys(model.contains).toMap == expect(model))
+    // a fresh open of the layout root reads the same live rows back, and
+    // none of the pks deleted before the flush (its `del-` dir)
+    assert(rows(Collection.open(spark, schema, path)) == expect(model))
   }
 
   test("a compaction after the flush writes one segment dir of the flush's shape; reads match the model") {
@@ -119,6 +117,9 @@ class FlushSizingSpec extends SparkSpec {
     // data dir, no tombstones, no watermark
     assertOneFilePerPartitionValue(onlyDir(path, "run"))
     assertReadsMatch(c, model)
+    // the compaction folded the flush's delete set: the sweep reclaims it
+    val swept = c.retentionSweep(path)
+    assert(swept("del_deleted") == 1L && swept("del_kept") == 0L, swept.toString)
     assert(rows(Collection.open(spark, schema, path)) == expect(model))
   }
 
