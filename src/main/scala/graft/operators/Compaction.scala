@@ -23,7 +23,9 @@ object Compaction {
     * or below `compactTs` folded by the read path's delete rule
     * ([[Mvcc.dropDeleted]], evaluated once here instead of per read),
     * persist the residual tombstones (ts > compactTs) next to it, and
-    * record the compaction watermark — reads below it would be WRONG
+    * record the compaction watermark in a `watermark` dir (no leading
+    * underscore: Spark's file source skips hidden paths and warns that
+    * the read ignored them) — reads below it would be WRONG
     * (folded deletes are physically gone, so a row deleted at ts ∈
     * (readTs, compactTs] could not be resurrected) and must be rejected.
     */
@@ -36,7 +38,7 @@ object Compaction {
     sized(tombstones.filter(col(tsCol) > compactTs), split)
       .write.mode("overwrite").parquet(s"$path/tombstones")
     sized(spark.range(1).select(compactTs.cast("long").as("compact_ts")), split)
-      .write.mode("overwrite").parquet(s"$path/_watermark")
+      .write.mode("overwrite").parquet(s"$path/watermark")
   }
 
   /** Read a compacted layout at `readTs`: only the residual tombstones
@@ -46,7 +48,7 @@ object Compaction {
     */
   def readCompacted(spark: SparkSession, path: String, pkCol: String,
       tsCol: String, readTs: Column): DataFrame = {
-    val watermark = spark.read.parquet(s"$path/_watermark")
+    val watermark = spark.read.parquet(s"$path/watermark")
       .head().getLong(0)
     val readTsVal = spark.range(1).select(readTs.cast("long")).head().getLong(0)
     require(readTsVal >= watermark,
